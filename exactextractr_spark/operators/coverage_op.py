@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tiles import Raster
+from ..sources.tiles import Raster, tile_pixels
 from .zonal import build_candidates, coverage_facts
 
 
@@ -31,7 +31,7 @@ def coverage_fraction_df(
         values_meta=values.meta,
         include_cell=True,
         include_xy=include_xy,
-        keep_nodata=True,  # coverage does not look at values at all
+        coverage_only=True,  # coverage does not look at values at all
     )
     cols = ["feature_id", "cell", "cov"] + (["cx", "cy"] if include_xy else [])
     return facts.select(*cols)
@@ -55,11 +55,10 @@ def line_cell_lengths_df(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..core import geom as G
     from ..core.coverage import cell_lengths
     from ..core.grid import Grid
 
-    from .zonal import build_candidates
+    from .zonal import TileFeatures
 
     cand, feats_bc = build_candidates(values, features, broadcast_features)
 
@@ -78,59 +77,19 @@ def line_cell_lengths_df(
     raster_xmax = values.meta.xmin + values.meta.width * values.meta.dx
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math as _math
-
-        from ..core.png import decode_tile as _decode
-
-        fb = feats_bc.value if feats_bc is not None else None
-        geom_cache: dict[bytes, object] = {}
+        # candidate tests must be INCLUSIVE for lines: a horizontal/vertical
+        # line has a degenerate bbox that can lie exactly on a tile edge; the
+        # kernel's closed/open edge ownership then ensures each boundary
+        # segment is counted exactly once
+        features = TileFeatures(feats_bc, inclusive=True)
         for pdf in batches:
             outs = []
-            raw_mode = "px" not in pdf.columns
             for row in pdf.itertuples(index=False):
-                if raw_mode:
-                    px = _decode(bytes(row.bytes), int(row.ncols), int(row.nrows))
-                else:
-                    px = np.asarray(row.px, dtype=np.float64).reshape(
-                        int(row.nrows), int(row.ncols)
-                    )
-                # nodata sentinel -> NaN, same contract as the zonal kernel:
-                # a line traversing a nodata cell reports v=NaN, not the raw
-                # sentinel value
-                nodata = getattr(row, "nodata", None)
-                if nodata is not None and not (
-                    isinstance(nodata, float) and _math.isnan(nodata)
-                ):
-                    px = np.where(px == nodata, np.nan, px)
+                # nodata -> NaN, same contract as the zonal kernel: a line
+                # traversing a nodata cell reports v=NaN, not the sentinel
+                px = tile_pixels(row)
                 tg = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
-                # candidate tests must be INCLUSIVE for lines: a horizontal/
-                # vertical line has a degenerate bbox that can lie exactly on
-                # a tile edge; the kernel's closed/open edge ownership then
-                # ensures each boundary segment is counted exactly once
-                if fb is not None:
-                    items = [
-                        (int(fb.ids[j]), fb.geom(j))
-                        for j in fb.overlapping_inclusive(
-                            row.xmin, row.ymin, row.xmax, row.ymax
-                        )
-                    ]
-                else:
-                    items = []
-                    for ft in row.feats:
-                        # exact bbox refine (cover join is tile-granular)
-                        if (
-                            ft["fxmin"] > row.xmax
-                            or ft["fxmax"] < row.xmin
-                            or ft["fymin"] > row.ymax
-                            or ft["fymax"] < row.ymin
-                        ):
-                            continue
-                        gwkb = bytes(ft["geom"])
-                        g = geom_cache.get(gwkb)
-                        if g is None:
-                            g = geom_cache[gwkb] = G.from_wkb(gwkb)
-                        items.append((ft["feature_id"], g))
-                for fid, geom in items:
+                for fid, geom, *_ in features(row):
                     # half-cell tolerance: the tile edge is computed JVM-side
                     # from caption JSON ((ymax - r0*dy) - h*dy) and the raster
                     # edge driver-side (ymax - height*dy); a 1-ULP divergence

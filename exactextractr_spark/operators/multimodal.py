@@ -332,16 +332,3 @@ def image_augment(images: DataFrame, ops: "list[str]") -> DataFrame:
     return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
         _aug, schema
     )
-
-
-def frame_sample(videos: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emits (video_id, frame_idx) rows for
-    frames to decode. Decode itself is stubbed (no video codec here), but
-    the fan-out/partitioning shape is the real one: explode frame indexes
-    JVM-side, decode-in-mapInPandas downstream."""
-    return videos.select(
-        F.col("image_id").alias("video_id"),
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )

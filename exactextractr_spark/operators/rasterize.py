@@ -83,7 +83,7 @@ def rasterize_polygons(
     cand, feats_bc = build_candidates(target, features)
     facts = coverage_facts(
         cand, feats_bc=feats_bc, values_meta=meta, include_cell=True,
-        keep_nodata=True, coverage_only=True,
+        coverage_only=True,
     ).select("feature_id", "cell", "cov")
     # Argmax + total-coverage gate in ONE hash aggregate (no sort windows).
     # Struct comparison is lexicographic: highest cov wins; on a cov tie the

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.tiles import Raster, RasterMeta
+from ..sources.tiles import Raster, RasterMeta, tile_pixels
 
 _FACTS = T.StructType(
     [
@@ -74,35 +74,21 @@ def resample_facts(
     with the covered AREA (per-latitude-band spherical area when
     ``spherical``, ref R/exact_resample.R:75 .areaMethod / raster_area.h:
     21-69) — the reference's coverage_area flag for geographic grids."""
-    from .zonal import EARTH_RADIUS, _PI180
+    from ..core.grid import Grid
+    from .zonal import cell_areas
 
     dxmin, dymax = dst_meta.xmin, dst_meta.ymax
     ddx, ddy = dst_meta.dx, dst_meta.dy
     dw, dh = dst_meta.width, dst_meta.height
 
     def _facts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math as _math
-
-        from ..core.png import decode_tile as _decode
-
         for pdf in batches:
             outs = []
-            raw_mode = "px" not in pdf.columns
             for row in pdf.itertuples(index=False):
                 nr, nc = int(row.nrows), int(row.ncols)
-                if raw_mode:
-                    # decode in-kernel: raw PNG bytes ship compressed and
-                    # cross the Arrow boundary once (same contract as the
-                    # zonal kernel) instead of full pixel arrays through a
-                    # separate decode stage
-                    px = _decode(bytes(row.bytes), nc, nr)
-                    nodata = getattr(row, "nodata", None)
-                    if nodata is not None and not (
-                        isinstance(nodata, float) and _math.isnan(nodata)
-                    ):
-                        px = np.where(px == nodata, np.nan, px)
-                else:
-                    px = np.asarray(row.px, dtype=np.float64).reshape(nr, nc)
+                # raw rows decode in-kernel: PNG bytes cross the Arrow
+                # boundary compressed, same contract as the zonal kernel
+                px = tile_pixels(row)
                 sdx, sdy = row.dx, row.dy
                 # source cell edges
                 xs0 = row.xmin + np.arange(nc) * sdx
@@ -160,17 +146,8 @@ def resample_facts(
                     continue
                 cov = (wx * wy) / (row.dx * row.dy)
                 if coverage_area:
-                    if spherical:
-                        ytop = row.ymax - sr * row.dy
-                        ybot = ytop - row.dy
-                        area = (
-                            EARTH_RADIUS * EARTH_RADIUS * _PI180
-                            * np.abs(np.sin(ybot * _PI180) - np.sin(ytop * _PI180))
-                            * row.dx
-                        )
-                    else:
-                        area = row.dx * row.dy
-                    cov = cov * area
+                    tile = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
+                    cov = cov * cell_areas(tile, sr, spherical)
                 outs.append((dr.astype(np.int32), dc.astype(np.int32), v, cov))
             if outs:
                 # ONE frame per Arrow batch (np.concatenate of column

@@ -1,11 +1,13 @@
 """Embedding similarity search: brute-force cosine top-k + LSH and IVF ANN.
 
 Training-data-pipeline operators over an ``array<float>`` embedding column.
-Brute force is the exactness baseline (JVM-side ``aggregate``/``zip_with``
-arithmetic — no Python in the hot path); the scale paths bound the join
-fan-out either by deterministic random-hyperplane sign buckets (LSH) or by
-a trained coarse quantizer (IVF: k-means centroids, items partitioned by
-nearest centroid, queries probe their ``nprobe`` nearest lists).
+Brute force is the exactness baseline. Every path scores its pairs with one
+``mapInArrow`` kernel (``_with_cos``) that reads the flat Arrow list
+buffers and folds the dot product and norms in index order. The scale
+paths bound the join fan-out either by deterministic random-hyperplane
+sign buckets (LSH) or by a trained coarse quantizer (IVF: k-means
+centroids, items partitioned by nearest centroid, queries probe their
+``nprobe`` nearest lists).
 """
 
 from __future__ import annotations

@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass, replace
+from types import SimpleNamespace
 from typing import Iterator
 
 import numpy as np
@@ -208,6 +209,25 @@ def tile_table_from_array(
     return spark.createDataFrame(pdf, TILE_SCHEMA)
 
 
+def tile_pixels(row) -> np.ndarray:
+    """The decode stage of every tile kernel: one tile row's pixels as a
+    float64 ``(nrows, ncols)`` block with nodata cells as NaN.
+
+    A decoded row (``px``, already NaN-mapped) is only reshaped. A raw row
+    (``bytes`` plus an optional ``nodata`` sentinel, as from
+    ``raw_tiles_with_meta``) decodes its PNG here, so the payload crosses
+    the Arrow boundary compressed."""
+    nr, nc = int(row.nrows), int(row.ncols)
+    px = getattr(row, "px", None)
+    if px is not None:
+        return np.asarray(px, dtype=np.float64).reshape(nr, nc)
+    px = decode_tile(bytes(row.bytes), nc, nr)
+    nodata = getattr(row, "nodata", None)
+    if nodata is not None and not (isinstance(nodata, float) and math.isnan(nodata)):
+        px = np.where(px == nodata, np.nan, px)
+    return px
+
+
 def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     """Image table -> decoded tile blocks (Arrow-batched ``mapInPandas``).
 
@@ -229,12 +249,9 @@ def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
                 meta = json.loads(cap)
                 if layer is not None and meta["layer"] != layer:
                     continue
-                px = decode_tile(bytes(data), int(w), int(h))
-                nodata = meta.get("nodata")
-                if nodata is not None and not (
-                    isinstance(nodata, float) and math.isnan(nodata)
-                ):
-                    px = np.where(px == nodata, np.nan, px)
+                px = tile_pixels(SimpleNamespace(
+                    bytes=data, nrows=h, ncols=w, nodata=meta.get("nodata")
+                ))
                 out["layer"].append(meta["layer"])
                 out["tile_row"].append(meta["tile_row"])
                 out["tile_col"].append(meta["tile_col"])

@@ -142,8 +142,7 @@ def stream_zonal_stats(
         from ..operators.zonal import _freq_stats
 
         partials = coverage_facts(
-            tiles, emit="freq", feats_bc=feats_bc, values_meta=meta,
-            weighted=weights is not None,
+            tiles, emit="freq", feats_bc=feats_bc, values_meta=meta
         )
         freq = partials.groupBy("feature_id", "v").agg(
             F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
@@ -216,8 +215,7 @@ def stream_zonal_stats(
         return writer.start()
 
     moments = coverage_facts(
-        tiles, emit="moments", feats_bc=feats_bc, values_meta=meta,
-        weighted=weights is not None,
+        tiles, emit="moments", feats_bc=feats_bc, values_meta=meta
     )
     agg = moments.groupBy("feature_id").agg(*plan.algebraic_aggs_from_moments())
     out = agg.select(

@@ -544,3 +544,137 @@ def test_quantile_continuous_distributed_parity(spark):
         names = ["median", "q10", "q25", "q50", "q75", "q90"]
         for nm, e in zip(names, expect):
             assert row[nm] == e, (fid, nm, row[nm], e)
+
+
+def test_kernel_emit_paths_and_strategies_agree(spark):
+    """One raster with NaN and sentinel-nodata cells, an aligned and a
+    finer weight raster: the moments, freq and pixel emits of the coverage
+    kernel agree with each other under both candidate strategies
+    (broadcast and cover join); the coverage-only facts (coverage_fraction
+    and the rasterize target) list the same cells, nodata cells included;
+    and the line kernel is strategy-independent."""
+    import pandas as pd
+
+    from exactextractr_spark.operators.coverage_op import (
+        coverage_fraction_df,
+        line_cell_lengths_df,
+    )
+    from exactextractr_spark.operators.rasterize import blank_raster
+    from exactextractr_spark.operators.zonal import (
+        build_candidates,
+        coverage_facts,
+        exact_extract_pixels,
+    )
+
+    rng = np.random.default_rng(7)
+    vals = rng.integers(1, 7, (12, 12)).astype(np.float64)
+    vals[9:12, 0:3] = np.nan  # NaN block: y 0..3, x 0..3
+    for r_, c_ in ((4, 6), (1, 10), (7, 3)):
+        vals[r_, c_] = -9999.0  # nodata sentinel, mapped to NaN on decode
+    vmeta = RasterMeta("v", xmin=0, ymax=12, dx=1, dy=1, width=12, height=12,
+                       tile_w=5, tile_h=5, nodata=-9999.0)
+    rv = Raster.from_array(spark, vals, vmeta)
+    w_al = np.round(rng.uniform(0.5, 3.0, (12, 12)) * 4) / 4
+    w_fine = np.round(rng.uniform(0.5, 3.0, (24, 24)) * 4) / 4
+    weights = {
+        "aligned": Raster.from_array(spark, w_al, RasterMeta(
+            "w", xmin=0, ymax=12, dx=1, dy=1, width=12, height=12,
+            tile_w=5, tile_h=5)),
+        "finer": Raster.from_array(spark, w_fine, RasterMeta(
+            "w", xmin=0, ymax=12, dx=0.5, dy=0.5, width=24, height=24,
+            tile_w=10, tile_h=10)),
+    }
+    feats = features_from_wkt(
+        spark,
+        [
+            "POLYGON ((0.5 0.5, 9.3 0.5, 9.3 8.7, 0.5 8.7, 0.5 0.5))",
+            "POLYGON ((2.2 11.5, 11.8 3.1, 11.8 11.9, 2.2 11.5))",
+            "POLYGON ((0.2 0.2, 2.8 0.2, 2.8 2.8, 0.2 2.8, 0.2 0.2))",
+            "POLYGON ((4 4, 8 4, 8 8, 4 8, 4 4), (5 5, 7 5, 7 7, 5 7, 5 5))",
+        ],
+    )
+    fids = [1, 2, 3, 4]
+
+    def table(df, cols):
+        pdf = df.toPandas().set_index("feature_id").reindex(fids)
+        return pdf[cols].astype(float).to_numpy()
+
+    def pixel_stats(df, cols):
+        p = df.toPandas()
+        p["vc"] = p["value"] * p["coverage_fraction"]
+        p["cw"] = p["coverage_fraction"] * p["weight"]
+        p["vcw"] = p["vc"] * p["weight"]
+        g = p.groupby("feature_id")
+        s = pd.DataFrame({
+            "count": g["coverage_fraction"].sum(),
+            "sum": g["vc"].sum(),
+            "min": g["value"].min(),
+            "max": g["value"].max(),
+            "weighted_count": g["cw"].sum(),
+            "weighted_sum": g["vcw"].sum(),
+        }).reindex(fids)
+        s[["count", "sum", "weighted_count", "weighted_sum"]] = s[
+            ["count", "sum", "weighted_count", "weighted_sum"]].fillna(0.0)
+        s["mean"] = s["sum"] / s["count"].where(s["count"] > 0)
+        s["weighted_mean"] = s["weighted_sum"] / s["weighted_count"].where(
+            s["weighted_count"] > 0)
+        return s[cols].to_numpy()
+
+    for kind, rw in weights.items():
+        stats = ["mean", "min", "max", "weighted_count", "weighted_sum",
+                 "weighted_mean"]
+        if kind == "aligned":
+            stats = ["count", "sum"] + stats
+        per_strategy = []
+        for bc in (True, False):
+            mom = table(exact_extract(rv, feats, stats, weights=rw,
+                                      broadcast_features=bc), stats)
+            frq = table(exact_extract(rv, feats, stats + ["variety"],
+                                      weights=rw, broadcast_features=bc),
+                        stats + ["variety"])
+            pix = pixel_stats(exact_extract_pixels(
+                rv, feats, weights=rw, broadcast_features=bc), stats)
+            np.testing.assert_allclose(frq[:, :-1], mom, rtol=1e-12,
+                                       equal_nan=True)
+            np.testing.assert_allclose(pix, mom, rtol=1e-12, equal_nan=True)
+            per_strategy.append(np.column_stack([mom, frq]))
+        np.testing.assert_allclose(per_strategy[0], per_strategy[1],
+                                   rtol=1e-12, equal_nan=True)
+        # the all-nodata polygon covers cells but counts none
+        assert np.isnan(mom[2, stats.index("mean")])
+
+    # coverage-only facts: every covered cell, value NaN or not
+    target = blank_raster(spark, vmeta)
+    cand, fbc = build_candidates(target, feats)
+    want = coverage_facts(
+        cand, feats_bc=fbc, values_meta=vmeta, include_cell=True,
+        coverage_only=True,
+    ).select("feature_id", "cell", "cov").toPandas()
+    want = want.sort_values(["feature_id", "cell"]).reset_index(drop=True)
+    flat = vals.ravel()
+    nodata_cells = {c for c in want["cell"]
+                    if np.isnan(flat[c - 1]) or flat[c - 1] == -9999.0}
+    assert len(nodata_cells) >= 10
+    for bc in (True, False):
+        got = coverage_fraction_df(rv, feats, broadcast_features=bc).select(
+            "feature_id", "cell", "cov").toPandas()
+        got = got.sort_values(["feature_id", "cell"]).reset_index(drop=True)
+        assert got[["feature_id", "cell"]].equals(want[["feature_id", "cell"]])
+        np.testing.assert_allclose(got["cov"], want["cov"], rtol=1e-12)
+
+    # line kernel: broadcast and cover join give the same (cell, v, length)
+    lines = features_from_wkt(
+        spark, ["LINESTRING (0.5 7, 11.5 7)", "LINESTRING (0.3 0.2, 11.7 11.1)",
+                "LINESTRING (5 0.5, 5 11.5)"]
+    )
+    got_l = [
+        line_cell_lengths_df(rv, lines, broadcast_features=bc)
+        .orderBy("feature_id", "cell").toPandas()
+        for bc in (True, False)
+    ]
+    assert got_l[0][["feature_id", "cell"]].equals(
+        got_l[1][["feature_id", "cell"]])
+    np.testing.assert_allclose(got_l[0][["v", "length"]].to_numpy(),
+                               got_l[1][["v", "length"]].to_numpy(),
+                               rtol=1e-12, equal_nan=True)
+    assert got_l[0]["v"].isna().any()

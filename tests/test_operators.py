@@ -177,6 +177,52 @@ def test_multi_tile_resample_unaligned(spark):
     assert total == pytest.approx(arr.sum(), rel=1e-9)
 
 
+def test_fused_collect_needs_estimate_margin(spark, monkeypatch):
+    """build_candidates fuses the broadcast collect with its size guard only
+    when the optimizer's estimate is within a quarter of the cap: an
+    estimate between cap/4 and the cap takes the count-first path, so no
+    geometry reaches the driver before the broadcast-or-cover-join decision
+    (forced here to the cover join)."""
+    from exactextractr_spark.operators import zonal
+    from exactextractr_spark.sources.features import features_from_wkt
+
+    meta = RasterMeta("v", xmin=0, ymax=6, dx=1, dy=1, width=6, height=6,
+                      tile_w=3, tile_h=3)
+    r = Raster.from_array(spark, np.arange(1.0, 37.0).reshape(6, 6), meta)
+    feats = features_from_wkt(
+        spark, ["POLYGON ((0.5 0.5, 2.5 0.5, 2.5 2.5, 0.5 2.5, 0.5 0.5))",
+                "POLYGON ((3 3, 5 3, 5 5, 3 5, 3 3))",
+                "POLYGON ((1 4, 2 4, 2 5, 1 5, 1 4))"]
+    )
+    est = int(str(feats._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes()))
+    assert est > 0
+    monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
+    # the concrete DataFrame class: PySpark 4 defines collect there, not
+    # on pyspark.sql.DataFrame
+    SparkDF = type(feats)
+    real_collect = SparkDF.collect
+    geom_collects = []
+
+    def recording_collect(self):
+        if "geom" in self.columns:
+            geom_collects.append(self.columns)
+        return real_collect(self)
+
+    monkeypatch.setattr(SparkDF, "collect", recording_collect)
+    # estimate within cap/4: one fused collect carries the geometries
+    monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", 4 * est)
+    _, fb = zonal.build_candidates(r, feats)
+    assert fb is None and len(geom_collects) == 1
+    # estimate between cap/4 and the cap: count first, collect nothing
+    geom_collects.clear()
+    for cap in (2 * est, est):
+        monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", cap)
+        _, fb = zonal.build_candidates(r, feats)
+        assert fb is None
+    assert geom_collects == []
+
+
 def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
     """Above BROADCAST_FEATURE_LIMIT, build_candidates must route to the
     distributed cover join WITHOUT collecting geometries to the driver."""
