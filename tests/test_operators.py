@@ -181,7 +181,7 @@ def test_fused_collect_needs_estimate_margin(spark, monkeypatch):
     """build_candidates fuses the broadcast collect with its size guard only
     when the optimizer's estimate is within a quarter of the cap: an
     estimate between cap/4 and the cap takes the count-first path, so no
-    geometry reaches the driver before the broadcast-or-cover-join decision
+    geometry is collected before the broadcast-or-cover-join decision
     (forced here to the cover join)."""
     from exactextractr_spark.operators import zonal
     from exactextractr_spark.sources.features import features_from_wkt
