@@ -177,7 +177,7 @@ def exact_extract_lines(
     if plan.freq:
         from .zonal import _freq_stats
 
-        # localCheckpoint, not persist(): blocks released on GC, no cache
+        # localCheckpoint, not persist: blocks released on GC, no cache
         # leak across repeated calls in a long-lived session
         freq = freq.localCheckpoint(eager=True)
         fr = _freq_stats(plan, freq)

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._exec import bounded_collect, rechunk, spread
+
 # C-speed tokenizer: utf-8 encode, one bytes.translate pass lowercases AND
 # maps every non-[a-z0-9_] ASCII byte to space, then split. ~2.5x faster
 # than re.findall(r"\w+", text.lower()) and token-equivalent for ASCII text
@@ -47,80 +49,6 @@ _BTRANS = bytes(
 
 def _tokenize(text: str) -> "list[bytes]":
     return text.encode("utf-8", "ignore").translate(_BTRANS).split()
-
-
-def _rechunk(
-    batches: "Iterator[pd.DataFrame]", min_rows: int = 2048
-) -> "Iterator[pd.DataFrame]":
-    """Coalesce tiny Arrow batches before a vectorized kernel.
-
-    The engine's session caps ``arrow.maxRecordsPerBatch`` at 16 rows for
-    the ~0.5 MB tile payloads; text/embedding rows are a few hundred bytes,
-    so the same cap hands the numpy kernels 16-row batches where per-batch
-    fixed costs (DataFrame assembly, ragged-fold setup, tiny matmuls)
-    dominate. Accumulating to ``min_rows`` restores full vectorization
-    without touching the session-wide batch size the tile kernels need.
-
-    Oversized incoming batches are SPLIT to ``min_rows`` as well — a
-    vanilla session's 10,000-row default batches must not blow past a
-    caller's per-chunk memory budget (embedding_dedup sizes its chunks so
-    the score matrix stays ~tens of MB per task)."""
-    buf: list[pd.DataFrame] = []
-    rows = 0
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        buf.append(pdf)
-        rows += len(pdf)
-        if rows >= min_rows:
-            big = (
-                pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            )
-            n_full = (len(big) // min_rows) * min_rows
-            for lo in range(0, n_full, min_rows):
-                yield big.iloc[lo: lo + min_rows]
-            rem = big.iloc[n_full:]
-            buf, rows = ([rem], len(rem)) if len(rem) else ([], 0)
-    if buf:
-        big = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-        for lo in range(0, len(big), min_rows):
-            yield big.iloc[lo: lo + min_rows]
-
-
-#: below this estimated (column-pruned, compressed) input size the
-#: defensive repartition is pure overhead: a single core chews through
-#: sub-MB text/vector maps faster than the extra shuffle stage's fixed
-#: cost, while multi-MB single-split inputs win 10x+ from full-core maps
-_MIN_SPREAD_BYTES = 1 << 20
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Widen a too-narrow input before a map-heavy stage.
-
-    mapInPandas (and any JVM expression pipeline) inherits the scan's
-    partitioning, so a corpus stored as one (or few) parquet files runs the
-    whole map phase on one core. At real scale the input has far more
-    splits than cores and this gate never fires; below that, one
-    round-robin shuffle of the slim projection buys full-core map work.
-    Inputs whose optimizer size estimate is tiny (< _MIN_SPREAD_BYTES) are
-    left alone — there the extra stage costs more than single-core
-    execution of the whole map. No determinism cost: results are per-row
-    or re-aggregated downstream."""
-    try:
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if est < _MIN_SPREAD_BYTES:
-            return df
-    except Exception:
-        pass  # estimate unavailable (Connect, exotic plans) — fall through
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-    except Exception:
-        pass  # Spark Connect: no sparkContext/rdd — keep the plan as-is
-    return df
 
 
 # Wraparound-uint64 polynomial base for combining token hashes into shingle
@@ -288,7 +216,7 @@ def minhash_signatures(
     max_cells = 8_000_000
 
     def _sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _rechunk(batches, 256):
+        for pdf in rechunk(batches, 256):
             tok_h, offs = _batch_token_hashes(pdf[text_col])
             g_all, starts = _batch_shingle_hashes(tok_h, offs, shingle_k)
             n_docs = len(pdf)
@@ -319,7 +247,7 @@ def minhash_signatures(
             T.StructField("sig", T.ArrayType(T.LongType())),
         ]
     )
-    return _spread(docs.select(id_col, text_col)).mapInPandas(_sig, schema)
+    return spread(docs.select(id_col, text_col)).mapInPandas(_sig, schema)
 
 
 def minhash_lsh_pairs(
@@ -439,7 +367,7 @@ def simhash64(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
     schema = T.StructType(
         [T.StructField(id_col, T.LongType()), T.StructField("simhash", T.LongType())]
     )
-    return _spread(docs.select(id_col, text_col)).mapInPandas(_sim, schema)
+    return spread(docs.select(id_col, text_col)).mapInPandas(_sim, schema)
 
 
 def ngram_jaccard_pairs(
@@ -465,7 +393,7 @@ def ngram_jaccard_pairs(
     the cap (classic exact Jaccard).
 
     Plan shape (capped path): the hashed (id, gram) table is built once and
-    persisted; a codegen ``groupBy(gram).count`` (map-side partial, never a
+    checkpointed; a codegen ``groupBy(gram).count`` (map-side partial, never a
     list build over hot keys) finds the rare grams, which join back to keep
     only the df-capped rows — typically a tiny fraction of the corpus.
     Candidate pairs are then generated JVM-side from each rare gram's
@@ -483,7 +411,7 @@ def ngram_jaccard_pairs(
     # single-file scan's 1-partition layout (a 30 MB corpus file is one
     # split at the session's 32 MB maxPartitionBytes): one cheap shuffle of
     # the slim (id, text) projection buys full-core gram building
-    docs = _spread(docs.select(id_col, text_col))
+    docs = spread(docs.select(id_col, text_col))
     toks = F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")), r"\s+")
     gram_strs = F.expr(
         f"filter(array_distinct(transform(sequence(0, greatest(size(_toks) - {n}, 0)), "
@@ -497,7 +425,7 @@ def ngram_jaccard_pairs(
             docs.withColumn("_toks", toks)
             .select(F.col(id_col).alias("id"), F.explode(gram_strs).alias("gram"))
         )
-        grams = grams.persist()
+        grams = grams.localCheckpoint(eager=True)
         sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
         inter = (
             grams.alias("a")
@@ -532,8 +460,9 @@ def ngram_jaccard_pairs(
             F.explode(F.array_distinct(gram_arr)).alias("g"),
         )
     )
-    # built once, consumed by the df count and the rare-gram join
-    grams = grams.persist()
+    # built once, consumed by the df count and the rare-gram join; the
+    # checkpoint's blocks are released on GC (no CacheManager entry)
+    grams = grams.localCheckpoint(eager=True)
     rare = (
         grams.groupBy("g")
         .agg(F.count("*").alias("_df"))
@@ -545,7 +474,7 @@ def ngram_jaccard_pairs(
         kept.groupBy("g")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .select("ids")
-    ).persist()
+    ).localCheckpoint(eager=True)
     sizes = (
         bygram.select(F.explode("ids").alias("id"))
         .groupBy("id")
@@ -792,22 +721,20 @@ def embedding_dedup(
     rule run on the candidates only — the join is an equi-join on the band
     key, never all-pairs; recall < 1 by construction (raise ``bands``).
     """
-    from .similarity import _with_cos, band_key_udf
+    from .similarity import _vectors, _with_cos, band_key_udf
 
     if mode == "exact":
-        # Arrow collect (limit-bounded): orders of magnitude cheaper than
-        # row-by-row collect() for 200k x dim float arrays, and no sort —
-        # nothing downstream depends on driver-side row order
-        pdf_all = items.select(id_col, vec_col).limit(200_001).toPandas()
-        if len(pdf_all) > 200_000:
+        # no sort: nothing downstream depends on driver-side row order
+        tbl = bounded_collect(items.select(id_col, vec_col), 200_000)
+        if tbl is None:
             raise ValueError(
                 "embedding_dedup(mode='exact') is the bounded all-pairs "
                 "baseline; use mode='lsh' above 200k vectors"
             )
-        ids_all = pdf_all[id_col].to_numpy().astype(np.int64)
-        M = np.vstack(pdf_all[vec_col].to_numpy()).astype(np.float64)
+        ids_all = tbl.column(id_col).to_numpy().astype(np.int64)
+        M = _vectors(tbl.column(vec_col), vec_col)
         nrm = np.linalg.norm(M, axis=1)
-        M /= np.where(nrm == 0.0, 1.0, nrm)[:, None]
+        M = M / np.where(nrm == 0.0, 1.0, nrm)[:, None]
         bc = items.sparkSession.sparkContext.broadcast((ids_all, M))
         pair_schema = T.StructType(
             [
@@ -822,7 +749,7 @@ def embedding_dedup(
             # regardless of corpus size (at the 200k bound a 2048-row
             # chunk would be a 3.2 GB allocation)
             rows_per = max(16, 4_000_000 // max(1, len(ids_b)))
-            for pdf in _rechunk(batches, rows_per):
+            for pdf in rechunk(batches, rows_per):
                 B = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
                 n = np.linalg.norm(B, axis=1)
                 B /= np.where(n == 0.0, 1.0, n)[:, None]
@@ -836,7 +763,7 @@ def embedding_dedup(
 
         # the matmul stage must not inherit a single-file scan's
         # 1-partition layout (the whole O(N^2/P) work would run on 1 core)
-        pairs = _spread(items.select(id_col, vec_col)).mapInPandas(
+        pairs = spread(items.select(id_col, vec_col)).mapInPandas(
             _pairs, pair_schema
         )
     elif mode == "lsh":

@@ -7,17 +7,30 @@ buffers and folds the dot product and norms in index order. The scale
 paths bound the join fan-out either by deterministic random-hyperplane
 sign buckets (LSH) or by a trained coarse quantizer (IVF: k-means
 centroids, items partitioned by nearest centroid, queries probe their
-``nprobe`` nearest lists).
+``nprobe`` nearest lists). Band keys, IVF list assignment and centroid
+training read the flat Arrow buffers too (``_exec.flat_matrix``, in
+``arrow_udf`` kernels), and refuse null or ragged vectors.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from ._exec import flat_matrix, spread
+
+
+def _vectors(arr, col: str) -> np.ndarray:
+    """``flat_matrix`` of a vector column, or a ValueError naming it."""
+    M = flat_matrix(arr)
+    if M is None:
+        raise ValueError(f"{col!r} needs non-null, equal-length, non-empty "
+                         "vectors with no null elements")
+    return M
 
 
 def _scalar_cos_fold(x, y) -> "float | None":
@@ -49,12 +62,10 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
     candidate table, bit-identical output). Semantics match the replaced
     JVM ``_dot / (_norm * _norm)`` expression on EVERY path: a zero norm
     product is NULL (Spark's non-ANSI x / 0.0), NaN inputs propagate NaN,
-    and null/ragged vector rows (which poison the JVM fold) are NULL —
-    the per-row fallback runs only for batches containing such rows, so
-    the result never depends on batch composition. Returns
-    ``df[keep] + cos_sim``."""
-    import pyarrow as pa
-
+    and null/ragged vector rows or vectors with a null element (which
+    poison the JVM fold) are NULL — the per-row fallback runs only for
+    batches containing such rows, so the result never depends on batch
+    composition. Returns ``df[keep] + cos_sim``."""
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
         + [T.StructField("cos_sim", T.DoubleType())]
@@ -66,22 +77,9 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
             n = b.num_rows
             if n == 0:
                 continue
-            ia = b.schema.get_field_index(vec_a)
-            ib = b.schema.get_field_index(vec_b)
-            ca, cb = b.column(ia), b.column(ib)
-            flat_ok = ca.null_count == 0 and cb.null_count == 0
-            if flat_ok:
-                la = ca.value_lengths().to_numpy(zero_copy_only=False)
-                lb = cb.value_lengths().to_numpy(zero_copy_only=False)
-                flat_ok = bool(
-                    len(la)
-                    and (la == la[0]).all()
-                    and (lb == la[0]).all()
-                    and la[0] > 0
-                )
-            if flat_ok:
-                A = np.asarray(ca.flatten(), dtype=np.float64).reshape(n, -1)
-                B = np.asarray(cb.flatten(), dtype=np.float64).reshape(n, -1)
+            ca, cb = b.column(vec_a), b.column(vec_b)
+            A, B = flat_matrix(ca), flat_matrix(cb)
+            if A is not None and B is not None and A.shape == B.shape:
                 dot = np.zeros(n)
                 na = np.zeros(n)
                 nb = np.zeros(n)
@@ -101,11 +99,12 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
                 rows = [
                     None
                     if x is None or y is None or len(x) != len(y)
+                    or None in x or None in y
                     else _scalar_cos_fold(x, y)
                     for x, y in zip(ca.to_pylist(), cb.to_pylist())
                 ]
                 cos = pa.array(rows, type=pa.float64(), from_pandas=False)
-            cols = [b.column(b.schema.get_field_index(c)) for c in names]
+            cols = [b.column(c) for c in names]
             yield pa.RecordBatch.from_arrays(
                 cols + [cos], names=names + ["cos_sim"]
             )
@@ -127,14 +126,12 @@ def score_against_queries(
     definition shared by batch ``cosine_topk`` and
     ``streaming.stream_cosine_topk`` so the two surfaces can never
     silently diverge."""
-    from .dedup import _spread
-
     q = queries.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
     )
     # the scoring stage must not inherit a single-file scan's 1-partition
     # layout (no-op on streams and on already-parallel inputs)
-    items = _spread(items)
+    items = spread(items)
     joined = items.join(F.broadcast(q)).select(
         "qid", F.col(id_col).alias("item_id"), vec_col, "_qvec"
     )
@@ -200,7 +197,7 @@ def fnv_rademacher_planes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
 def band_key_udf(
     dim: int, bits: int, bands: int, seed: int = 42, family: str = "gaussian"
 ):
-    """Factory for the vectorized LSH band-key pandas UDF (shared by
+    """Factory for the vectorized LSH band-key Arrow UDF (shared by
     ``lsh_cosine_topk`` and ``dedup.embedding_dedup``): one batch matmul
     against the hyperplanes, bit-packed per band — zero per-row Python.
     ``family``: 'gaussian' (default) or 'rademacher_fnv' (SQL-verifiable
@@ -215,11 +212,11 @@ def band_key_udf(
     _pw = (1 << np.arange(per_band - 1, -1, -1)).astype(np.int64)
     _offs = np.arange(bands, dtype=np.int64) * (1 << per_band)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_keys(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def band_keys(vecs: pa.Array) -> pa.Array:
         if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.vstack(vecs.to_numpy()).astype(np.float64)      # (N, dim)
+            return pa.array([], type=pa.list_(pa.int64()))
+        M = _vectors(vecs, "band key input")                   # (N, dim)
         signs = (M @ planes.T) > 0                             # (N, bits)
         keys = (
             signs[:, : bands * per_band]
@@ -227,7 +224,8 @@ def band_key_udf(
             .astype(np.int64)
             @ _pw
         ) + _offs                                              # (N, bands)
-        return pd.Series(list(keys))
+        # fixed-size lists: the Arrow UDF serializer casts to array<bigint>
+        return pa.FixedSizeListArray.from_arrays(keys.ravel(), bands)
 
     return band_keys
 
@@ -251,11 +249,9 @@ def lsh_cosine_topk(
     broadcast of queries or a full cross product is impossible — then exact
     re-rank within candidates. Recall < 1 by construction; increase bands
     for higher recall."""
-    from .dedup import _spread
-
     band_keys = band_key_udf(dim, bits, bands, seed, family=family)
 
-    it = _spread(items).withColumn("bkey", F.explode(band_keys(F.col(vec_col))))
+    it = spread(items).withColumn("bkey", F.explode(band_keys(F.col(vec_col))))
     qq = queries.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
     ).withColumn("bkey", F.explode(band_keys(F.col("_qvec"))))
@@ -299,9 +295,9 @@ def train_ivf_centroids(
     # Arrow collect: orders of magnitude cheaper than row-by-row collect()
     # for a 10^4 x dim float sample; the orderBy+limit stays a distributed
     # TakeOrdered and the sorted driver-side order is preserved
-    pdf = items.orderBy(id_col).limit(sample).select(vec_col).toPandas()
-    X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    tbl = items.orderBy(id_col).limit(sample).select(vec_col).toArrow()
+    X = _vectors(tbl.column(vec_col), vec_col)
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     if init == "first":
         C = X[: min(n_centroids, len(X))].copy()
     elif init == "random":
@@ -348,30 +344,29 @@ def ivf_cosine_topk(
     C = np.asarray(centroids, dtype=np.float64)
     nprobe = min(nprobe, C.shape[0])
 
-    def _batch_sims(vecs: pd.Series) -> np.ndarray:
+    def _batch_sims(vecs: pa.Array) -> np.ndarray:
         # normalize the whole Arrow batch and matmul against C.T once;
         # zero-norm rows are left unnormalized (cos undefined, sims all 0)
-        M = np.vstack(vecs.to_numpy()).astype(np.float64)      # (N, dim)
+        M = _vectors(vecs, vec_col)                            # (N, dim)
         n = np.linalg.norm(M, axis=1)
-        M /= np.where(n == 0.0, 1.0, n)[:, None]
+        M = M / np.where(n == 0.0, 1.0, n)[:, None]
         return M @ C.T                                         # (N, K)
 
-    @F.pandas_udf(T.IntegerType())
-    def nearest_list(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.IntegerType())
+    def nearest_list(vecs: pa.Array) -> pa.Array:
         if len(vecs) == 0:
-            return pd.Series([], dtype=np.int32)
-        return pd.Series(np.argmax(_batch_sims(vecs), axis=1).astype(np.int32))
+            return pa.array([], type=pa.int32())
+        return pa.array(np.argmax(_batch_sims(vecs), axis=1).astype(np.int32))
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_lists(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def probe_lists(vecs: pa.Array) -> pa.Array:
         if len(vecs) == 0:
-            return pd.Series([], dtype=object)
+            return pa.array([], type=pa.list_(pa.int32()))
         order = np.argsort(-_batch_sims(vecs), axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int32)))
+        top = order[:, :nprobe].astype(np.int32).ravel()
+        return pa.FixedSizeListArray.from_arrays(top, nprobe)
 
-    from .dedup import _spread
-
-    it = _spread(items).withColumn("_list", nearest_list(F.col(vec_col)))
+    it = spread(items).withColumn("_list", nearest_list(F.col(vec_col)))
     qq = queries.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
     ).withColumn("_list", F.explode(probe_lists(F.col("_qvec"))))

@@ -120,7 +120,9 @@ def _stack_single_pass(
 
     from ..plans.stats import StatsPlan
     from ..sources.tiles import raw_tiles_with_meta
-    from .zonal import FeatureBroadcast, _freq_stats, coverage_facts
+    from ._exec import bounded_collect
+    from .zonal import BROADCAST_FEATURE_LIMIT, FEATURE_COLUMNS, FeatureBroadcast
+    from .zonal import _freq_stats, coverage_facts
 
     quantiles = kwargs.pop("quantiles", None) or []
     if weights is not None or kwargs or len(values) < 2:
@@ -168,16 +170,15 @@ def _stack_single_pass(
             DataFrame.unionByName,
             [raw_tiles_with_meta(r._raw, layer=r.meta.layer) for r in values],
         )
-    # ONE bounded driver job: limit(200_001).collect() both counts and
-    # fetches — if the limit row comes back the table is too big for the
-    # broadcast path and nothing oversized ever lands on the driver
-    rows = features.select(
-        "feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax"
-    ).limit(200_001).collect()
-    if len(rows) > 200_000:
+    # too big to broadcast: fall back to the per-layer loop, whose
+    # build_candidates takes the cover join
+    table = bounded_collect(
+        features.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT
+    )
+    if table is None:
         return None
     spark = features.sparkSession
-    fb = FeatureBroadcast(rows)
+    fb = FeatureBroadcast(table)
     feats_bc = spark.sparkContext.broadcast(fb)
     fin = plan.finalize_columns()
     fill: dict[str, float | int] = {}
@@ -195,7 +196,7 @@ def _stack_single_pass(
             tiles, emit="freq", feats_bc=feats_bc, values_meta=v0.meta,
             by_layer=True,
         )
-        # localCheckpoint, not persist(): computes the kernel scan once and
+        # localCheckpoint, not persist: computes the kernel scan once and
         # truncates lineage (the per-layer loop re-reads blocks, never
         # re-scans), but unlike a CacheManager entry the blocks are released
         # when this DataFrame is GC'd — no cache leak across repeated calls

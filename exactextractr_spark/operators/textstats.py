@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _spread
+from ._exec import spread
 
 _STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
@@ -23,7 +23,7 @@ TOKEN_REGEX = r"\w+|[^\w\s]"
 
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace and BPE-ish token counts as generated columns."""
-    docs = _spread(docs)
+    docs = spread(docs)
     t = F.col(text_col)
     ws = F.size(F.split(F.trim(t), r"\s+"))
     bpe = F.size(F.regexp_extract_all(t, F.lit(TOKEN_REGEX), 0))
@@ -35,7 +35,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio / mean-word-length
     heuristics — the standard pretraining quality filters."""
-    docs = _spread(docs)
+    docs = spread(docs)
     t = F.col(text_col)
     n_chars = F.length(t)
     n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
@@ -61,7 +61,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """n-gram/stopword heuristic language ID: count per-language stopword
     hits (JVM-side array_intersect of distinct words), pick the argmax
     (ties → lexicographically last language code, struct-max ordering)."""
-    docs = _spread(docs)
+    docs = spread(docs)
     words = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
     scores = F.array(
         *[
@@ -112,7 +112,7 @@ def gopher_quality(
     — shuffle-free at scale (the one defensive repartition below only fires
     when a small corpus arrives as fewer splits than cores); every
     metric is mirrored bit-for-bit by an ANSI-SQL oracle."""
-    docs = _spread(docs)
+    docs = spread(docs)
     t = F.col(text_col)
     words = _words(t)
     n_words = F.size(words)
@@ -186,7 +186,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     output column (higher-order functions are CodegenFallback, and the
     duplicated trees' distinct lambda-variable ids defeat subexpression
     elimination)."""
-    docs = _spread(docs)
+    docs = spread(docs)
     t = F.col(text_col)
     lines = _lines(t)
     total_line_chars = F.aggregate(
@@ -292,7 +292,7 @@ def rolling_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     expressible verbatim in ANSI SQL, so it is oracle-checkable bit-exactly
     (DuckDB ``list_reduce`` mirror verified). Use ``fingerprint`` (xxhash64)
     when collision resistance matters more than auditability."""
-    d = _spread(docs).withColumn(
+    d = spread(docs).withColumn(
         "_norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     )
     return d.withColumn(

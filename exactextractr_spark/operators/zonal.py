@@ -55,6 +55,7 @@ from ..core.coverage import coverage_fraction
 from ..core.grid import Box, Grid
 from ..plans.stats import StatsPlan, quantile_name
 from ..sources.tiles import Raster, tile_pixels
+from ._exec import bounded_collect
 
 EARTH_RADIUS = 6378137.0  # authalic, ref raster_area.h:63
 _PI180 = math.pi / 180.0
@@ -239,22 +240,15 @@ class FeatureBroadcast:
         self.ids, self.fxmin, self.fymin, self.fxmax, self.fymax, self.wkbs = st
         self._geoms = None
 
-    def __init__(self, rows):
+    def __init__(self, table):
+        """``table``: the Arrow collect of ``FEATURE_COLUMNS``."""
         self._geoms = None
-        n = len(rows)
-        self.ids = np.empty(n, dtype=np.int64)
-        self.fxmin = np.empty(n, dtype=np.float64)
-        self.fymin = np.empty(n, dtype=np.float64)
-        self.fxmax = np.empty(n, dtype=np.float64)
-        self.fymax = np.empty(n, dtype=np.float64)
-        self.wkbs = []
-        for i, r in enumerate(rows):
-            self.ids[i] = r["feature_id"]
-            self.fxmin[i] = r["fxmin"]
-            self.fymin[i] = r["fymin"]
-            self.fxmax[i] = r["fxmax"]
-            self.fymax[i] = r["fymax"]
-            self.wkbs.append(bytes(r["geom"]))
+        self.ids = np.array(table.column("feature_id"), dtype=np.int64)
+        self.fxmin = np.array(table.column("fxmin"), dtype=np.float64)
+        self.fymin = np.array(table.column("fymin"), dtype=np.float64)
+        self.fxmax = np.array(table.column("fxmax"), dtype=np.float64)
+        self.fymax = np.array(table.column("fymax"), dtype=np.float64)
+        self.wkbs = table.column("geom").to_pylist()
 
     def overlapping(self, xmin, ymin, xmax, ymax) -> np.ndarray:
         """Indices of features whose bbox intersects the given tile box."""
@@ -291,11 +285,8 @@ class FeatureBroadcast:
 #: features above this count fall back to the cover-join strategy
 BROADCAST_FEATURE_LIMIT = 200_000
 
-#: only fuse the broadcast-size guard with the collect when the optimizer
-#: estimates the whole feature table comfortably collectable; larger or
-#: unestimable tables count first so no geometry bytes reach the driver
-#: before the fallback decision
-_FUSED_COLLECT_MAX_BYTES = 256 << 20
+#: the columns a ``FeatureBroadcast`` is built from
+FEATURE_COLUMNS = ("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
 
 
 def build_candidates(
@@ -376,41 +367,11 @@ def build_candidates(
             ),
             None,
         )
-    # Broadcast-size guard fused with the broadcast collect: when the CRS
-    # audit already counted the table, reuse that count and only collect
-    # under the limit. Otherwise, a table whose optimizer size estimate is
-    # comfortably collectable takes ONE bounded job (limit+1 rows, count
-    # derived from the result — saves an auxiliary driver job on every
-    # small-feature query); a large or unestimable table keeps the old
-    # count-FIRST order so no geometry bytes ever land on the driver
-    # before the refusal decision (a 10M-feature table of megabyte WKBs
-    # must not stage limit+1 geometries just to discover the fallback).
-    sel_cols = ("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
-    rows = None
-    if n_feats is None:
-        est = None
-        try:
-            est = int(
-                str(
-                    feats._jdf.queryExecution().optimizedPlan().stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:
-            pass
-        # 4x margin: sizeInBytes is an optimizer estimate, and an
-        # underestimate would collect geometries before the fallback
-        if est is not None and est * 4 <= _FUSED_COLLECT_MAX_BYTES:
-            rows = (
-                feats.select(*sel_cols)
-                .limit(BROADCAST_FEATURE_LIMIT + 1)
-                .collect()
-            )
-            n_feats = len(rows)
-        else:
-            # column-pruned bounded count: no geometry bytes move
-            n_feats = feats.limit(BROADCAST_FEATURE_LIMIT + 1).count()
-    if n_feats > BROADCAST_FEATURE_LIMIT:
+    # broadcast-size guard; the CRS audit's count, if any, saves a job
+    table = bounded_collect(
+        feats.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT, count=n_feats
+    )
+    if table is None:
         return (
             candidate_pairs(
                 values, feats, broadcast_features=True,
@@ -418,9 +379,7 @@ def build_candidates(
             ),
             None,
         )
-    if rows is None:
-        rows = feats.select(*sel_cols).collect()
-    fb = FeatureBroadcast(rows)
+    fb = FeatureBroadcast(table)
     tile_side = values.raw_meta
     if tile_side is None:
         tile_side = values.tiles

@@ -62,7 +62,10 @@ def stream_zonal_stats(
     is the resumable-pipeline shape: the newest snapshot is always a
     consistent answer over every tile ingested so far.
     """
+    from ..operators._exec import bounded_collect
     from ..operators.zonal import (
+        BROADCAST_FEATURE_LIMIT,
+        FEATURE_COLUMNS,
         FeatureBroadcast,
         coverage_facts,
         static_weight_lists,
@@ -86,27 +89,19 @@ def stream_zonal_stats(
                 "raster — batch-only; resample the weights first"
             )
 
-    # bounded like the batch path's build_candidates: one limit(N+1) job
-    # refuses loudly instead of landing an unbounded feature table on the
-    # driver (the streaming path has no cover-join fallback — features must
-    # broadcast)
-    from ..operators.zonal import BROADCAST_FEATURE_LIMIT
-
-    rows = (
-        features.select(
-            "feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax"
-        )
-        .limit(BROADCAST_FEATURE_LIMIT + 1)
-        .collect()
+    # the batch path's collect policy, but a refusal instead of a fallback:
+    # the streaming path has no cover join, so features must broadcast
+    table = bounded_collect(
+        features.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT
     )
-    if len(rows) > BROADCAST_FEATURE_LIMIT:
+    if table is None:
         raise ValueError(
             f"streaming zonal requires a broadcastable feature table "
             f"(> {BROADCAST_FEATURE_LIMIT} rows found); the streaming path "
             "has no raster-sequential cover-join fallback — partition the "
             "feature set or use the batch operator"
         )
-    feats_bc = spark.sparkContext.broadcast(FeatureBroadcast(rows))
+    feats_bc = spark.sparkContext.broadcast(FeatureBroadcast(table))
 
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
@@ -147,7 +142,7 @@ def stream_zonal_stats(
         freq = partials.groupBy("feature_id", "v").agg(
             F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
         )
-        feat_ids = [r["feature_id"] for r in rows]
+        feat_ids = table.column("feature_id").to_pylist()
 
         def _freq_snapshot(batch_df: DataFrame, batch_id: int) -> None:
             import pandas as pd

@@ -183,7 +183,7 @@ def test_fused_collect_needs_estimate_margin(spark, monkeypatch):
     estimate between cap/4 and the cap takes the count-first path, so no
     geometry is collected before the broadcast-or-cover-join decision
     (forced here to the cover join)."""
-    from exactextractr_spark.operators import zonal
+    from exactextractr_spark.operators import _exec, zonal
     from exactextractr_spark.sources.features import features_from_wkt
 
     meta = RasterMeta("v", xmin=0, ymax=6, dx=1, dy=1, width=6, height=6,
@@ -194,30 +194,29 @@ def test_fused_collect_needs_estimate_margin(spark, monkeypatch):
                 "POLYGON ((3 3, 5 3, 5 5, 3 5, 3 3))",
                 "POLYGON ((1 4, 2 4, 2 5, 1 5, 1 4))"]
     )
-    est = int(str(feats._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes()))
+    est = _exec.size_estimate(feats)
     assert est > 0
+    monkeypatch.setattr(_exec, "size_estimate", lambda df: est)
     monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
-    # the concrete DataFrame class: PySpark 4 defines collect there, not
-    # on pyspark.sql.DataFrame
+    # the concrete DataFrame class: PySpark 4 defines collect and toArrow
+    # there, not on pyspark.sql.DataFrame
     SparkDF = type(feats)
-    real_collect = SparkDF.collect
     geom_collects = []
+    for name in ("toArrow", "collect"):
+        def recording(self, *a, _real=getattr(SparkDF, name), **k):
+            if "geom" in self.columns:
+                geom_collects.append(self.columns)
+            return _real(self, *a, **k)
 
-    def recording_collect(self):
-        if "geom" in self.columns:
-            geom_collects.append(self.columns)
-        return real_collect(self)
-
-    monkeypatch.setattr(SparkDF, "collect", recording_collect)
+        monkeypatch.setattr(SparkDF, name, recording)
     # estimate within cap/4: one fused collect carries the geometries
-    monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", 4 * est)
+    monkeypatch.setattr(_exec, "_FUSED_COLLECT_MAX_BYTES", 4 * est)
     _, fb = zonal.build_candidates(r, feats)
     assert fb is None and len(geom_collects) == 1
     # estimate between cap/4 and the cap: count first, collect nothing
     geom_collects.clear()
     for cap in (2 * est, est):
-        monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", cap)
+        monkeypatch.setattr(_exec, "_FUSED_COLLECT_MAX_BYTES", cap)
         _, fb = zonal.build_candidates(r, feats)
         assert fb is None
     assert geom_collects == []
@@ -225,8 +224,11 @@ def test_fused_collect_needs_estimate_margin(spark, monkeypatch):
 
 def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
     """Above BROADCAST_FEATURE_LIMIT, build_candidates must route to the
-    distributed cover join WITHOUT collecting geometries to the driver."""
-    from exactextractr_spark.operators import zonal
+    distributed cover join. On the count-first path (forced here with a
+    zero fused-collect cap) no geometry reaches the driver; the fused path
+    may stage at most limit+1 rows, and only when the size estimate is
+    within a quarter of the cap."""
+    from exactextractr_spark.operators import _exec, zonal
     from exactextractr_spark.sources.features import features_from_wkt
 
     arr = np.arange(1.0, 37.0).reshape(6, 6)
@@ -239,20 +241,22 @@ def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
                 "POLYGON ((1 4, 2 4, 2 5, 1 5, 1 4))"]
     )
     monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
-    from pyspark.sql import DataFrame as SparkDF
+    monkeypatch.setattr(_exec, "_FUSED_COLLECT_MAX_BYTES", 0)
+    # the concrete DataFrame class: PySpark 4 defines toArrow there, not on
+    # pyspark.sql.DataFrame
+    SparkDF = type(feats)
+    real_to_arrow = SparkDF.toArrow
 
-    real_collect = SparkDF.collect
-
-    def guarded_collect(self):
+    def guarded_to_arrow(self):
         assert "geom" not in self.columns, (
             "geometries were collected to the driver on the cover-join path"
         )
-        return real_collect(self)
+        return real_to_arrow(self)
 
-    monkeypatch.setattr(SparkDF, "collect", guarded_collect)
+    monkeypatch.setattr(SparkDF, "toArrow", guarded_to_arrow)
     cand, fb = zonal.build_candidates(r, feats)
     assert fb is None  # cover-join strategy chosen
-    monkeypatch.setattr(SparkDF, "collect", real_collect)
+    monkeypatch.setattr(SparkDF, "toArrow", real_to_arrow)
     out = {row["feature_id"]: row for row in
            zonal.exact_extract(r, feats, ["mean", "sum", "count"],
                                broadcast_features=True).collect()}

@@ -93,6 +93,17 @@ def test_ngram_jaccard_max_df_cap(spark):
     assert uncapped[(1, 2)] == pytest.approx(4 / 6)
 
 
+@pytest.mark.parametrize("max_df", [None, 2])
+def test_ngram_jaccard_leaves_no_cache_entries(spark, docs, max_df):
+    """ngram_jaccard_pairs materializes its gram tables with
+    localCheckpoint, so a long-lived session's CacheManager stays empty."""
+    from exactextractr_spark.operators.dedup import ngram_jaccard_pairs
+
+    spark.catalog.clearCache()
+    ngram_jaccard_pairs(docs, n=2, threshold=0.3, max_df=max_df).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_minhash_simhash_edge_docs(spark):
     """Empty and single-token docs flow through the vectorized kernels."""
     from exactextractr_spark.operators.dedup import minhash_signatures, simhash64
@@ -1085,13 +1096,17 @@ def test_streaming_image_features_matches_batch(spark, tmp_path):
             assert got[iid][c] == want[iid][c], (iid, c)
 
 
-def test_streaming_zonal_feature_collect_bounded(spark, tmp_path, monkeypatch):
-    """The streaming path's feature broadcast is limit-bounded exactly like
-    the batch path's build_candidates: above BROADCAST_FEATURE_LIMIT it
-    refuses loudly instead of collecting an unbounded table."""
-    import exactextractr_spark.operators.zonal as zonal_mod
+@pytest.mark.parametrize("site", ["build_candidates", "stack", "stream"])
+def test_feature_collect_sites_share_policy(spark, tmp_path, monkeypatch, site):
+    """Every driver-side feature collect is bounded by the same policy:
+    above BROADCAST_FEATURE_LIMIT, with a size estimate too large to fuse
+    the collect, build_candidates takes the cover join, the stack single
+    pass falls back to the per-layer loop and streaming zonal refuses
+    loudly (it has no cover-join fallback) — each without collecting a
+    single geometry to the driver."""
+    from exactextractr_spark.operators import _exec, stack, zonal
     from exactextractr_spark.sources.features import features_from_wkt
-    from exactextractr_spark.sources.tiles import RasterMeta
+    from exactextractr_spark.sources.tiles import Raster, RasterMeta
     from exactextractr_spark.streaming.zonal_stream import stream_zonal_stats
 
     meta = RasterMeta("v", xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
@@ -1102,12 +1117,37 @@ def test_streaming_zonal_feature_collect_bounded(spark, tmp_path, monkeypatch):
          "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))",
          "POLYGON ((2 2, 4 2, 4 4, 2 4, 2 2))"],
     )
-    monkeypatch.setattr(zonal_mod, "BROADCAST_FEATURE_LIMIT", 2)
-    with pytest.raises(ValueError, match="broadcastable feature table"):
-        stream_zonal_stats(
-            spark, str(tmp_path / "nosrc"), feats, ["count"], meta=meta,
-            checkpoint_dir=str(tmp_path / "ck_guard"), query_name="zs_guard",
-        )
+    est = _exec.size_estimate(feats)
+    assert est is not None and est > 0
+    monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
+    monkeypatch.setattr(_exec, "_FUSED_COLLECT_MAX_BYTES", 4 * est - 1)
+    # the concrete DataFrame class: PySpark 4 defines the collects there
+    SparkDF = type(feats)
+    geom_collects = []
+    for name in ("toArrow", "collect"):
+        def recording(self, *a, _name=name, _real=getattr(SparkDF, name), **k):
+            if "geom" in self.columns:
+                geom_collects.append(_name)
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(SparkDF, name, recording)
+    arr = np.arange(1.0, 17.0).reshape(4, 4)
+    if site == "build_candidates":
+        _, fb = zonal.build_candidates(Raster.from_array(spark, arr, meta), feats)
+        assert fb is None  # cover-join strategy chosen
+    elif site == "stack":
+        layers = [Raster.from_array(spark, arr, RasterMeta(
+            lay, xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
+            tile_w=4, tile_h=4)) for lay in ("a", "b")]
+        assert stack._stack_single_pass(layers, feats, ["mean"]) is None
+    else:
+        with pytest.raises(ValueError, match="broadcastable feature table"):
+            stream_zonal_stats(
+                spark, str(tmp_path / "nosrc"), feats, ["count"], meta=meta,
+                checkpoint_dir=str(tmp_path / "ck_guard"),
+                query_name="zs_guard",
+            )
+    assert geom_collects == []
 
 
 def test_hamming_pairs_rejects_lossy_bands(spark):
@@ -1124,8 +1164,8 @@ def test_with_cos_null_zero_norm_semantics(spark):
     """The Arrow cosine scorer must reproduce the JVM fold's non-ANSI
     division semantics on every path and independently of batch
     composition: zero-norm rows -> NULL (x / 0.0), NULL/ragged vector
-    rows -> NULL, normal rows -> finite cosine — and a batch mixing all
-    three must not crash the worker."""
+    rows and vectors with a NULL element -> NULL, normal rows -> finite
+    cosine — and a batch mixing all of them must not crash the worker."""
     from exactextractr_spark.operators.similarity import _with_cos
 
     rows = [
@@ -1134,6 +1174,7 @@ def test_with_cos_null_zero_norm_semantics(spark):
         (3, None, [1.0, 0.0]),         # NULL vec -> NULL
         (4, [1.0], [1.0, 0.0]),        # ragged -> NULL
         (5, [3.0, 4.0], [4.0, 3.0]),   # cos 24/25
+        (6, [1.0, None], [1.0, 0.0]),  # NULL element -> NULL
     ]
     df = spark.createDataFrame(
         rows, "id long, a array<double>, b array<double>"
@@ -1145,10 +1186,13 @@ def test_with_cos_null_zero_norm_semantics(spark):
     assert got[3] is None
     assert got[4] is None
     assert got[5] == 24.0 / 25.0
-    # flat path (no null/ragged rows in the batch): zero norm still NULL
+    assert got[6] is None
+    # flat path (no null/ragged rows in the batch): zero norm still NULL,
+    # and a NULL element sends the batch to the per-row fold (NULL, not NaN)
     df2 = spark.createDataFrame(
-        [rows[0], rows[1], rows[4]], "id long, a array<double>, b array<double>"
+        [rows[0], rows[1], rows[4], rows[5]],
+        "id long, a array<double>, b array<double>",
     ).coalesce(1)
     got2 = {r["id"]: r["cos_sim"]
             for r in _with_cos(df2, "a", "b", ["id"]).collect()}
-    assert got2 == {1: 1.0, 2: None, 5: 24.0 / 25.0}
+    assert got2 == {1: 1.0, 2: None, 5: 24.0 / 25.0, 6: None}
