@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.zonal import build_candidates, coverage_facts
-from .plans.stats import StatsPlan
+from .plans.stats import StatsPlan, with_all_features
 from .sources.tiles import Raster
 
 
@@ -75,6 +75,9 @@ class ZonalCheckpointer:
         plan = StatsPlan(stats)
         if plan.freq:
             raise ValueError("checkpointed path supports algebraic stats only")
+        if plan.needs_weights:
+            raise ValueError(f"stats {sorted(set(stats))} require weights, "
+                             "which the checkpointed path does not take")
         man = self.load_manifest()
         done = set(int(b) for b in man["buckets"])
         spark = features.sparkSession
@@ -94,9 +97,7 @@ class ZonalCheckpointer:
                 values_meta=values.meta,
                 emit="moments",
             )
-            partial = moments.groupBy("feature_id").agg(
-                *plan.algebraic_aggs_from_moments()
-            )
+            partial = plan.merge_moments(moments)
             path = os.path.join(self.dir, f"bucket={b}")
             partial.write.mode("overwrite").parquet(path)
             n = spark.read.parquet(path).count()
@@ -112,25 +113,15 @@ class ZonalCheckpointer:
             if progress:
                 print(f"bucket {b}: {n} partial rows in {time.time()-t0:.1f}s")
 
-        # merge all committed partials (StatsRegistry::merge at rest)
+        # merge all committed partials (StatsRegistry::merge at rest): a
+        # bucket row holds merged moments (_sum_*, min, max), which merge
+        # again as partials under their partial names (_p_sum_*, _p_min, ...)
         merged = spark.read.parquet(os.path.join(self.dir, "bucket=*"))
-        moment_cols = [c for c in merged.columns if c.startswith("_sum_")]
-        other = [c for c in merged.columns if c not in moment_cols + ["feature_id"]]
-        aggs = [F.sum(c).alias(c) for c in moment_cols]
-        aggs += [
-            F.min(c).alias(c) if c == "min" else F.max(c).alias(c) for c in other
-        ]
-        total = merged.groupBy("feature_id").agg(*aggs)
-        fin = plan.finalize_columns()
-        result = total.select(
-            "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-        )
+        partials = merged.select("feature_id", *[
+            F.col(c).alias("_p_" + c.lstrip("_"))
+            for c in merged.columns if c != "feature_id"
+        ])
         # features with no facts keep their row (0/NA stats), same as
         # exact_extract (ref test_exact_extract.R:433-485)
-        base = features.select("feature_id")
-        result = base.join(result, on="feature_id", how="left")
-        fill = {s: 0.0 for s in ("count", "sum", "weighted_count", "weighted_sum")
-                if s in result.columns}
-        if fill:
-            result = result.fillna(fill)
+        result = with_all_features(plan.from_moments(partials), features, feats_bc)
         return result.orderBy("feature_id")

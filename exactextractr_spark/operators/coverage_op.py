@@ -49,6 +49,12 @@ def line_cell_lengths_df(
     (feature, traversed cell) with the cell's value and the length of the
     line inside that cell; stats over lines weight by length the way areal
     stats weight by coverage fraction."""
+    return _line_cell_lengths(values, features, broadcast_features)[0]
+
+
+def _line_cell_lengths(values: Raster, features: DataFrame, broadcast_features: bool):
+    """``line_cell_lengths_df`` and the feature broadcast it ran with (None
+    on the cover-join strategy)."""
     from typing import Iterator
 
     import numpy as np
@@ -125,7 +131,7 @@ def line_cell_lengths_df(
                     }
                 )
 
-    return cand.mapInPandas(_kernel, schema)
+    return cand.mapInPandas(_kernel, schema), feats_bc
 
 
 def exact_extract_lines(
@@ -146,9 +152,7 @@ def exact_extract_lines(
     count = Σ len, mode = argmax of summed length per value, median/
     quantile = length-weighted interpolation…). Raster-weighted stats are
     refused — the reference has no weighted linear path either."""
-    from pyspark.sql import functions as F
-
-    from ..plans.stats import StatsPlan
+    from ..plans.stats import StatsPlan, with_all_features
 
     if isinstance(stats, str):
         stats = [stats]
@@ -158,42 +162,16 @@ def exact_extract_lines(
             f"stats {sorted(set(stats))} are weighted; linear features "
             "have no weighted path (length IS the weight)"
         )
-    facts = line_cell_lengths_df(
-        values, features, broadcast_features=broadcast_features
-    )
+    facts, feats_bc = _line_cell_lengths(values, features, broadcast_features)
     # NA-skip contract: nodata cells traversed by the line contribute
     # nothing (same as areal stats ignoring NaN values)
     facts = facts.filter(F.col("v").isNotNull() & ~F.isnan("v"))
-    freq = facts.groupBy("feature_id", "v").agg(
-        F.sum("length").alias("sum_c"), F.sum("length").alias("sum_cw")
-    )
-    result: DataFrame | None = None
-    if plan.algebraic:
-        agg_df = freq.groupBy("feature_id").agg(*plan.algebraic_aggs_from_freq())
-        fcols = plan.finalize_columns()
-        result = agg_df.select(
-            "feature_id", *[fcols[s].alias(s) for s in plan.algebraic]
-        )
+    freq = plan.merge_freq(facts.withColumnRenamed("length", "sum_c"))
     if plan.freq:
-        from .zonal import _freq_stats
-
         # localCheckpoint, not persist: blocks released on GC, no cache
         # leak across repeated calls in a long-lived session
         freq = freq.localCheckpoint(eager=True)
-        fr = _freq_stats(plan, freq)
-        result = fr if result is None else result.join(fr, "feature_id", "full")
-    base = features.select("feature_id")
-    if broadcast_features:
-        # per-feature aggregate is as small as the feature table; only hint
-        # a broadcast when the table was deemed broadcastable to begin with
-        result = base.join(F.broadcast(result), on="feature_id", how="left")
-    else:
-        result = base.join(result, on="feature_id", how="left")
-    fill = {s: 0.0 for s in ("count", "sum") if s in result.columns}
-    if "variety" in result.columns:
-        fill["variety"] = 0
-    if fill:
-        result = result.fillna(fill)
+    result = with_all_features(plan.from_freq(freq), features, feats_bc)
     return result.orderBy("feature_id") if sort else result
 
 

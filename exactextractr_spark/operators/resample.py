@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.stats import StatsPlan, quantile_name
 from ..sources.tiles import Raster, RasterMeta, tile_pixels
 
 _FACTS = T.StructType(
@@ -178,92 +179,30 @@ def exact_resample(
 ) -> DataFrame:
     """Returns (dst_row, dst_col, value) for destination cells with any
     source coverage. Single unweighted stat, like the reference
-    (R/exact_resample.R:41-69): algebraic stats aggregate the overlap
-    facts directly; freq stats (mode/minority/variety) are struct-min/max
-    aggregates over the per-cell value-frequency table (ties resolved
-    exactly like the zonal path: mode→larger value, minority→smaller);
-    median/quantile use the same exact weighted interpolation kernel as
-    zonal quantiles. ``coverage_area`` weights by covered area instead of
-    covered fraction (the reference's flag for geographic grids)."""
+    (R/exact_resample.R:41-69), through the same named-stat finish as
+    ``exact_extract`` keyed by destination cell — the reference builds one
+    RasterStats per destination cell (resample.cpp:52-171): algebraic stats
+    aggregate the overlap facts directly; frequency stats (mode/minority/
+    variety/median/quantile) run over the per-cell value-frequency table,
+    quantiles as the JVM window pass. ``coverage_area`` weights by covered
+    area instead of covered fraction (the reference's flag for geographic
+    grids)."""
     if stat not in _SUPPORTED:
         raise ValueError(f"stat {stat!r} not supported for resample")
+    plan = StatsPlan([stat], [q] if stat == "quantile" else [])
     _check_resample_crs(src.meta, dst_meta)
     facts = resample_facts(
         src, dst_meta, coverage_area=coverage_area, spherical=spherical
     )
-    c = F.col("cov")
-    v = F.col("v")
-
-    if stat in ("mode", "majority", "minority", "variety"):
-        # per-destination-cell value-frequency table; the freq weight is the
-        # total coverage each value contributes (raster_stats.h:176-230)
-        freq = facts.groupBy("dst_row", "dst_col", "v").agg(
-            F.sum(c).alias("sum_c")
-        )
-        g = freq.groupBy("dst_row", "dst_col")
-        if stat in ("mode", "majority"):
-            # struct ordering = (sum_c, v): max picks highest coverage,
-            # ties -> larger value (same rule as the zonal freq path)
-            agg = F.max(F.struct("sum_c", "v"))["v"]
-        elif stat == "minority":
-            agg = F.min(F.struct("sum_c", "v"))["v"]
-        else:  # variety
-            agg = F.count("v").cast("double")
-        return g.agg(agg.alias("value"))
-
-    if stat in ("median", "quantile"):
-        from ..core.quantiles import weighted_quantile
-
-        qv = 0.5 if stat == "median" else float(q)
-        freq = facts.groupBy("dst_row", "dst_col", "v").agg(
-            F.sum(c).alias("sum_c")
-        )
-        schema = T.StructType(
-            [
-                T.StructField("dst_row", T.IntegerType()),
-                T.StructField("dst_col", T.IntegerType()),
-                T.StructField("value", T.DoubleType()),
-            ]
-        )
-
-        def _q(pdf: pd.DataFrame) -> pd.DataFrame:
-            res = weighted_quantile(
-                pdf["v"].to_numpy(), pdf["sum_c"].to_numpy(), [qv]
-            )
-            return pd.DataFrame(
-                {
-                    "dst_row": [pdf["dst_row"].iloc[0]],
-                    "dst_col": [pdf["dst_col"].iloc[0]],
-                    "value": [res[0]],
-                }
-            )
-
-        return freq.groupBy("dst_row", "dst_col").applyInPandas(_q, schema)
-
-    g = facts.groupBy("dst_row", "dst_col")
-    if stat == "sum":
-        agg = F.sum(v * c)
-    elif stat == "mean":
-        agg = F.sum(v * c) / F.sum(c)
-    elif stat == "count":
-        agg = F.sum(c)
-    elif stat == "min":
-        agg = F.min(v)
-    elif stat == "max":
-        agg = F.max(v)
+    keys = ("dst_row", "dst_col")
+    if plan.freq:
+        # the freq weight is the total coverage each value contributes
+        # (raster_stats.h:176-230)
+        res = plan.from_freq(plan.merge_freq(facts.withColumnRenamed("cov", "sum_c"), keys), keys)
     else:
-        # coverage-weighted population moments (raster_stats.h:115-137)
-        mean = F.sum(v * c) / F.sum(c)
-        var = F.sum(v * v * c) / F.sum(c) - mean * mean
-        var = F.greatest(var, F.lit(0.0))  # guard fp cancellation
-        if stat == "variance":
-            agg = var
-        elif stat == "stdev":
-            agg = F.sqrt(var)
-        else:  # coefficient_of_variation
-            agg = F.sqrt(var) / mean
-    return g.agg(agg.alias("value"))
-
+        res = plan.from_facts(facts, keys)
+    name = quantile_name(q) if stat == "quantile" else stat
+    return res.select(*keys, F.col(name).cast("double").alias("value"))
 
 def exact_resample_apply(
     src: Raster,

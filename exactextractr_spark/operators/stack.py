@@ -109,20 +109,17 @@ def _stack_single_pass(
     run the coverage kernel ONCE over all layers' tiles (each row tagged
     with its layer) and pivot/join — N layers cost one table scan instead
     of N. Freq stats (mode/median/quantile/frac/...) ride the same single
-    scan: one ``emit="freq"`` pass tagged by layer, aggregated once and
-    persisted (features × layers × distinct values — tiny), then each
-    layer's slice routes through the same ``_freq_stats`` the per-layer
-    loop uses (mixed algebraic stats derive from the freq table exactly as
-    ``exact_extract`` does, so results match the fallback). Returns None
+    scan: one ``emit="freq"`` pass tagged by layer, merged once by
+    (feature, layer) and checkpointed (features × layers × distinct values
+    — tiny), then each layer's slice runs the same ``StatsPlan.from_freq``
+    finish as ``exact_extract``, so results match the fallback. Returns None
     when preconditions don't hold (weights, heterogenous sources/grids,
     non-default strategy kwargs) and the caller falls back to the loop."""
-    import pandas as pd
-
-    from ..plans.stats import StatsPlan
+    from ..plans.stats import StatsPlan, with_all_features
     from ..sources.tiles import raw_tiles_with_meta
     from ._exec import bounded_collect
     from .zonal import BROADCAST_FEATURE_LIMIT, FEATURE_COLUMNS, FeatureBroadcast
-    from .zonal import _freq_stats, coverage_facts
+    from .zonal import coverage_facts
 
     quantiles = kwargs.pop("quantiles", None) or []
     if weights is not None or kwargs or len(values) < 2:
@@ -177,19 +174,19 @@ def _stack_single_pass(
     )
     if table is None:
         return None
-    spark = features.sparkSession
-    fb = FeatureBroadcast(table)
-    feats_bc = spark.sparkContext.broadcast(fb)
-    fin = plan.finalize_columns()
-    fill: dict[str, float | int] = {}
+    feats_bc = features.sparkSession.sparkContext.broadcast(FeatureBroadcast(table))
+    stat_of: dict[str, str] = {}  # final column name -> its stat
 
     def _final_name(col: str, lay: str) -> str:
         if colname_fun is not None:
-            return colname_fun(
+            name = colname_fun(
                 fun_name=col, values=lay, weights=None, fun_value=col,
                 nvalues=len(values), nweights=0,
             )
-        return f"{col}.{lay}"
+        else:
+            name = f"{col}.{lay}"
+        stat_of[name] = col
+        return name
 
     if plan.freq:
         partials = coverage_facts(
@@ -202,77 +199,33 @@ def _stack_single_pass(
         # when this DataFrame is GC'd — no cache leak across repeated calls
         # in a long-lived session. (On a real cluster prefer a reliable
         # checkpoint dir if executors use dynamic allocation.)
-        freq_all = (
-            partials.groupBy("feature_id", "layer", "v")
-            .agg(F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw"))
-            .localCheckpoint(eager=True)
+        freq_all = plan.merge_freq(partials, ("feature_id", "layer")).localCheckpoint(
+            eager=True
         )
         piv = None
         for lay in layers:
-            freq_df = freq_all.filter(F.col("layer") == F.lit(lay)).drop("layer")
-            res = None
-            if plan.algebraic:
-                agg_df = freq_df.groupBy("feature_id").agg(
-                    *plan.algebraic_aggs_from_freq()
-                )
-                res = agg_df.select(
-                    "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-                )
-            fr = _freq_stats(plan, freq_df)
-            res = fr if res is None else res.join(fr, on="feature_id", how="full")
-            for c in list(res.columns):
-                if c == "feature_id":
-                    continue
-                name = _final_name(c, lay)
-                if c in ("count", "sum", "weighted_count", "weighted_sum"):
-                    fill[name] = 0.0
-                elif c == "variety":
-                    fill[name] = 0
-                res = res.withColumnRenamed(c, name)
+            res = plan.from_freq(freq_all.filter(F.col("layer") == F.lit(lay)).drop("layer"))
+            for c in res.columns:
+                if c != "feature_id":
+                    res = res.withColumnRenamed(c, _final_name(c, lay))
             piv = res if piv is None else piv.join(res, on="feature_id", how="full")
     else:
         moments = coverage_facts(
             tiles, emit="moments", feats_bc=feats_bc, values_meta=v0.meta,
             by_layer=True,
         )
-        agg = moments.groupBy("feature_id", "layer").agg(
-            *plan.algebraic_aggs_from_moments()
-        )
-        per_layer = agg.select(
-            "feature_id", "layer", *[fin[s].alias(s) for s in plan.algebraic]
-        )
+        per_layer = plan.from_moments(moments, ("feature_id", "layer"))
         piv = per_layer.groupBy("feature_id").pivot("layer", layers).agg(
             *[F.first(s).alias(s) for s in stats]
         )
-        # pivot names columns "{layer}_{stat}"; apply the reference's naming.
-        # Track the zero-fill targets BY FINAL NAME while renaming, so custom
-        # colname_fun names fill identically to the per-layer fallback path.
-        renames = {}
-        for lay, r in zip(layers, values):
+        # pivot names columns "{layer}_{stat}"; apply the reference's naming
+        for lay in layers:
             for s in stats:
                 src = f"{lay}_{s}" if len(stats) > 1 else lay
-                name = _final_name(s, lay)
-                renames[src] = name
-                if s in ("count", "sum", "weighted_count", "weighted_sum"):
-                    fill[name] = 0.0
-                elif s == "variety":
-                    fill[name] = 0
-        for old, new in renames.items():
-            piv = piv.withColumnRenamed(old, new)
-    base = spark.createDataFrame(
-        pd.DataFrame({"feature_id": pd.Series(fb.ids, dtype="int64")})
-    )
-    out = base.join(F.broadcast(piv), on="feature_id", how="left")
-    if fill:
-        # fillna can't address dotted column names; coalesce with backticks
-        out = out.select(
-            *[
-                F.coalesce(F.col(f"`{c}`"), F.lit(fill[c])).alias(c)
-                if c in fill
-                else F.col(f"`{c}`")
-                for c in out.columns
-            ]
-        )
+                piv = piv.withColumnRenamed(src, _final_name(s, lay))
+    # fill by final name, so custom colname_fun names fill identically to
+    # the per-layer fallback path
+    out = with_all_features(piv, features, feats_bc, stat_of)
     return out.orderBy("feature_id")
 
 

@@ -17,9 +17,9 @@ tile-key equi-join Catalyst can broadcast or shuffle-hash):
                                                                         ▼
           coverage kernel (mapInPandas, Arrow-vectorized) → sparse facts
                                                                         ▼
-     groupBy(feature_id).agg(all algebraic stats)   [+ groupBy(fid, v)
-     for frequency stats; quantiles interpolate JVM-side from one window
-     pass over the frequency table — no per-feature Python group]
+     the named-stat finish of ``plans.stats.StatsPlan``: merge the
+     kernel's partials by feature (moments, or groupBy(fid, v) for
+     frequency stats), finalize, back-fill the features with no facts
 
 The coverage kernel (``coverage_facts``) is a chain of stages, each a
 module-level helper that the line kernel (``coverage_op``) and the resample
@@ -53,7 +53,7 @@ from pyspark.sql import types as T
 from ..core import geom as G
 from ..core.coverage import coverage_fraction
 from ..core.grid import Box, Grid
-from ..plans.stats import StatsPlan, quantile_name
+from ..plans.stats import StatsPlan, with_all_features
 from ..sources.tiles import Raster, tile_pixels
 from ._exec import bounded_collect
 
@@ -72,11 +72,6 @@ FACTS_SCHEMA = T.StructType(
         T.StructField("area", T.DoubleType(), True),
     ]
 )
-
-#: frac/weighted_frac produce one result column per GLOBAL distinct value;
-#: beyond this the raster is not categorical and the request fails loudly
-#: (matches Spark's own spark.sql.pivotMaxValues default)
-MAX_FRAC_VALUES = 10_000
 
 #: per-(feature, tile) partial value-frequency rows — kernel-side combine of
 #: the groupBy(fid, v) shuffle (shuffle bytes scale with distinct values per
@@ -456,6 +451,24 @@ def _weight_payload_bytes(wm) -> int:
     """Upper-bound estimate of the weight raster's in-memory pixel payload
     (8 bytes/cell float64), computable from metadata alone — no job."""
     return int(wm.width) * int(wm.height) * 8
+
+
+def weight_disagg(values_meta, weights_meta) -> "tuple[int, int]":
+    """The factor (fx, fy) by which a weight grid finer than the value grid
+    disaggregates the value raster onto the finest common grid (ref
+    RasterView, raster.h:248-312); (1, 1) when the weights are not finer.
+    Raises when resolutions are not integer multiples or origins do not
+    align (ref grid.h:219-282, checked at exact_extract.cpp:316-317): a
+    misaligned weight grid must not silently sample the wrong cells."""
+    vg, wg = values_meta.grid, weights_meta.grid
+    if not vg.compatible_with(wg):
+        raise ValueError(
+            "weights grid is not compatible with the value grid "
+            "(resolutions must be integer multiples, origins aligned)"
+        )
+    if wg.dx < vg.dx or wg.dy < vg.dy:
+        return (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
+    return (1, 1)
 
 
 def _weight_tile() -> Column:
@@ -959,25 +972,15 @@ def exact_extract(
         )
     disagg = (1, 1)
     if wraster is not None:
-        vg, wg = values.meta.grid, wraster.meta.grid
-        # grid compatibility: integer-multiple resolution + aligned origins
-        # (ref grid.h:219-282, checked at exact_extract.cpp:316-317)
-        if not vg.compatible_with(wg):
+        disagg = weight_disagg(values.meta, wraster.meta)
+        banned = {"count", "sum"} & set(stats)
+        if disagg != (1, 1) and banned:
+            # count/sum are meaningless on disaggregated values
+            # (exact_extract.cpp:329-332)
             raise ValueError(
-                "weights grid is not compatible with the value grid "
-                "(resolutions must be integer multiples, origins aligned)"
+                f"stats {sorted(banned)} cannot be computed when the "
+                "value raster is disaggregated to a finer weight grid"
             )
-        if wg.dx < vg.dx or wg.dy < vg.dy:
-            # finer weights disaggregate the VALUE raster onto the finest
-            # common grid (ref RasterView, raster.h:248-312); count/sum are
-            # meaningless on disaggregated values (exact_extract.cpp:329-332)
-            disagg = (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
-            banned = {"count", "sum"} & set(stats)
-            if banned:
-                raise ValueError(
-                    f"stats {sorted(banned)} cannot be computed when the "
-                    "value raster is disaggregated to a finer weight grid"
-                )
 
     cand, feats_bc = build_candidates(
         values, features, broadcast_features, salt_buckets=salt_buckets
@@ -996,9 +999,6 @@ def exact_extract(
         default_weight=default_weight,
     )
 
-    result: DataFrame | None = None
-    fin = plan.finalize_columns()
-
     if plan.freq:
         # one kernel pass; everything (algebraic included) derives exactly
         # from the merged value-frequency table. The freq table is consumed
@@ -1008,57 +1008,12 @@ def exact_extract(
         # localCheckpoint: blocks are released when the result is GC'd, no
         # CacheManager entry leaked across repeated calls.
         partials = coverage_facts(cand, emit="freq", **kernel_kwargs)
-        freq_df = partials.groupBy("feature_id", "v").agg(
-            F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
-        ).localCheckpoint(eager=True)
-        if plan.algebraic:
-            agg_df = freq_df.groupBy("feature_id").agg(
-                *plan.algebraic_aggs_from_freq()
-            )
-            result = agg_df.select(
-                "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-            )
-        freq_result = _freq_stats(plan, freq_df)
-        result = (
-            freq_result
-            if result is None
-            else result.join(freq_result, on="feature_id", how="full")
-        )
-    elif plan.algebraic:
+        result = plan.from_freq(plan.merge_freq(partials).localCheckpoint(eager=True))
+    else:
         # moments path: kernel emits ONE row per (feature, tile); the final
         # shuffle is independent of cell count (StatsRegistry merge)
-        moments = coverage_facts(cand, emit="moments", **kernel_kwargs)
-        agg_df = moments.groupBy("feature_id").agg(
-            *plan.algebraic_aggs_from_moments()
-        )
-        result = agg_df.select(
-            "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-        )
-
-    # features with no facts: reference returns a row with 0/NA stats
-    # (test_exact_extract.R:433-485) — left join back to the feature list.
-    # In broadcast mode the ids are already on the driver: a LocalRelation
-    # avoids re-scanning the feature source (one fewer job per query).
-    if feats_bc is not None:
-        # pandas/Arrow => LocalTableScan (no python-RDD slices; see
-        # build_candidates for the measured per-plan cost of the list path)
-        base = features.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {"feature_id": pd.Series(feats_bc.value.ids, dtype="int64")}
-            )
-        )
-        # per-feature agg output is as small as the broadcast feature set:
-        # hint it so the backfill is a BroadcastHashJoin, not a sort-merge
-        result = base.join(F.broadcast(result), on="feature_id", how="left")
-    else:
-        base = features.select("feature_id")
-        result = base.join(result, on="feature_id", how="left")
-    fill = {}
-    for s in ("count", "sum", "weighted_count", "weighted_sum", "variety"):
-        if s in result.columns:
-            fill[s] = 0.0 if s != "variety" else 0
-    if fill:
-        result = result.fillna(fill)
+        result = plan.from_moments(coverage_facts(cand, emit="moments", **kernel_kwargs))
+    result = with_all_features(result, features, feats_bc)
     if append_cols is not None:
         result = result.join(append_cols, on="feature_id", how="left")
     return result.orderBy("feature_id") if sort else result
@@ -1090,17 +1045,7 @@ def exact_extract_pixels(
     cand, feats_bc = build_candidates(values, features, broadcast_features)
     disagg = (1, 1)
     if weights is not None:
-        wg, vg = weights.meta.grid, values.meta.grid
-        # same grid-compatibility contract as exact_extract (ref
-        # grid.h:219-282): a misaligned/non-integer-ratio weight grid must
-        # raise, not silently sample wrong cells
-        if not vg.compatible_with(wg):
-            raise ValueError(
-                "weights grid is not compatible with the value grid "
-                "(resolutions must be integer multiples, origins aligned)"
-            )
-        if wg.dx < vg.dx or wg.dy < vg.dy:
-            disagg = (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
+        disagg = weight_disagg(values.meta, weights.meta)
         cand = _attach_weights(cand, values, weights)
     facts = coverage_facts(
         cand,
@@ -1148,140 +1093,3 @@ def exact_extract_apply(
     pixels = exact_extract_pixels(values, features, weights=weights, **pixel_kwargs)
     return pixels.groupBy("feature_id").applyInPandas(fn, schema)
 
-
-def _freq_stats(plan: StatsPlan, freq_df: DataFrame) -> DataFrame:
-    """Frequency-map stats over groupBy(fid, v): mode/minority/variety/
-    median/quantile/frac/weighted_frac (ref raster_stats.h:176-230, 281-304,
-    393-411)."""
-    pieces: list[DataFrame] = []
-    fid = F.col("feature_id")
-
-    wanted = set(plan.freq)
-    # mode/majority, minority, and variety fuse into ONE hash aggregate —
-    # max_by/min_by over struct(sum_c, v) realize the reference's tie rules
-    # (mode: highest count, tie -> highest value, raster_stats.h:176-186;
-    # minority: lowest count, tie -> lowest value, raster_stats.h:393-403)
-    # in a single exchange instead of two sort windows + a join chain.
-    point_aggs: list = []
-    if wanted & {"mode", "majority"}:
-        mode_expr = F.max_by(
-            "v", F.struct(F.col("sum_c").alias("c"), F.col("v").alias("vv"))
-        )
-        for s in [x for x in plan.freq if x in ("mode", "majority")]:
-            point_aggs.append(mode_expr.alias(s))
-    if "minority" in wanted:
-        point_aggs.append(
-            F.min_by(
-                "v", F.struct(F.col("sum_c").alias("c"), F.col("v").alias("vv"))
-            ).alias("minority")
-        )
-    if "variety" in wanted:
-        point_aggs.append(F.count("v").cast("int").alias("variety"))
-    if point_aggs:
-        pieces.append(freq_df.groupBy("feature_id").agg(*point_aggs))
-    qs: list[float] = []
-    if "median" in wanted:
-        qs.append(0.5)
-    if "quantile" in wanted:
-        qs.extend(plan.quantiles)
-    if qs:
-        qnames = (["median"] if "median" in wanted else []) + (
-            [quantile_name(q) for q in plan.quantiles] if "quantile" in wanted else []
-        )
-        qvals = qs
-        # Distributed exact weighted quantile (weighted_quantiles.cpp:20-70
-        # semantics, same as core/quantiles.weighted_quantile): the
-        # s-coordinate of every (feature, v) row comes from ONE window pass
-        # (row_number + exclusive/total running sums, all sharing a single
-        # exchange+sort by feature_id/v), and each requested q interpolates
-        # between the bracketing rows via max_by/min_by in the SAME
-        # feature_id aggregate — no per-feature Python group, so a
-        # continuous-valued mega-polygon no longer funnels its whole
-        # frequency table through one Python task. Bit-exactness: the
-        # running window sums accumulate in ascending-v order (the same
-        # left-to-right fold as np.cumsum), and the interpolation expression
-        # mirrors the numpy operation order term for term.
-        from pyspark.sql.window import Window
-
-        wo = Window.partitionBy("feature_id").orderBy("v")
-        w_prev = wo.rowsBetween(Window.unboundedPreceding, -1)
-        w_all = wo.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        valid = freq_df.where(
-            F.col("v").isNotNull() & ~F.isnan(F.col("v"))
-        )
-        kk = (F.row_number().over(wo) - F.lit(1)).cast("double")
-        nn = F.count(F.lit(1)).over(w_all).cast("double")
-        csum_prev = F.sum("sum_c").over(w_prev)
-        tot = F.sum("sum_c").over(w_all)
-        s_col = F.when(kk == 0.0, F.lit(0.0)).otherwise(
-            kk * F.col("sum_c") + (nn - F.lit(1.0)) * csum_prev
-        )
-        staged = valid.select(
-            "feature_id",
-            "v",
-            s_col.alias("_s"),
-            (tot * (nn - F.lit(1.0))).alias("_sn"),
-        )
-        q_aggs: list = []
-        for nm, q in zip(qnames, qvals):
-            tgt = F.lit(float(q)) * F.col("_sn")
-            left = F.max_by(
-                F.struct(F.col("_s").alias("s"), F.col("v").alias("v")),
-                F.when(F.col("_s") <= tgt, F.col("_s")),
-            )
-            right = F.min_by(
-                F.struct(F.col("_s").alias("s"), F.col("v").alias("v")),
-                F.when(F.col("_s") > tgt, F.col("_s")),
-            )
-            target_v = F.max(tgt)
-            vmax = F.max("v")
-            interp = left["v"] + (
-                (target_v - left["s"]) * (right["v"] - left["v"])
-            ) / (right["s"] - left["s"])
-            q_aggs.append(
-                F.when(right.isNull(), vmax).otherwise(interp).alias(nm)
-            )
-        pieces.append(staged.groupBy("feature_id").agg(*q_aggs))
-    for s, num in (("frac", "sum_c"), ("weighted_frac", "sum_cw")):
-        if s in wanted:
-            # global distinct value set across ALL features
-            # (ref exact_extract.cpp:420-434, 533-540) — two-pass like the
-            # reference; the distinct set is tiny (categorical rasters).
-            # limit-bounded like every other driver-side metadata job: a
-            # continuous raster fails LOUDLY here instead of OOMing the
-            # driver or exploding the pivot
-            rows = (
-                freq_df.select("v").where(F.col("v").isNotNull())
-                .distinct().limit(MAX_FRAC_VALUES + 1).collect()
-            )
-            if len(rows) > MAX_FRAC_VALUES:
-                raise ValueError(
-                    f"'{s}' requires a categorical raster: more than "
-                    f"{MAX_FRAC_VALUES} distinct values found (one result "
-                    "column per value, ref exact_extract.cpp:420-434); use "
-                    "quantile/median stats for continuous rasters"
-                )
-            vals = sorted(r[0] for r in rows if r[0] is not None)
-            tot = freq_df.groupBy("feature_id").agg(F.sum(num).alias("_tot"))
-            piv = (
-                freq_df.groupBy("feature_id")
-                .pivot("v", vals)
-                .agg(F.first(num))
-                .join(tot, on="feature_id")
-            )
-            sel = [fid]
-            for vv in vals:
-                cname = f"{vv:g}".replace("-", "m").replace(".", "_")
-                sel.append(
-                    (F.coalesce(F.col(f"`{vv}`"), F.lit(0.0)) / F.col("_tot")).alias(
-                        f"{s}_{cname}"
-                    )
-                )
-            pieces.append(piv.select(*sel))
-
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.join(p, on="feature_id", how="full")
-    return out

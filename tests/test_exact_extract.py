@@ -486,9 +486,9 @@ def test_frac_cardinality_guard(spark, monkeypatch):
     """A continuous-valued raster fails LOUDLY on frac instead of building
     a pivot with one column per float (cap is limit-bounded, no full
     driver collect)."""
-    import exactextractr_spark.operators.zonal as zonal_mod
+    import exactextractr_spark.plans.stats as stats_mod
 
-    monkeypatch.setattr(zonal_mod, "MAX_FRAC_VALUES", 4)
+    monkeypatch.setattr(stats_mod, "MAX_FRAC_VALUES", 4)
     arr = np.arange(9, dtype=np.float64).reshape(3, 3)  # 9 distinct values
     cont = Raster.from_array(spark, arr, meta33("cont"))
     feats = features_from_wkt(spark, [SQ_WKT])
@@ -678,3 +678,61 @@ def test_kernel_emit_paths_and_strategies_agree(spark):
                                got_l[1][["v", "length"]].to_numpy(),
                                rtol=1e-12, equal_nan=True)
     assert got_l[0]["v"].isna().any()
+
+
+def test_nan_weights_poison_weighted_stats(spark, r19, sq, tmp_path):
+    """A NaN weight on a covered cell poisons weighted_sum, weighted_count
+    and weighted_mean (raster_stats.h:104-107) on every path: both
+    candidate strategies, the moments emit and the freq emit (``variety``
+    added), and streaming. ``default_weight`` replaces the NaN and gives
+    finite values."""
+    from exactextractr_spark.sources.tiles import tile_table_from_array
+    from exactextractr_spark.streaming.zonal_stream import stream_zonal_stats
+
+    warr = np.ones((3, 3))
+    warr[1, 1] = np.nan  # the centre cell, fully covered by the square
+    w = Raster.from_array(spark, warr, meta33("w"))
+    wstats = ["weighted_sum", "weighted_count", "weighted_mean"]
+    for bc in (True, False):
+        for extra in ([], ["variety"]):
+            row = one_row(exact_extract(r19, sq, wstats + extra, weights=w,
+                                        broadcast_features=bc))
+            assert all(math.isnan(row[s]) for s in wstats), (bc, extra, row)
+            fine = one_row(exact_extract(r19, sq, wstats + extra, weights=w,
+                                         default_weight=1.0,
+                                         broadcast_features=bc))
+            assert fine["weighted_sum"] == pytest.approx(20.0)
+            assert fine["weighted_count"] == pytest.approx(4.0)
+            assert fine["weighted_mean"] == pytest.approx(5.0)
+
+    src = str(tmp_path / "src")
+    tile_table_from_array(
+        spark, np.arange(1, 10, dtype=np.float64).reshape(3, 3), meta33()
+    ).write.parquet(src)
+    for extra in ([], ["variety"]):
+        name = f"nan_weights_{len(extra)}"
+        q = stream_zonal_stats(
+            spark, src, sq, wstats + extra, meta=meta33(), weights=w,
+            checkpoint_dir=str(tmp_path / name), query_name=name,
+        )
+        q.awaitTermination(180)
+        row = one_row(spark.table(name))
+        assert all(math.isnan(row[s]) for s in wstats), (extra, row)
+
+
+def test_quantile_all_nan_rows_read_null(spark):
+    """NULL-vs-NaN contract of the quantile piece: frequency rows whose
+    value is NaN drop out before the window, so a feature whose rows are
+    all NaN reads NULL, not NaN (the coverage kernel never emits such
+    rows). Pinned on a hand-built frequency table."""
+    from exactextractr_spark.plans.stats import StatsPlan
+
+    freq = spark.createDataFrame(
+        [(1, 1.0, 1.0), (1, 3.0, 1.0), (2, float("nan"), 0.5)],
+        "feature_id long, v double, sum_c double",
+    )
+    plan = StatsPlan(["variety", "median", "quantile"], [0.25])
+    got = {r["feature_id"]: r.asDict() for r in plan.from_freq(freq).collect()}
+    assert got[1]["median"] == pytest.approx(2.0)
+    assert got[2]["variety"] == 1
+    assert got[2]["median"] is None and got[2]["q25"] is None

@@ -361,6 +361,41 @@ def test_exact_extract_lines_stats(spark):
         exact_extract_lines(r, feats, ["weighted_mean"])
 
 
+def test_exact_extract_lines_hints_broadcast_only_with_feature_broadcast(
+    spark, monkeypatch
+):
+    """Above the broadcast limit the lines take the cover join, and the
+    per-feature result is not hinted for broadcast: the line stats add no
+    broadcast hint to those of the line kernel. Results are unchanged."""
+    import exactextractr_spark.operators.zonal as zonal_mod
+    from exactextractr_spark.operators.coverage_op import (
+        exact_extract_lines,
+        line_cell_lengths_df,
+    )
+
+    r = Raster.from_array(spark, np.arange(36, dtype=np.float64).reshape(6, 6),
+                          RasterMeta("v", xmin=0, ymax=6, dx=1, dy=1, width=6,
+                                     height=6, tile_w=3, tile_h=3))
+    lines = features_from_wkt(spark, ["LINESTRING (0 1.5, 6 1.5)",
+                                      "LINESTRING (0.5 0.5, 5.5 5.2)",
+                                      "LINESTRING (9 9, 10 10)"])  # outside
+    stats = ["count", "sum", "mean", "max"]
+
+    def hints(df):
+        return df._jdf.queryExecution().analyzed().toString().count(
+            "strategy=broadcast")
+
+    want = [row.asDict() for row in exact_extract_lines(r, lines, stats).collect()]
+    monkeypatch.setattr(zonal_mod, "BROADCAST_FEATURE_LIMIT", 2)
+    out = exact_extract_lines(r, lines, stats)
+    assert hints(out) == hints(line_cell_lengths_df(r, lines))
+    got = [row.asDict() for row in out.collect()]
+    assert [g["feature_id"] for g in got] == [w["feature_id"] for w in want]
+    for g, w in zip(got, want):
+        for s in stats:
+            assert g[s] == pytest.approx(w[s], rel=1e-12), (g, w)
+
+
 def test_rasterize_nonintersecting_and_partial(spark):
     """No error when polygons miss or only partially intersect the grid
     (test_rasterize.R:78-97)."""

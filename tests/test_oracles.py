@@ -1,0 +1,49 @@
+"""Oracle gate for the named-stat leaves: the zonal, stack, line and
+resample queries of ``__spark_entry__.queries()`` must match their DuckDB
+oracles (``oracle_sql()``) at sf0.01, as ``tools/check_oracles.py`` checks
+them. Skips when the generated sf0.01 tables are not next to the checkout."""
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parents[1]
+SF_DIR = REPO.parent / "testdata" / "sf0.01"
+LEAVES = [
+    "zonal_mean_sum_count",
+    "zonal_min_max_var",
+    "zonal_weighted",
+    "zonal_mode_minority_variety",
+    "zonal_quantiles",
+    "zonal_frac_long",
+    "zonal_area_weighted",
+    "zonal_stack",
+    "zonal_stack_shared",
+    "zonal_stack_freq",
+    "line_stats",
+    "resample_sum",
+    "resample_misaligned",
+    "resample_mode",
+]
+
+
+@pytest.mark.skipif(not SF_DIR.is_dir(), reason="sf0.01 test data not present")
+def test_named_stat_leaves_match_oracles():
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), os.environ.get("PYTHONPATH")) if p
+    )
+    env.setdefault("SPARK_GRAFT_CPUS", "4")
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "check_oracles.py"), str(SF_DIR),
+         ",".join(LEAVES)],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=1800,
+    )
+    out = proc.stdout + proc.stderr[-4000:]
+    assert proc.returncode == 0, out
+    passed = {line.split()[1].rstrip(":") for line in proc.stdout.splitlines()
+              if line.startswith(("[ok]", "[WARN]"))}
+    assert passed == set(LEAVES), out

@@ -656,7 +656,9 @@ def test_streaming_zonal_matches_batch(spark, tmp_path):
     feats = features_from_wkt(
         spark,
         ["POLYGON ((0.5 0.5, 8.5 0.5, 8.5 8.5, 0.5 8.5, 0.5 0.5))",
-         "POLYGON ((6 6, 11 6, 11 11, 6 11, 6 6))"],
+         "POLYGON ((6 6, 11 6, 11 11, 6 11, 6 6))",
+         # outside the raster: no facts, still one row (0/NULL), as in batch
+         "POLYGON ((20 20, 21 20, 21 21, 20 21, 20 20))"],
     )
     stats = ["count", "sum", "mean", "min", "max", "stdev"]
     q = stream_zonal_stats(
