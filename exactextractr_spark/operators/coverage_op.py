@@ -181,7 +181,9 @@ def coverage_fraction_raster(
     """Dense form: one row per (feature, tile) with the coverage-fraction
     block as an array — the reference's RasterLayer-per-feature output
     (coverage_fraction.cpp:27-89). ``crop=False`` emits ALL tiles per
-    feature with 0-filled blocks outside (R/coverage_fraction.R crop arg)."""
+    feature with 0-filled blocks outside (R/coverage_fraction.R crop arg).
+    Both modes audit the feature CRS like every zonal entry point
+    (``zonal.reconcile_crs``)."""
     from typing import Iterator
 
     import numpy as np
@@ -192,10 +194,11 @@ def coverage_fraction_raster(
     from ..core.coverage import coverage_fraction
     from ..core.grid import Grid
 
-    from .zonal import candidate_pairs, feature_tile_cover
+    from .zonal import FEATURE_COLUMNS, reconcile_crs
 
     if crop:
-        cand = candidate_pairs(values, features)
+        # the cover join: every tile a feature bbox reaches, with its list
+        cand, _ = build_candidates(values, features, broadcast_features=False)
         # the dense kernel is geometry-only: drop pixel payloads BEFORE the
         # python stage (mapInPandas ships every input column — Catalyst
         # cannot prune through it)
@@ -209,9 +212,11 @@ def coverage_fraction_raster(
         # crop=FALSE, so refuse feature sets where that product is a mistake
         # rather than silently launching it (the reference only ever does
         # this one feature at a time, R/coverage_fraction.R:17-79).
-        # limit-bounded guard job: we only need to know "more than 1000?",
-        # never the exact count — don't scan the full feature table.
-        n_feats = features.limit(1001).count()
+        features, n_feats = reconcile_crs(values.meta, features)
+        if n_feats is None:
+            # limit-bounded guard job: we only need to know "more than
+            # 1000?", never the exact count
+            n_feats = features.limit(1001).count()
         if n_feats > 1000:
             raise ValueError(
                 "coverage_fraction(crop=False) with >1000 features "
@@ -219,13 +224,9 @@ def coverage_fraction_raster(
                 "crop=True (sparse) or restrict the feature set"
             )
         all_keys = values.raw_meta if values.raw_meta is not None else values.tiles
-        import pyspark.sql.functions as F
-
-        feats_l = features.select(
-            F.struct("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax").alias(
-                "_feat"
-            )
-        ).agg(F.collect_list("_feat").alias("feats"))
+        feats_l = features.select(F.struct(*FEATURE_COLUMNS).alias("_feat")).agg(
+            F.collect_list("_feat").alias("feats")
+        )
         cand = all_keys.select(
             "tile_row", "tile_col", "xmin", "ymin", "xmax", "ymax",
             "dx", "dy", "nrows", "ncols",

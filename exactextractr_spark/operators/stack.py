@@ -42,29 +42,44 @@ def exact_extract_stack(
     weights: "list[Raster] | None" = None,
     full_colnames: bool = False,
     colname_fun=None,
-    single_pass: bool = True,
     **kwargs,
 ) -> DataFrame:
-    """Run stats layer-by-layer (stack_apply) and join results on
-    feature_id, naming columns by the reference's rules.
+    """Stats per value layer (stack_apply), joined on feature_id, with
+    columns named by the reference's rules.
 
     ``colname_fun`` (ref R/exact_extract.R:288, exact_extract_helpers.R:
     96-118): callable ``(fun_name, values, weights, fun_value, nvalues,
     nweights) -> str`` overriding the default naming entirely.
-    ``single_pass=False`` forces the per-layer loop (equivalence oracle
-    for the fast path's tests)."""
+
+    Runs the single-scan pass (``_stack_single_pass``) when its
+    preconditions hold, and the per-layer loop otherwise."""
     if isinstance(stats, str):
         stats = [stats]
-    single = (
-        _stack_single_pass(
-            values, features, stats, weights=weights,
-            full_colnames=full_colnames, colname_fun=colname_fun, **kwargs,
-        )
-        if single_pass
-        else None
+    single = _stack_single_pass(
+        values, features, stats, weights=weights,
+        full_colnames=full_colnames, colname_fun=colname_fun, **kwargs,
     )
     if single is not None:
         return single
+    return _stack_loop(
+        values, features, stats, weights=weights,
+        full_colnames=full_colnames, colname_fun=colname_fun, **kwargs,
+    )
+
+
+def _stack_loop(
+    values: "list[Raster]",
+    features: DataFrame,
+    stats: "list[str]",
+    *,
+    weights: "list[Raster] | None" = None,
+    full_colnames: bool = False,
+    colname_fun=None,
+    **kwargs,
+) -> DataFrame:
+    """The per-layer loop: one ``exact_extract`` per recycled
+    (value, weight) pair, renamed and full-joined on feature_id. Handles
+    every input ``exact_extract`` does."""
     pairs = _recycle(values, weights)
     multi = len(pairs) > 1
     out: DataFrame | None = None
@@ -104,22 +119,24 @@ def _stack_single_pass(
     colname_fun=None,
     **kwargs,
 ) -> "DataFrame | None":
-    """Single-scan fast path for the layer loop: when all value layers live
-    in the SAME raw tile table on one grid (the Iceberg multi-layer shape),
-    run the coverage kernel ONCE over all layers' tiles (each row tagged
-    with its layer) and pivot/join — N layers cost one table scan instead
-    of N. Freq stats (mode/median/quantile/frac/...) ride the same single
-    scan: one ``emit="freq"`` pass tagged by layer, merged once by
-    (feature, layer) and checkpointed (features × layers × distinct values
-    — tiny), then each layer's slice runs the same ``StatsPlan.from_freq``
-    finish as ``exact_extract``, so results match the fallback. Returns None
-    when preconditions don't hold (weights, heterogenous sources/grids,
-    non-default strategy kwargs) and the caller falls back to the loop."""
+    """Single-scan fast path for the layer loop: when all value layers share
+    one grid, tiling and CRS (in one raw tile table, the Iceberg
+    multi-layer shape, or in several), run the coverage kernel ONCE over
+    all layers' tiles (each row tagged with its layer) and pivot/join — N
+    layers cost one kernel pass instead of N. The candidates come from
+    ``build_candidates`` over the first layer's tile keys, so the CRS audit
+    and the broadcast-or-cover-join choice are the same as
+    ``exact_extract``'s. Freq stats (mode/median/quantile/frac/...) ride
+    the same single scan: one ``emit="freq"`` pass tagged by layer, merged
+    once by (feature, layer) and checkpointed (features × layers × distinct
+    values — tiny), then each layer's slice runs the same
+    ``StatsPlan.from_freq`` finish as ``exact_extract``, so results match
+    the loop. Returns None when preconditions don't hold (weights,
+    different grids, tilings or CRSs, non-default strategy kwargs) and the
+    caller runs the loop."""
     from ..plans.stats import StatsPlan, with_all_features
     from ..sources.tiles import raw_tiles_with_meta
-    from ._exec import bounded_collect
-    from .zonal import BROADCAST_FEATURE_LIMIT, FEATURE_COLUMNS, FeatureBroadcast
-    from .zonal import coverage_facts
+    from .zonal import build_candidates, coverage_facts
 
     quantiles = kwargs.pop("quantiles", None) or []
     if weights is not None or kwargs or len(values) < 2:
@@ -132,21 +149,14 @@ def _stack_single_pass(
         # distinct tables need distinct layer tags: a duplicated layer name
         # would double-count tiles in the unioned pass — fall back
         return None
-    # identical-grid gate: resolution, origin AND extent (width/height) must
-    # match, compared with the same relative tolerance Grid.compatible_with
-    # uses — exact float equality would reject harmless rounding, and
-    # ignoring extent would let different-sized layers share one pass
-    g0 = v0.meta.grid
+    # one grid, tiling and CRS: cells pair one to one across layers, and
+    # the first layer's tile keys and CRS audit serve them all
+    m0 = v0.meta
     for r in values[1:]:
-        g = r.meta.grid
-        tol_x, tol_y = 1e-3 * g0.dx, 1e-3 * g0.dy
         if (
-            abs(g.dx - g0.dx) > tol_x
-            or abs(g.dy - g0.dy) > tol_y
-            or abs(g.xmin - g0.xmin) > tol_x
-            or abs(g.ymax - g0.ymax) > tol_y
-            or abs(g.xmax - g0.xmax) > tol_x
-            or abs(g.ymin - g0.ymin) > tol_y
+            not m0.same_grid(r.meta)
+            or (r.meta.tile_w, r.meta.tile_h) != (m0.tile_w, m0.tile_h)
+            or r.meta.crs != m0.crs
         ):
             return None
     plan = StatsPlan(stats, quantiles)
@@ -167,14 +177,7 @@ def _stack_single_pass(
             DataFrame.unionByName,
             [raw_tiles_with_meta(r._raw, layer=r.meta.layer) for r in values],
         )
-    # too big to broadcast: fall back to the per-layer loop, whose
-    # build_candidates takes the cover join
-    table = bounded_collect(
-        features.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT
-    )
-    if table is None:
-        return None
-    feats_bc = features.sparkSession.sparkContext.broadcast(FeatureBroadcast(table))
+    cand, feats_bc = build_candidates(v0, features, tiles=tiles)
     stat_of: dict[str, str] = {}  # final column name -> its stat
 
     def _final_name(col: str, lay: str) -> str:
@@ -190,7 +193,7 @@ def _stack_single_pass(
 
     if plan.freq:
         partials = coverage_facts(
-            tiles, emit="freq", feats_bc=feats_bc, values_meta=v0.meta,
+            cand, emit="freq", feats_bc=feats_bc, values_meta=m0,
             by_layer=True,
         )
         # localCheckpoint, not persist: computes the kernel scan once and
@@ -211,7 +214,7 @@ def _stack_single_pass(
             piv = res if piv is None else piv.join(res, on="feature_id", how="full")
     else:
         moments = coverage_facts(
-            tiles, emit="moments", feats_bc=feats_bc, values_meta=v0.meta,
+            cand, emit="moments", feats_bc=feats_bc, values_meta=m0,
             by_layer=True,
         )
         per_layer = plan.from_moments(moments, ("feature_id", "layer"))
@@ -224,7 +227,7 @@ def _stack_single_pass(
                 src = f"{lay}_{s}" if len(stats) > 1 else lay
                 piv = piv.withColumnRenamed(src, _final_name(s, lay))
     # fill by final name, so custom colname_fun names fill identically to
-    # the per-layer fallback path
+    # the per-layer loop
     out = with_all_features(piv, features, feats_bc, stat_of)
     return out.orderBy("feature_id")
 
@@ -245,17 +248,10 @@ def summarize_df_pixels(
     and optional weight columns — all layers must share the value grid, so
     cells align 1:1 and the combine is an equi-join on (feature_id, cell).
     """
-    base_grid = values[0].meta.grid
-    for r in values[1:]:
-        if not (
-            r.meta.grid.dx == base_grid.dx
-            and r.meta.grid.dy == base_grid.dy
-            and r.meta.grid.xmin == base_grid.xmin
-            and r.meta.grid.ymax == base_grid.ymax
-        ):
-            raise ValueError(
-                "stack_apply=FALSE requires all value layers on one grid"
-            )
+    if not all(values[0].meta.same_grid(r.meta) for r in values[1:]):
+        raise ValueError(
+            "stack_apply=FALSE requires all value layers on one grid"
+        )
     w0 = weights[0] if weights else None
     out = exact_extract_pixels(
         values[0], features, weights=w0, include_cell=True,

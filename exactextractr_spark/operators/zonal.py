@@ -169,19 +169,15 @@ def feature_tile_cover(values: Raster, feats: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    values: Raster,
-    feats: DataFrame,
-    broadcast_features: bool = True,
-    salt_buckets: int = 1,
-) -> DataFrame:
-    """Grouped candidate join: each tile row carries the LIST of features
-    overlapping it, so a tile's (heavy) pixel payload crosses the JVM→Python
-    boundary exactly once no matter how many features touch it — the fanout
-    of a continent-sized polygon duplicates only its (small) WKB into the
-    per-tile lists, never the rasters. At 10^12-tile scale the per-tile
-    work list is also the unit of checkpointing and skew is bounded by
-    features-per-tile, not cells-per-feature.
+def tile_feature_lists(values: Raster, feats: DataFrame, salt_buckets: int = 1) -> DataFrame:
+    """The cover join's feature side: (tile_row, tile_col, feats), each tile
+    key with the LIST of features whose bbox overlaps it. Joined onto the
+    tile rows (``build_candidates``), a tile's (heavy) pixel payload crosses
+    the JVM→Python boundary exactly once no matter how many features touch
+    it — the fanout of a continent-sized polygon duplicates only its
+    (small) WKB into the per-tile lists, never the rasters. At 10^12-tile
+    scale the per-tile work list is also the unit of checkpointing and skew
+    is bounded by features-per-tile, not cells-per-feature.
 
     ``salt_buckets > 1`` splits each hot tile's feature list into that many
     salt buckets (north-rule skew handling): the per-tile ``collect_list``
@@ -189,11 +185,7 @@ def candidate_pairs(
     replicated once per non-empty bucket — the standard payload-duplication
     vs task-size salting trade."""
     cover = feature_tile_cover(values, feats).select(
-        "tile_row",
-        "tile_col",
-        F.struct("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax").alias(
-            "_feat"
-        ),
+        "tile_row", "tile_col", F.struct(*FEATURE_COLUMNS).alias("_feat")
     )
     group_keys = ["tile_row", "tile_col"]
     if salt_buckets > 1:
@@ -209,12 +201,7 @@ def candidate_pairs(
     )
     if salt_buckets > 1:
         per_tile = per_tile.drop("_salt")
-    if broadcast_features:
-        per_tile = F.broadcast(per_tile)
-    tile_side = values.raw_meta
-    if tile_side is None:
-        tile_side = values.tiles
-    return tile_side.join(per_tile, on=["tile_row", "tile_col"], how="inner")
+    return per_tile
 
 
 class FeatureBroadcast:
@@ -284,100 +271,113 @@ BROADCAST_FEATURE_LIMIT = 200_000
 FEATURE_COLUMNS = ("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
 
 
+def reconcile_crs(values_meta, feats: DataFrame) -> "tuple[DataFrame, int | None]":
+    """The CRS audit of every zonal entry point: returns ``feats`` in the
+    raster CRS and the feature count, or None when there was nothing to
+    audit (no ``crs`` column, or a raster without a CRS).
+
+    The reference auto-transforms the polygons to the raster CRS with a
+    warning (R/exact_extract.R:360-377). We do the same for the closed-form
+    pairs of ``core/crs.py``; every other mismatched pair fails loudly
+    instead of producing silently wrong answers on misaligned coordinates.
+    ONE metadata job, agg(count, collect_set(crs)), covers the audit and the
+    count: the audit must see every row's crs anyway (any single mismatched
+    row invalidates the run), so the count the broadcast-size guard needs
+    comes free."""
+    if "crs" not in feats.columns or not values_meta.crs:
+        return feats, None
+    meta_row = feats.agg(
+        F.count(F.lit(1)).alias("n"),
+        # coalesce to "" so a null-crs row is visible in the set — rows
+        # with no CRS are conventionally assumed to already be in the
+        # raster CRS and must NOT be silently reprojected
+        F.collect_set(F.coalesce(F.col("crs"), F.lit(""))).alias("cset"),
+    ).first()
+    cset = set(meta_row["cset"])
+    has_null = "" in cset
+    fcrs = sorted(cset - {""})
+    bad = [c for c in fcrs if c != values_meta.crs]
+    if bad:
+        from ..core.crs import can_transform
+        from ..sources.features import transform_features
+
+        if has_null:
+            # mixed null-CRS and defined-CRS rows: transform_features
+            # reprojects EVERY row, which would silently move the
+            # null-CRS geometries (assumed already in the raster CRS)
+            raise ValueError(
+                "feature table mixes rows with no CRS and rows in "
+                f"{bad[0]!r}; cannot auto-transform without silently "
+                "reprojecting the CRS-less rows — stamp or transform "
+                "them explicitly first"
+            )
+        if len(set(bad)) == 1 and len(fcrs) == 1 and can_transform(
+            bad[0], values_meta.crs
+        ):
+            import warnings
+
+            warnings.warn(
+                f"transforming features from {bad[0]!r} to the raster "
+                f"CRS {values_meta.crs!r} (ref R/exact_extract.R:360-377)"
+            )
+            feats = transform_features(feats, bad[0], values_meta.crs)
+        else:
+            raise ValueError(
+                f"feature CRS {bad[0]!r} does not match the raster CRS "
+                f"{values_meta.crs!r} and no closed-form transform "
+                "exists; transform the features to the raster CRS first "
+                "(the reference transforms automatically via PROJ, "
+                "R/exact_extract.R:360-377)"
+            )
+    return feats, meta_row["n"]
+
+
+def _tile_frame(values: Raster, tiles: "DataFrame | None") -> DataFrame:
+    """``tiles`` if given, else the raster's raw tiles with their grid
+    metadata, else its decoded tiles."""
+    if tiles is None:
+        tiles = values.raw_meta
+    return values.tiles if tiles is None else tiles
+
+
 def build_candidates(
     values: Raster,
     feats: DataFrame,
     broadcast_features: bool = True,
     salt_buckets: int = 1,
+    *,
+    tiles: "DataFrame | None" = None,
 ):
-    """Choose the candidate strategy (the reference's --strategy flag,
-    exactextract.cpp:95-101):
+    """The one door into the coverage kernel: audit the feature CRS
+    (``reconcile_crs``), then choose the candidate strategy (the
+    reference's --strategy flag, exactextract.cpp:95-101):
 
     - feature-sequential / broadcast (small feature table): returns
-      ``(tiles_df, sc.broadcast(FeatureBroadcast))`` — single-stage plan.
-    - raster-sequential / cover join (huge feature table): returns
-      ``(joined_df_with_feats_lists, None)``.
+      ``(tiles_df, sc.broadcast(FeatureBroadcast))`` — single-stage plan,
+      with the tiles no feature bbox reaches pruned on the driver.
+    - raster-sequential / cover join (``broadcast_features=False``, or more
+      than ``BROADCAST_FEATURE_LIMIT`` features): returns
+      ``(tiles joined with their feats lists, None)``.
+
+    ``tiles`` is the tile frame to scan, keyed like ``values``' tiles; by
+    default ``values.raw_meta``, else ``values.tiles``. The stack single
+    pass passes its layer-tagged frame of several same-grid layers.
     """
-    # CRS reconciliation: the reference auto-transforms the polygons to the
-    # raster CRS with a warning (R/exact_extract.R:360-377). We do the same
-    # for the closed-form pair (EPSG:4326 <-> EPSG:3857, core/crs.py); every
-    # other mismatched pair fails loudly instead of producing silently wrong
-    # answers on misaligned coordinates.
-    # ONE metadata job covers both the CRS audit and the broadcast-size
-    # guard: agg(count, collect_set(crs)) — the CRS audit must see every
-    # row's crs anyway (any single mismatched row invalidates the run), so
-    # folding count() into the same aggregate is free, and every zonal query
-    # now issues at most one auxiliary driver job before the kernel stage.
-    n_feats: int | None = None
-    check_crs = "crs" in feats.columns and bool(values.meta.crs)
-    if check_crs:
-        meta_row = feats.agg(
-            F.count(F.lit(1)).alias("n"),
-            # coalesce to "" so a null-crs row is visible in the set — rows
-            # with no CRS are conventionally assumed to already be in the
-            # raster CRS and must NOT be silently reprojected
-            F.collect_set(F.coalesce(F.col("crs"), F.lit(""))).alias("cset"),
-        ).first()
-        n_feats = meta_row["n"]
-        cset = set(meta_row["cset"])
-        has_null = "" in cset
-        fcrs = sorted(cset - {""})
-        bad = [c for c in fcrs if c != values.meta.crs]
-        if bad:
-            from ..core.crs import can_transform
-            from ..sources.features import transform_features
-
-            if has_null:
-                # mixed null-CRS and defined-CRS rows: transform_features
-                # reprojects EVERY row, which would silently move the
-                # null-CRS geometries (assumed already in the raster CRS)
-                raise ValueError(
-                    "feature table mixes rows with no CRS and rows in "
-                    f"{bad[0]!r}; cannot auto-transform without silently "
-                    "reprojecting the CRS-less rows — stamp or transform "
-                    "them explicitly first"
-                )
-            if len(set(bad)) == 1 and len(fcrs) == 1 and can_transform(
-                bad[0], values.meta.crs
-            ):
-                import warnings
-
-                warnings.warn(
-                    f"transforming features from {bad[0]!r} to the raster "
-                    f"CRS {values.meta.crs!r} (ref R/exact_extract.R:360-377)"
-                )
-                feats = transform_features(feats, bad[0], values.meta.crs)
-            else:
-                raise ValueError(
-                    f"feature CRS {bad[0]!r} does not match the raster CRS "
-                    f"{values.meta.crs!r} and no closed-form transform "
-                    "exists; transform the features to the raster CRS first "
-                    "(the reference transforms automatically via PROJ, "
-                    "R/exact_extract.R:360-377)"
-                )
-    if not broadcast_features:
-        return (
-            candidate_pairs(
-                values, feats, broadcast_features=False, salt_buckets=salt_buckets
-            ),
-            None,
-        )
+    feats, n_feats = reconcile_crs(values.meta, feats)
     # broadcast-size guard; the CRS audit's count, if any, saves a job
-    table = bounded_collect(
-        feats.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT, count=n_feats
-    )
-    if table is None:
-        return (
-            candidate_pairs(
-                values, feats, broadcast_features=True,
-                salt_buckets=salt_buckets,
-            ),
-            None,
+    table = None
+    if broadcast_features:
+        table = bounded_collect(
+            feats.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT, count=n_feats
         )
+    if table is None:
+        per_tile = tile_feature_lists(values, feats, salt_buckets)
+        if broadcast_features:
+            per_tile = F.broadcast(per_tile)
+        tiles = _tile_frame(values, tiles)
+        return tiles.join(per_tile, on=["tile_row", "tile_col"], how="inner"), None
     fb = FeatureBroadcast(table)
-    tile_side = values.raw_meta
-    if tile_side is None:
-        tile_side = values.tiles
+    tiles = _tile_frame(values, tiles)
     # driver-side tile pruning from feature bboxes (the reference's crop,
     # exact_extract.cpp:359-361): skip the filter when features blanket the
     # raster — scanning everything beats building a huge IN-set
@@ -401,7 +401,7 @@ def build_candidates(
             for tc in range(tc0, tc1 + 1):
                 keys.add((tr, tc))
     if not blanket and len(keys) < m.n_tile_rows * m.n_tile_cols:
-        spark = tile_side.sparkSession
+        spark = tiles.sparkSession
         # pandas/Arrow path => a true LocalTableScan: a python-list
         # createDataFrame becomes a 32-slice python RDD whose first
         # materialization costs one python-worker round-trip PER SLICE
@@ -415,11 +415,11 @@ def build_candidates(
                 }
             )
         )
-        tile_side = tile_side.join(
+        tiles = tiles.join(
             F.broadcast(keys_df), on=["tile_row", "tile_col"], how="inner"
         )
-    sc = tile_side.sparkSession.sparkContext
-    return tile_side, sc.broadcast(fb)
+    sc = tiles.sparkSession.sparkContext
+    return tiles, sc.broadcast(fb)
 
 
 def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
@@ -447,10 +447,13 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
 WEIGHT_BROADCAST_MAX_BYTES = 64 << 20
 
 
-def _weight_payload_bytes(wm) -> int:
-    """Upper-bound estimate of the weight raster's in-memory pixel payload
-    (8 bytes/cell float64), computable from metadata alone — no job."""
-    return int(wm.width) * int(wm.height) * 8
+def _weight_side(w: DataFrame, wm) -> DataFrame:
+    """``w``, hinted for broadcast while the weight raster's in-memory
+    pixel payload (8 bytes/cell float64, an upper bound from metadata
+    alone — no job) is at most WEIGHT_BROADCAST_MAX_BYTES."""
+    if int(wm.width) * int(wm.height) * 8 <= WEIGHT_BROADCAST_MAX_BYTES:
+        return F.broadcast(w)
+    return w
 
 
 def weight_disagg(values_meta, weights_meta) -> "tuple[int, int]":
@@ -487,26 +490,18 @@ def _attach_weights(cand: DataFrame, values: Raster, weights: Raster) -> DataFra
     size gate (see WEIGHT_BROADCAST_MAX_BYTES).
 
     Aligned fast path: when the weight raster shares the value raster's
-    grid AND tiling exactly, value tile (r, c) overlaps weight tile
-    (r, c) and nothing else — one equi-join on the tile index, no
-    explode/collect_list shuffle at all (the common case: weights
+    grid (``RasterMeta.same_grid``) AND tiling, value tile (r, c) overlaps
+    weight tile (r, c) and nothing else — one equi-join on the tile index,
+    no explode/collect_list shuffle at all (the common case: weights
     produced alongside values on one grid)."""
     wm = weights.meta
     vm = values.meta
-    aligned = (
-        wm.xmin == vm.xmin and wm.ymax == vm.ymax
-        and wm.dx == vm.dx and wm.dy == vm.dy
-        and wm.tile_w == vm.tile_w and wm.tile_h == vm.tile_h
-        and wm.width == vm.width and wm.height == vm.height
-    )
-    if aligned:
+    if vm.same_grid(wm) and (wm.tile_w, wm.tile_h) == (vm.tile_w, vm.tile_h):
         w1 = weights.tiles.select(
             "tile_row", "tile_col",
             F.array(_weight_tile()).alias("wtiles"),
         )
-        if _weight_payload_bytes(wm) <= WEIGHT_BROADCAST_MAX_BYTES:
-            w1 = F.broadcast(w1)
-        return cand.join(w1, on=["tile_row", "tile_col"], how="left")
+        return cand.join(_weight_side(w1, wm), on=["tile_row", "tile_col"], how="left")
     w = weights.tiles.select(
         F.col("tile_row").alias("w_tr"),
         F.col("tile_col").alias("w_tc"),
@@ -521,9 +516,7 @@ def _attach_weights(cand: DataFrame, values: Raster, weights: Raster) -> DataFra
     expanded = slim.withColumn("w_tr", F.explode(F.sequence(wr0, wr1))).withColumn(
         "w_tc", F.explode(F.sequence(wc0, wc1))
     )
-    if _weight_payload_bytes(wm) <= WEIGHT_BROADCAST_MAX_BYTES:
-        w = F.broadcast(w)
-    joined = expanded.join(w, on=["w_tr", "w_tc"], how="left")
+    joined = expanded.join(_weight_side(w, wm), on=["w_tr", "w_tc"], how="left")
     wlists = joined.groupBy("tile_row", "tile_col").agg(
         F.collect_list("wtile").alias("wtiles")
     )
@@ -538,7 +531,8 @@ def static_weight_lists(values_meta, weights: Raster) -> DataFrame:
     which Structured Streaming forbids before the final aggregate). Each
     weight tile enumerates the value tiles it overlaps (pure arithmetic on
     the value grid), then one STATIC groupBy collects the per-value-tile
-    weight lists; the streaming join is a stateless broadcast equi-join."""
+    weight lists, hinted for broadcast under ``_attach_weights``' size
+    gate; the streaming join is a stateless equi-join."""
     wt = weights.tiles.select(
         "xmin", "ymin", "xmax", "ymax",
         _weight_tile().alias("wtile"),
@@ -550,8 +544,11 @@ def static_weight_lists(values_meta, weights: Raster) -> DataFrame:
     expanded = wt.withColumn("tile_row", F.explode(F.sequence(vr0, vr1))).withColumn(
         "tile_col", F.explode(F.sequence(vc0, vc1))
     )
-    return expanded.groupBy("tile_row", "tile_col").agg(
-        F.collect_list("wtile").alias("wtiles")
+    return _weight_side(
+        expanded.groupBy("tile_row", "tile_col").agg(
+            F.collect_list("wtile").alias("wtiles")
+        ),
+        weights.meta,
     )
 
 

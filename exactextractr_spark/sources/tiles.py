@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.grid import Grid
+from ..core.grid import DEFAULT_COMPAT_TOL, Grid
 from ..core.png import decode_tile, encode_tile, phash64
 
 TILE_SCHEMA = T.StructType(
@@ -118,6 +118,21 @@ class RasterMeta:
     @property
     def grid(self) -> Grid:
         return Grid(self.xmin, self.ymin, self.xmax, self.ymax, self.dx, self.dy)
+
+    def same_grid(self, other: "RasterMeta") -> bool:
+        """Same origin, resolution and extent, within ``DEFAULT_COMPAT_TOL``
+        of a cell: the two rasters' cells, and so their row-major cell ids,
+        pair one to one. Tiling is not compared; callers that share tile
+        keys also compare ``(tile_w, tile_h)``."""
+        tx, ty = DEFAULT_COMPAT_TOL * self.dx, DEFAULT_COMPAT_TOL * self.dy
+        return (
+            abs(other.dx - self.dx) <= tx
+            and abs(other.dy - self.dy) <= ty
+            and abs(other.xmin - self.xmin) <= tx
+            and abs(other.ymax - self.ymax) <= ty
+            and abs(other.xmax - self.xmax) <= tx
+            and abs(other.ymin - self.ymin) <= ty
+        )
 
     def tile_grid(self, tile_row: int, tile_col: int) -> Grid:
         r0 = tile_row * self.tile_h

@@ -4,7 +4,9 @@
 - ``ingest.stream_image_features`` — continuous multimodal featurization
   (same Arrow kernel as batch, bit-parity)
 - ``zonal_stream.stream_zonal_stats`` — stateful zonal stats (algebraic,
-  weighted, frequency), bit-parity with batch
+  weighted, frequency), bit-parity with batch; candidates from the batch
+  ``build_candidates`` (CRS audit, feature broadcast or, above the
+  broadcast limit, the cover join)
 - ``dedup_stream.stream_exact_dedup`` — stateful dropDuplicates on the
   shared content key (optional watermark TTL)
 - ``similarity_stream.stream_cosine_topk`` — running per-query top-k via

@@ -24,20 +24,27 @@ back-fill as batch (``StatsPlan.finish``/``from_freq``,
 after N tiles is bit-identical to the batch answer over those N tiles,
 features with no facts included (test-asserted for both stat families).
 
+Candidates come through the batch door, ``zonal.build_candidates``: the
+same CRS audit (features in another CRS are auto-transformed or refused),
+then the feature broadcast with its tile pruning or, above the broadcast
+limit, the cover join. Both are stateless stream-static joins of the
+arriving tiles with static feature-side frames, so the stateful aggregate
+does not change with the strategy.
+
 Weighted stats stream too: the weight raster is STATIC, so its tiles are
 pre-grouped per value-tile key on the batch side
-(``zonal.static_weight_lists``) and attached to the streaming tiles with a
-stateless broadcast stream-static join — the moments schema already
-carries the weighted sums, so the stateful aggregate is unchanged.
+(``zonal.static_weight_lists``, size-gated for broadcast) and attached to
+the streaming tiles with a stateless stream-static join — the moments
+schema already carries the weighted sums, so the stateful aggregate is
+unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.stats import StatsPlan, with_all_features
-from ..sources.tiles import TILE_SCHEMA, RasterMeta, raw_tiles_with_meta
+from ..sources.tiles import TILE_SCHEMA, Raster, RasterMeta
 
 
 def stream_zonal_stats(
@@ -66,11 +73,8 @@ def stream_zonal_stats(
     there, which is the resumable-pipeline shape: the newest snapshot is
     always a consistent answer over every tile ingested so far.
     """
-    from ..operators._exec import bounded_collect
     from ..operators.zonal import (
-        BROADCAST_FEATURE_LIMIT,
-        FEATURE_COLUMNS,
-        FeatureBroadcast,
+        build_candidates,
         coverage_facts,
         static_weight_lists,
         weight_disagg,
@@ -87,44 +91,26 @@ def stream_zonal_stats(
             "raster — batch-only; resample the weights first"
         )
 
-    # the batch path's collect policy, but a refusal instead of a fallback:
-    # the streaming path has no cover join, so features must broadcast
-    table = bounded_collect(
-        features.select(*FEATURE_COLUMNS), BROADCAST_FEATURE_LIMIT
-    )
-    if table is None:
-        raise ValueError(
-            f"streaming zonal requires a broadcastable feature table "
-            f"(> {BROADCAST_FEATURE_LIMIT} rows found); the streaming path "
-            "has no raster-sequential cover-join fallback — partition the "
-            "feature set or use the batch operator"
-        )
-    feats_bc = spark.sparkContext.broadcast(FeatureBroadcast(table))
-
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-    tiles = raw_tiles_with_meta(raw, layer=meta.layer)
+    # the batch door: CRS audit, then the feature broadcast (tiles pruned
+    # by a stream-static join) or the cover join (a stream-static join
+    # with the static per-tile feature lists)
+    cand, feats_bc = build_candidates(Raster.from_tiles(raw, meta), features)
     if weights is not None:
-        from ..operators.zonal import (
-            WEIGHT_BROADCAST_MAX_BYTES,
-            _weight_payload_bytes,
-        )
-
+        # size-gated broadcast like the batch path: a large weight raster's
+        # pre-grouped lists join as a plain stream-static equi-join (still
+        # stateless) instead of an OOM-prone broadcast
         wlists = static_weight_lists(meta, weights)
-        # size-gate the broadcast hint exactly like the batch path: a large
-        # weight raster's pre-grouped lists join as a plain stream-static
-        # equi-join (still stateless) instead of an OOM-prone broadcast
-        if _weight_payload_bytes(weights.meta) <= WEIGHT_BROADCAST_MAX_BYTES:
-            wlists = F.broadcast(wlists)
-        tiles = tiles.join(wlists, on=["tile_row", "tile_col"], how="left")
+        cand = cand.join(wlists, on=["tile_row", "tile_col"], how="left")
     # the stateful aggregate merges the kernel's partials (complete mode);
     # freq state is bounded by |features| x |distinct values| (categorical
     # rasters; max_state_rows guards the continuous case loudly)
     emit = "freq" if plan.freq else "moments"
-    partials = coverage_facts(tiles, emit=emit, feats_bc=feats_bc, values_meta=meta)
+    partials = coverage_facts(cand, emit=emit, feats_bc=feats_bc, values_meta=meta)
     merged = plan.merge_freq(partials) if plan.freq else plan.merge_moments(partials)
 
     def _snapshot(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,7 +1,8 @@
-"""Oracle gate for the named-stat leaves: the zonal, stack, line and
-resample queries of ``__spark_entry__.queries()`` must match their DuckDB
-oracles (``oracle_sql()``) at sf0.01, as ``tools/check_oracles.py`` checks
-them. Skips when the generated sf0.01 tables are not next to the checkout."""
+"""Oracle gate for the leaves behind the zonal entry points: the zonal,
+stack, line, resample, coverage, candidate, rasterize, pixel and UDF
+queries of ``__spark_entry__.queries()`` must match their DuckDB oracles
+(``oracle_sql()``) at sf0.01, as ``tools/check_oracles.py`` checks them.
+Skips when the generated sf0.01 tables are not next to the checkout."""
 
 import os
 import subprocess
@@ -27,6 +28,13 @@ LEAVES = [
     "resample_sum",
     "resample_misaligned",
     "resample_mode",
+    "coverage_sparse",
+    "candidate_tiles",
+    "rasterize_argmax",
+    "pixels_xy",
+    "weighted_frac_long",
+    "udf_apply",
+    "line_lengths",
 ]
 
 

@@ -1100,27 +1100,46 @@ def test_streaming_image_features_matches_batch(spark, tmp_path):
 
 @pytest.mark.parametrize("site", ["build_candidates", "stack", "stream"])
 def test_feature_collect_sites_share_policy(spark, tmp_path, monkeypatch, site):
-    """Every driver-side feature collect is bounded by the same policy:
-    above BROADCAST_FEATURE_LIMIT, with a size estimate too large to fuse
-    the collect, build_candidates takes the cover join, the stack single
-    pass falls back to the per-layer loop and streaming zonal refuses
-    loudly (it has no cover-join fallback) — each without collecting a
-    single geometry to the driver."""
+    """Every zonal entry point takes its feature strategy from
+    build_candidates: above BROADCAST_FEATURE_LIMIT, with a size estimate
+    too large to fuse the collect, the cover join runs — for exact_extract,
+    the stack single pass and streaming zonal alike — without collecting a
+    single geometry to the driver, and each answer equals its reference."""
     from exactextractr_spark.operators import _exec, stack, zonal
     from exactextractr_spark.sources.features import features_from_wkt
-    from exactextractr_spark.sources.tiles import Raster, RasterMeta
+    from exactextractr_spark.sources.tiles import (
+        Raster,
+        RasterMeta,
+        tile_table_from_array,
+    )
     from exactextractr_spark.streaming.zonal_stream import stream_zonal_stats
 
     meta = RasterMeta("v", xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
-                      tile_w=4, tile_h=4)
+                      tile_w=2, tile_h=2)
     feats = features_from_wkt(
         spark,
         ["POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
          "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))",
-         "POLYGON ((2 2, 4 2, 4 4, 2 4, 2 2))"],
+         "POLYGON ((2 2, 4 2, 4 4, 2 4, 2 2))",
+         # outside the raster: no facts, still one row
+         "POLYGON ((9 9, 10 9, 10 10, 9 10, 9 9))"],
     )
     est = _exec.size_estimate(feats)
     assert est is not None and est > 0
+    arr = np.arange(1.0, 17.0).reshape(4, 4)
+    stats = ["count", "mean", "mode"]
+    # references, computed on the broadcast strategy before the limit drops
+    if site == "stack":
+        layers = [Raster.from_array(spark, arr * k, RasterMeta(
+            lay, xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
+            tile_w=2, tile_h=2)) for k, lay in ((1.0, "a"), (3.0, "b"))]
+        want = [r.asDict() for r in stack._stack_loop(layers, feats, stats).collect()]
+    elif site == "stream":
+        tiles = tile_table_from_array(spark, arr, meta)
+        src = str(tmp_path / "src")
+        tiles.coalesce(1).write.parquet(src)
+        want = [r.asDict() for r in
+                zonal.exact_extract(Raster.from_tiles(tiles, meta), feats, stats).collect()]
     monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
     monkeypatch.setattr(_exec, "_FUSED_COLLECT_MAX_BYTES", 4 * est - 1)
     # the concrete DataFrame class: PySpark 4 defines the collects there
@@ -1133,23 +1152,93 @@ def test_feature_collect_sites_share_policy(spark, tmp_path, monkeypatch, site):
             return _real(self, *a, **k)
 
         monkeypatch.setattr(SparkDF, name, recording)
-    arr = np.arange(1.0, 17.0).reshape(4, 4)
     if site == "build_candidates":
         _, fb = zonal.build_candidates(Raster.from_array(spark, arr, meta), feats)
         assert fb is None  # cover-join strategy chosen
     elif site == "stack":
-        layers = [Raster.from_array(spark, arr, RasterMeta(
-            lay, xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
-            tile_w=4, tile_h=4)) for lay in ("a", "b")]
-        assert stack._stack_single_pass(layers, feats, ["mean"]) is None
+        single = stack._stack_single_pass(layers, feats, stats)
+        assert single is not None  # the single pass runs on the cover join
+        assert [r.asDict() for r in single.collect()] == want
     else:
-        with pytest.raises(ValueError, match="broadcastable feature table"):
-            stream_zonal_stats(
-                spark, str(tmp_path / "nosrc"), feats, ["count"], meta=meta,
-                checkpoint_dir=str(tmp_path / "ck_guard"),
-                query_name="zs_guard",
-            )
+        q = stream_zonal_stats(
+            spark, src, feats, stats, meta=meta,
+            checkpoint_dir=str(tmp_path / "ck_cover"), query_name="zs_cover",
+        )
+        q.awaitTermination(180)
+        got = [r.asDict() for r in spark.table("zs_cover").orderBy("feature_id").collect()]
+        assert got == want
     assert geom_collects == []
+
+
+def test_zonal_entry_points_share_crs_audit(spark, tmp_path, monkeypatch):
+    """Features stamped with another CRS are audited the same way by every
+    zonal entry point: the 3x3 square's Web-Mercator image, stamped
+    EPSG:3857, is auto-transformed onto the EPSG:4326 rasters and gives
+    the square's answer on both strategies."""
+    import warnings
+
+    from exactextractr_spark.operators import stack, zonal
+    from exactextractr_spark.operators.coverage_op import coverage_fraction_raster
+    from exactextractr_spark.sources.features import (
+        features_from_wkt,
+        transform_features,
+    )
+    from exactextractr_spark.sources.tiles import (
+        Raster,
+        RasterMeta,
+        tile_table_from_array,
+    )
+    from exactextractr_spark.streaming.zonal_stream import stream_zonal_stats
+
+    sq = "POLYGON ((0.5 0.5, 2.5 0.5, 2.5 2.5, 0.5 2.5, 0.5 0.5))"
+
+    def meta(layer):
+        return RasterMeta(layer, xmin=0, ymax=3, dx=1, dy=1, width=3, height=3,
+                          tile_w=3, tile_h=3, crs="EPSG:4326")
+
+    arr = np.arange(1.0, 10.0).reshape(3, 3)
+    ta = tile_table_from_array(spark, arr, meta("a"))
+    a = Raster.from_tiles(ta, meta("a"))
+    b = Raster.from_array(spark, 2 * arr, meta("b"))
+    plain = features_from_wkt(spark, [sq])
+    merc = transform_features(
+        features_from_wkt(spark, [sq], crs="EPSG:4326"), "EPSG:4326", "EPSG:3857"
+    )
+    assert merc.first()["fxmin"] > 1000  # metres, far off the raster
+    src = str(tmp_path / "src")
+    ta.coalesce(1).write.parquet(src)
+    dense_want = {
+        crop: {(r["feature_id"], r["tile_row"], r["tile_col"]): r["cov_px"]
+               for r in coverage_fraction_raster(a, plain, crop=crop).collect()}
+        for crop in (True, False)
+    }
+    for limit in (zonal.BROADCAST_FEATURE_LIMIT, 0):  # broadcast, cover join
+        monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", limit)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            got = zonal.exact_extract(a, merc, ["mean"]).collect()[0]["mean"]
+            assert got == pytest.approx(5.0, rel=1e-9)
+            single = stack._stack_single_pass([a, b], merc, ["mean"])
+            assert single is not None
+            loop = stack._stack_loop([a, b], merc, ["mean"])
+            for df in (single, loop):
+                row = df.collect()[0]
+                assert row["mean.a"] == pytest.approx(5.0, rel=1e-9)
+                assert row["mean.b"] == pytest.approx(10.0, rel=1e-9)
+            q = stream_zonal_stats(
+                spark, src, merc, ["mean"], meta=meta("a"),
+                checkpoint_dir=str(tmp_path / f"ck{limit}"),
+                query_name=f"zs_crs{limit}",
+            )
+            q.awaitTermination(180)
+            got = spark.table(f"zs_crs{limit}").collect()[0]["mean"]
+            assert got == pytest.approx(5.0, rel=1e-9)
+            for crop in (True, False):
+                dense = {(r["feature_id"], r["tile_row"], r["tile_col"]): r["cov_px"]
+                         for r in coverage_fraction_raster(a, merc, crop=crop).collect()}
+                assert set(dense) == set(dense_want[crop])
+                for k, cov in dense.items():
+                    np.testing.assert_allclose(cov, dense_want[crop][k], atol=1e-9)
 
 
 def test_hamming_pairs_rejects_lossy_bands(spark):

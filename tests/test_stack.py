@@ -148,12 +148,20 @@ def test_summarize_df_grid_mismatch_raises(spark):
     from exactextractr_spark.operators.stack import summarize_df_pixels
 
     a = Raster.from_array(spark, np.ones((3, 3)), meta33("a"))
+    feats = features_from_wkt(spark, [SQ_WKT])
     off = RasterMeta(layer="b", xmin=0.5, ymax=3, dx=1, dy=1, width=3, height=3,
                      tile_w=3, tile_h=3)
-    b = Raster.from_array(spark, np.ones((3, 3)), off)
-    feats = features_from_wkt(spark, [SQ_WKT])
-    with pytest.raises(ValueError, match="one grid"):
-        summarize_df_pixels([a, b], feats)
+    # same origin and resolution, one column wider: row-major cell ids
+    # differ between the layers, so a (feature_id, cell) join would pair
+    # the wrong pixels
+    wide = RasterMeta(layer="b", xmin=0, ymax=3, dx=1, dy=1, width=4, height=3,
+                      tile_w=4, tile_h=3)
+    for meta in (off, wide):
+        b = Raster.from_array(
+            spark, np.ones((meta.height, meta.width)) + 100.0, meta
+        )
+        with pytest.raises(ValueError, match="one grid"):
+            summarize_df_pixels([a, b], feats)
 
 
 def test_colname_fun(spark):
@@ -240,12 +248,11 @@ def test_stack_single_pass_equivalence(spark):
     assert fast is not None  # preconditions hold -> fast path taken
     got = {r["feature_id"]: r.asDict() for r in fast.collect()}
 
-    # force the per-layer loop explicitly (the oracle)
+    # the per-layer loop is the oracle
     ra2 = Raster.from_array(spark, arr_a, meta_a)
     rb2 = Raster.from_array(spark, arr_b, meta_b)
     want = {r["feature_id"]: r.asDict() for r in
-            exact_extract_stack([ra2, rb2], feats, stats,
-                                single_pass=False).collect()}
+            stack_mod._stack_loop([ra2, rb2], feats, stats).collect()}
     assert set(got) == set(want) == {1, 2}
     for fid in want:
         assert set(got[fid]) == set(want[fid]), (set(got[fid]), set(want[fid]))
@@ -292,8 +299,7 @@ def test_stack_single_pass_freq_equivalence(spark):
     ra2 = Raster.from_array(spark, arr_a, meta_a)
     rb2 = Raster.from_array(spark, arr_b, meta_b)
     want = {r["feature_id"]: r.asDict() for r in
-            exact_extract_stack([ra2, rb2], feats, stats,
-                                single_pass=False).collect()}
+            stack_mod._stack_loop([ra2, rb2], feats, stats).collect()}
     assert set(got) == set(want) == {1, 2}
     for fid in want:
         assert set(got[fid]) == set(want[fid]), (set(got[fid]), set(want[fid]))
@@ -307,8 +313,8 @@ def test_stack_single_pass_freq_equivalence(spark):
 
 def test_stack_union_single_pass_equivalence(spark):
     """Layers in SEPARATE tile tables on one grid: the unioned single-scan
-    fast path must be taken and equal the forced per-layer loop
-    bit-for-bit (incl. freq stats)."""
+    fast path must be taken and equal the per-layer loop bit-for-bit
+    (incl. freq stats)."""
     from exactextractr_spark.operators import stack as stack_mod
 
     arr_a = np.arange(1, 37, dtype=np.float64).reshape(6, 6)
@@ -332,8 +338,7 @@ def test_stack_union_single_pass_equivalence(spark):
         assert fast is not None  # the union path engaged
         got = {r["feature_id"]: r.asDict() for r in fast.collect()}
         want = {r["feature_id"]: r.asDict() for r in
-                exact_extract_stack([ra, rb], feats, stats,
-                                    single_pass=False).collect()}
+                stack_mod._stack_loop([ra, rb], feats, stats).collect()}
         assert set(got) == set(want) == {1, 2}
         for fid in want:
             assert set(got[fid]) == set(want[fid])
@@ -351,6 +356,15 @@ def test_stack_union_single_pass_equivalence(spark):
         [ra, rb_dup], feats, ["mean"], weights=None, full_colnames=False,
         colname_fun=None,
     ) is None
+    # one grid, but tiled 2x2 instead of 3x3: the single pass reads the
+    # first layer's tile keys, so it declines and the loop runs
+    rb_t2 = Raster.from_array(spark, arr_b, RasterMeta(
+        "b", xmin=0, ymax=6, dx=1, dy=1, width=6, height=6, tile_w=2, tile_h=2))
+    stats = ["mean", "sum", "count", "mode"]
+    assert stack_mod._stack_single_pass([ra, rb_t2], feats, stats) is None
+    got = [r.asDict() for r in exact_extract_stack([ra, rb_t2], feats, stats).collect()]
+    want = [r.asDict() for r in stack_mod._stack_loop([ra, rb_t2], feats, stats).collect()]
+    assert got == want
 
 
 def test_nonpolygonal_feature_rejected_on_areal_path(spark):
