@@ -190,11 +190,10 @@ def coverage_fraction_raster(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..core import geom as G
     from ..core.coverage import coverage_fraction
     from ..core.grid import Grid
 
-    from .zonal import FEATURE_COLUMNS, reconcile_crs
+    from .zonal import FEATURE_COLUMNS, TileFeatures, reconcile_crs
 
     if crop:
         # the cover join: every tile a feature bbox reaches, with its list
@@ -223,11 +222,10 @@ def coverage_fraction_raster(
                 "would emit a dense (feature x tile) product; use "
                 "crop=True (sparse) or restrict the feature set"
             )
-        all_keys = values.raw_meta if values.raw_meta is not None else values.tiles
         feats_l = features.select(F.struct(*FEATURE_COLUMNS).alias("_feat")).agg(
             F.collect_list("_feat").alias("feats")
         )
-        cand = all_keys.select(
+        cand = values.scan.select(
             "tile_row", "tile_col", "xmin", "ymin", "xmax", "ymax",
             "dx", "dy", "nrows", "ncols",
         ).crossJoin(F.broadcast(feats_l))
@@ -244,12 +242,14 @@ def coverage_fraction_raster(
     )
 
     def _dense(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # each feature's WKB is parsed once per partition, not per tile
+        features = TileFeatures()
         for pdf in batches:
             rows = []
             for row in pdf.itertuples(index=False):
                 tile_grid = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
                 for ft in row.feats:
-                    geom = G.from_wkb(bytes(ft["geom"]))
+                    geom = features.geom(bytes(ft["geom"]))
                     cov = coverage_fraction(tile_grid, geom)
                     rows.append(
                         {

@@ -3,7 +3,9 @@
 Training-data-pipeline operators over the ``documents`` table. Exact dedup
 is a pure hash-groupBy (one shuffle, JVM-side). Near-dup pipelines follow
 the standard shingle → signature → band-bucket → bucket-join → verify shape,
-with deterministic hash families so runs are reproducible.
+with deterministic hash families so runs are reproducible. The hamming
+join behind SimHash and pHash dedup buckets on ``hash & mask`` for the bit
+masks of ``_band_masks``, which make it pigeonhole-exact (recall 1.0).
 
 Kernel design (100-TB shape): all per-document work is vectorized numpy —
 token hashing is FNV-1a over the token bytes, folded column-wise across
@@ -503,93 +505,65 @@ def ngram_jaccard_pairs(
     )
 
 
+def _band_masks(max_hamming: int) -> "list[int]":
+    """The bit masks of the hamming join's band keys: two hashes are
+    candidates when ``a & m == b & m`` for some mask ``m`` (the permuted
+    tables of Manku et al., "Detecting near-duplicates for web crawling",
+    WWW 2007). The only place the banding scheme is chosen.
+
+    The 64 bit positions split into d+1 contiguous bands (band b covers
+    ``64*b//(d+1)`` up to ``64*(b+1)//(d+1)``). d differing bits can touch
+    at most d of them, so some band is equal on every true pair: one mask
+    per band is pigeonhole-EXACT. While ``(d+1)**2 <= 64`` each band's
+    64-w complement bits, in increasing bit order, split again into d+1
+    contiguous sub-bands, and each mask is a band plus one sub-band: still
+    exact by a double pigeonhole (some band holds none of the <= d
+    differing bits, so its complement holds all of them and some sub-band
+    of it holds none), while hot band buckets of near-miss hashes split
+    about 2^12 ways. Measured 49.4M -> 10.4M candidate join rows on the
+    sf1.0 simhash table, for (d+1)**2 keys per row instead of d+1. The
+    quadratic key fan-out caps itself: past 64 keys per row (d > 7) the
+    explode cost outgrows the bucket-splitting win, so the masks are the
+    d+1 bands alone."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in 0..63, got {max_hamming}")
+    n = max_hamming + 1
+    bands = [list(range(64 * b // n, 64 * (b + 1) // n)) for b in range(n)]
+    if n * n > 64:
+        return [sum(1 << p for p in band) for band in bands]
+    masks = []
+    for band in bands:
+        rest = [p for p in range(64) if p not in band]
+        for sb in range(n):
+            sub = rest[len(rest) * sb // n: len(rest) * (sb + 1) // n]
+            masks.append(sum(1 << p for p in band + sub))
+    return masks
+
+
 def hamming_pairs(
     df: DataFrame,
     *,
     id_col: str = "doc_id",
     hash_col: str = "simhash",
     max_hamming: int = 3,
-    bands: "int | None" = None,
 ) -> DataFrame:
     """All pairs of rows whose 64-bit ``hash_col`` values differ in at most
-    ``max_hamming`` bits, via a banded equi-join: the hash is split into
-    ``bands`` contiguous bit bands and candidates are pairs sharing at least
-    one exact band. With ``bands > max_hamming`` (the default, d+1) this is
-    EXACT by pigeonhole — d differing bits can corrupt at most d bands — so
-    unlike MinHash-LSH there is no recall loss. The join shuffles only
-    (id, band_idx, band_val) triples, never hash payload pairs; the exact
-    ``bit_count(xor)`` filter is JVM-side. Returns (id_a, id_b, hamming)
-    with id_a < id_b.
-
-    When ``bands`` is left at the default, candidates come from TWO-LEVEL
-    banding: for each primary band, the 64-w complementary bits are split
-    into another d+1 sub-bands, and the bucket key is (band, band_val,
-    sub_band, sub_val). Still exact by a double pigeonhole — some primary
-    band has 0 of the ≤d differing bits, and the complement (which then
-    holds all ≤d of them) has some sub-band with 0 — while hot primary
-    buckets of near-miss hashes split ~2^12 ways: measured 49.4M → 10.4M
-    candidate join rows on the sf1.0 simhash table for (d+1)² keys per
-    row instead of d+1. The quadratic key fan-out caps itself: past
-    (d+1)² > 64 keys per row (d > 7) the explode cost outgrows the
-    bucket-splitting win and the default reverts to one-level. An
-    explicit ``bands`` always keeps the classic one-level scheme (callers
-    pinning band structure get exactly that)."""
-    two_level = bands is None and (max_hamming + 1) ** 2 <= 64
-    if bands is None:
-        bands = max_hamming + 1
-    if bands < 1 or bands > 64:
-        raise ValueError("bands must be in 1..64")
-    if bands <= max_hamming:
-        # d differing bits can corrupt up to d bands: with bands <= d a
-        # true pair can miss every band bucket, silently breaking the
-        # pigeonhole-exactness (recall 1.0) this function advertises
-        raise ValueError(
-            f"bands={bands} <= max_hamming={max_hamming} breaks the "
-            "pigeonhole guarantee; use bands >= max_hamming + 1"
-        )
+    ``max_hamming`` bits, via a banded equi-join: every row explodes into
+    one key ``(i, hash & mask_i)`` per mask of :func:`_band_masks`, and
+    candidates are pairs sharing a key. The masks are pigeonhole-EXACT for
+    every ``max_hamming``, so unlike MinHash-LSH there is no recall loss.
+    The join shuffles only (id, hash, key) rows, never hash payload pairs;
+    the exact ``bit_count(xor)`` filter is JVM-side. Returns
+    (id_a, id_b, hamming) with id_a < id_b."""
     h = F.col(hash_col).cast("long")
-    keys = []
-    for b in range(bands):
-        s = 64 * b // bands
-        w = 64 * (b + 1) // bands - s
-        # arithmetic-vs-logical shift agree on the masked low w bits;
-        # w == 64 (bands == 1) is the whole hash — no mask fits a long
-        if w == 64:
-            val = h
-        else:
-            val = F.shiftrightunsigned(h, s).bitwiseAND(F.lit((1 << w) - 1))
-        cw = 64 - w  # complementary bits outside [s, s+w)
-        if not two_level or cw == 0:
-            keys.append(
-                F.struct(
-                    F.lit(b).alias("bi"), val.alias("bv"),
-                    F.lit(0).alias("sbi"), F.lit(0).cast("long").alias("sbv"),
-                )
-            )
-            continue
-        # complement value: bits below s, then bits above s+w. Java shift
-        # counts are taken mod 64, so the s+w == 64 (last band) case must
-        # not emit shiftrightunsigned(h, 64) — that would mix the band's
-        # own bits into the complement and silently break recall.
-        low = h.bitwiseAND(F.lit((1 << s) - 1)) if s else F.lit(0).cast("long")
-        if s + w >= 64:
-            comp = low
-        else:
-            comp = low.bitwiseOR(
-                F.shiftleft(F.shiftrightunsigned(h, s + w), s)
-            )
-        for sb in range(bands):
-            ss = cw * sb // bands
-            sw = cw * (sb + 1) // bands - ss
-            sv = F.shiftrightunsigned(comp, ss).bitwiseAND(
-                F.lit((1 << sw) - 1)
-            )
-            keys.append(
-                F.struct(
-                    F.lit(b).alias("bi"), val.alias("bv"),
-                    F.lit(sb).alias("sbi"), sv.alias("sbv"),
-                )
-            )
+    keys = [
+        F.struct(
+            F.lit(i).alias("i"),
+            # masks >= 2^63 as their int64 bit pattern
+            h.bitwiseAND(F.lit(m - (1 << 64) if m >= 1 << 63 else m)).alias("v"),
+        )
+        for i, m in enumerate(_band_masks(max_hamming))
+    ]
     ex = df.select(
         F.col(id_col).alias("_id"), h.alias("_h"), F.explode(F.array(*keys)).alias("k")
     )
@@ -614,22 +588,20 @@ def hamming_dedup(
     id_col: str = "doc_id",
     hash_col: str = "simhash",
     max_hamming: int = 3,
-    bands: "int | None" = None,
 ) -> DataFrame:
     """Greedy-by-id near-duplicate dedup on a 64-bit hash column (SimHash
     for documents, perceptual hash for images): a row is dropped when any
     smaller-id row is within ``max_hamming`` bits; survivors carry
     ``near_dups`` = their count of dropped larger-id neighbors. Same keep
-    rule as :func:`embedding_dedup`, and — because the banded candidate
-    join is pigeonhole-exact — fully deterministic and SQL-expressible."""
+    rule as :func:`embedding_dedup`, and — because the candidate join of
+    :func:`hamming_pairs` is pigeonhole-exact for every ``max_hamming`` —
+    fully deterministic and SQL-expressible."""
     # the hash frame feeds both the candidate join and the survivor
     # anti-join; when it ends in a Python signature stage (simhash64),
     # checkpointing computes that stage ONCE instead of per consumer.
     # Bounded: 16 bytes/row regardless of document size.
     df = df.select(id_col, hash_col).localCheckpoint(eager=True)
-    pairs = hamming_pairs(
-        df, id_col=id_col, hash_col=hash_col, max_hamming=max_hamming, bands=bands
-    )
+    pairs = hamming_pairs(df, id_col=id_col, hash_col=hash_col, max_hamming=max_hamming)
     return _greedy_keep(df, pairs, id_col)
 
 
@@ -672,13 +644,13 @@ def image_phash_dedup(
     id_col: str = "image_id",
     phash_col: str = "phash",
     max_hamming: int = 3,
-    bands: "int | None" = None,
 ) -> DataFrame:
     """Perceptual-hash image dedup: reuse the table's ``phash`` column when
     present (the tile table carries one, sources/tiles.py), otherwise
     decode + hash via :func:`multimodal.image_features`; then the exact
-    banded hamming dedup. The decode (when needed) is the only Python
-    stage; the dedup itself never leaves the JVM."""
+    :func:`hamming_dedup` (band-mask candidate join, greedy-by-id keep).
+    The decode (when needed) is the only Python stage; the dedup itself
+    never leaves the JVM."""
     if phash_col not in images.columns:
         from .multimodal import image_features
 
@@ -688,7 +660,6 @@ def image_phash_dedup(
         id_col=id_col,
         hash_col=phash_col,
         max_hamming=max_hamming,
-        bands=bands,
     )
 
 

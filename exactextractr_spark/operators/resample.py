@@ -164,8 +164,7 @@ def resample_facts(
                     }
                 )
 
-    source = src.raw_meta if src.raw_meta is not None else src.tiles
-    return source.mapInPandas(_facts, _FACTS)
+    return src.scan.mapInPandas(_facts, _FACTS)
 
 
 def exact_resample(

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ._exec import flat_matrix, spread
+from .dedup import _fnv1a_batch
 
 
 def _vectors(arr, col: str) -> np.ndarray:
@@ -138,6 +139,18 @@ def score_against_queries(
     return _with_cos(joined, vec_col, "_qvec", ["qid", "item_id"])
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored items per query: ``rank`` by descending
+    ``cos_sim``, ties to the smaller ``item_id``. Returns
+    (qid, item_id, cos_sim, rank)."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("item_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "item_id", "cos_sim", "rank")
+    )
+
+
 def cosine_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -153,30 +166,13 @@ def cosine_topk(
     scored = score_against_queries(
         items, queries, id_col=id_col, vec_col=vec_col, qid_col=qid_col
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "item_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_signature(dim: int, bits: int, seed: int = 42) -> np.ndarray:
     """Deterministic random hyperplanes for vector SimHash bucketing."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((bits, dim))
-
-
-_FNV_OFF = 0xCBF29CE484222325
-_FNV_PRIME = 0x100000001B3
-_M64 = 1 << 64
-
-
-def _fnv1a64(data: bytes) -> int:
-    h = _FNV_OFF
-    for c in data:
-        h = ((h ^ c) * _FNV_PRIME) % _M64
-    return h
 
 
 def fnv_rademacher_planes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -186,12 +182,10 @@ def fnv_rademacher_planes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
     bit-exactly (DuckDB mirrors the byte fold; see __spark_entry__). ±1
     entries are a standard LSH choice (Achlioptas-style sparse/sign
     projections preserve the cosine collision probability)."""
-    P = np.empty((bits, dim), dtype=np.float64)
-    for b in range(bits):
-        for d in range(dim):
-            h = _fnv1a64(f"hp{seed}:{b}:{d}".encode("ascii"))
-            P[b, d] = 1.0 if (h & 1) else -1.0
-    return P
+    h = _fnv1a_batch(
+        [f"hp{seed}:{b}:{d}".encode("ascii") for b in range(bits) for d in range(dim)]
+    ).reshape(bits, dim)
+    return np.where(h & np.uint64(1), 1.0, -1.0)
 
 
 def band_key_udf(
@@ -261,12 +255,7 @@ def lsh_cosine_topk(
         ),
         vec_col, "_qvec", ["qid", "item_id"],
     ).dropDuplicates(["qid", "item_id"])
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("item_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "item_id", "cos_sim", "rank")
-    )
+    return _top_k(cand, k)
 
 
 def train_ivf_centroids(
@@ -376,9 +365,4 @@ def ivf_cosine_topk(
         ),
         vec_col, "_qvec", ["qid", "item_id"],
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("item_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "item_id", "cos_sim", "rank")
-    )
+    return _top_k(cand, k)

@@ -332,14 +332,6 @@ def reconcile_crs(values_meta, feats: DataFrame) -> "tuple[DataFrame, int | None
     return feats, meta_row["n"]
 
 
-def _tile_frame(values: Raster, tiles: "DataFrame | None") -> DataFrame:
-    """``tiles`` if given, else the raster's raw tiles with their grid
-    metadata, else its decoded tiles."""
-    if tiles is None:
-        tiles = values.raw_meta
-    return values.tiles if tiles is None else tiles
-
-
 def build_candidates(
     values: Raster,
     feats: DataFrame,
@@ -360,8 +352,8 @@ def build_candidates(
       ``(tiles joined with their feats lists, None)``.
 
     ``tiles`` is the tile frame to scan, keyed like ``values``' tiles; by
-    default ``values.raw_meta``, else ``values.tiles``. The stack single
-    pass passes its layer-tagged frame of several same-grid layers.
+    default ``values.scan``. The stack single pass passes its layer-tagged
+    frame of several same-grid layers.
     """
     feats, n_feats = reconcile_crs(values.meta, feats)
     # broadcast-size guard; the CRS audit's count, if any, saves a job
@@ -374,10 +366,10 @@ def build_candidates(
         per_tile = tile_feature_lists(values, feats, salt_buckets)
         if broadcast_features:
             per_tile = F.broadcast(per_tile)
-        tiles = _tile_frame(values, tiles)
+        tiles = values.scan if tiles is None else tiles
         return tiles.join(per_tile, on=["tile_row", "tile_col"], how="inner"), None
     fb = FeatureBroadcast(table)
-    tiles = _tile_frame(values, tiles)
+    tiles = values.scan if tiles is None else tiles
     # driver-side tile pruning from feature bboxes (the reference's crop,
     # exact_extract.cpp:359-361): skip the filter when features blanket the
     # raster — scanning everything beats building a huge IN-set
@@ -565,7 +557,8 @@ class TileFeatures:
     list, refined by the exact bbox test (the cover is tile-granular).
     ``inclusive`` closes the bbox test for lines, whose degenerate bboxes
     can lie exactly on a tile edge. Cover-join geometries are parsed once
-    per worker into a size-capped cache."""
+    per worker into a size-capped cache, which ``geom`` also serves to
+    the dense coverage kernel."""
 
     GEOM_CACHE_MAX = 4096
 
@@ -574,7 +567,8 @@ class TileFeatures:
         self.inclusive = inclusive
         self._geoms: dict[bytes, object] = {}
 
-    def _geom(self, wkb: bytes):
+    def geom(self, wkb: bytes):
+        """The parsed geometry of ``wkb``, through the cache."""
         geom = self._geoms.get(wkb)
         if geom is None:
             if len(self._geoms) >= self.GEOM_CACHE_MAX:
@@ -598,7 +592,7 @@ class TileFeatures:
                 outside = (ft["fxmin"] >= row.xmax or ft["fxmax"] <= row.xmin
                            or ft["fymin"] >= row.ymax or ft["fymax"] <= row.ymin)
             if not outside:
-                yield (ft["feature_id"], self._geom(bytes(ft["geom"])),
+                yield (ft["feature_id"], self.geom(bytes(ft["geom"])),
                        ft["fxmin"], ft["fymin"], ft["fxmax"], ft["fymax"])
 
 

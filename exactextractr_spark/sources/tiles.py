@@ -392,6 +392,13 @@ class Raster:
             return None
         return raw_tiles_with_meta(self._raw, layer=self.meta.layer)
 
+    @property
+    def scan(self) -> DataFrame:
+        """The frame tile kernels scan: the raw tiles with JVM-parsed grid
+        metadata (decoded inside the kernel), else the decoded tiles."""
+        raw = self.raw_meta
+        return self.tiles if raw is None else raw
+
     def with_layer(self, layer: str) -> "Raster":
         src = self._raw if self._raw is not None else self._decoded
         r = Raster(src, replace(self.meta, layer=layer), decoded=self._raw is None)

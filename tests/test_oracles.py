@@ -1,6 +1,8 @@
-"""Oracle gate for the leaves behind the zonal entry points: the zonal,
-stack, line, resample, coverage, candidate, rasterize, pixel and UDF
-queries of ``__spark_entry__.queries()`` must match their DuckDB oracles
+"""Oracle gate for the leaves behind the zonal entry points and the
+hamming and cosine joins: the zonal, stack, line, resample, coverage,
+candidate, rasterize, pixel and UDF queries, the SimHash and pHash dedup
+queries and the brute-force, LSH and IVF cosine top-k queries of
+``__spark_entry__.queries()`` must match their DuckDB oracles
 (``oracle_sql()``) at sf0.01, as ``tools/check_oracles.py`` checks them.
 Skips when the generated sf0.01 tables are not next to the checkout."""
 
@@ -35,6 +37,11 @@ LEAVES = [
     "weighted_frac_long",
     "udf_apply",
     "line_lengths",
+    "simhash_dedup",
+    "image_phash_dedup",
+    "lsh_cosine",
+    "cosine_topk",
+    "ivf_cosine",
 ]
 
 

@@ -256,9 +256,8 @@ def test_text_stats(spark, docs):
 
 
 def test_hamming_pairs_exact_vs_bruteforce(spark):
-    """bands = d+1 makes the banded join pigeonhole-EXACT: it must produce
-    exactly the brute-force pair set, including hashes that straddle the
-    sign bit."""
+    """The band-mask join is pigeonhole-EXACT: it must produce exactly the
+    brute-force pair set, including hashes that straddle the sign bit."""
     from exactextractr_spark.operators.dedup import hamming_pairs
 
     rng = np.random.default_rng(3)
@@ -274,14 +273,13 @@ def test_hamming_pairs_exact_vs_bruteforce(spark):
     df = spark.createDataFrame(
         [(i, int(h)) for i, h in enumerate(hashes)], ["doc_id", "simhash"]
     )
-    # d in (0, 2, 3, 6) exercises the default TWO-LEVEL banding incl.
-    # uneven sub-band widths (d=6 -> 7 primary bands of 9-10 bits, 54-55
-    # complement bits split 7 ways); explicit bands pins the one-level
-    # scheme — both must be pigeonhole-exact
-    for d, bands in ((0, None), (2, None), (3, None), (6, None), (3, 4), (3, 8)):
+    # d in (0, 2, 3, 6, 7) takes the two-level masks incl. uneven sub-band
+    # widths (d=6 -> 7 bands of 9-10 bits, 54-55 complement bits split 7
+    # ways) and the 64-mask boundary (d=7); d=8 takes the 9 one-level masks
+    for d in (0, 2, 3, 6, 7, 8):
         got = {
             (r["id_a"], r["id_b"], r["hamming"])
-            for r in hamming_pairs(df, max_hamming=d, bands=bands).collect()
+            for r in hamming_pairs(df, max_hamming=d).collect()
         }
         want = set()
         for i in range(len(hashes)):
@@ -289,7 +287,7 @@ def test_hamming_pairs_exact_vs_bruteforce(spark):
                 ham = bin((int(hashes[i]) ^ int(hashes[j])) & (2**64 - 1)).count("1")
                 if ham <= d:
                     want.add((i, j, ham))
-        assert got == want, (d, bands, got ^ want)
+        assert got == want, (d, got ^ want)
 
 
 def test_image_phash_dedup_finds_duplicate_tiles(spark):
@@ -483,10 +481,11 @@ def test_lsh_cosine_recall(spark):
 def test_fnv_rademacher_planes_spec():
     """Plane entries are ±1 signs of FNV-1a('hp{seed}:{b}:{d}') parity —
     pinned so the DuckDB oracle in __spark_entry__ stays in lockstep."""
-    from exactextractr_spark.operators.similarity import (
-        _fnv1a64,
-        fnv_rademacher_planes,
-    )
+    from exactextractr_spark.operators.dedup import _fnv1a_batch
+    from exactextractr_spark.operators.similarity import fnv_rademacher_planes
+
+    def _fnv1a64(data: bytes) -> int:
+        return int(_fnv1a_batch([data])[0])
 
     # FNV-1a known answer: empty input is the offset basis
     assert _fnv1a64(b"") == 0xCBF29CE484222325
@@ -1241,14 +1240,33 @@ def test_zonal_entry_points_share_crs_audit(spark, tmp_path, monkeypatch):
                     np.testing.assert_allclose(cov, dense_want[crop][k], atol=1e-9)
 
 
-def test_hamming_pairs_rejects_lossy_bands(spark):
-    """bands <= max_hamming silently breaks the pigeonhole recall-1.0
-    guarantee hamming_pairs advertises — must be a loud ValueError."""
+def test_hamming_pairs_rejects_out_of_range_max_hamming(spark):
+    """A 64-bit hash has no band masks for max_hamming outside 0..63: a
+    loud ValueError, not a silently lossy join."""
     from exactextractr_spark.operators.dedup import hamming_pairs
 
     df = spark.createDataFrame([(1, 7), (2, 4)], "doc_id long, simhash long")
-    with pytest.raises(ValueError, match="pigeonhole"):
-        hamming_pairs(df, max_hamming=3, bands=3)
+    for d in (-1, 64):
+        with pytest.raises(ValueError, match="max_hamming"):
+            hamming_pairs(df, max_hamming=d)
+
+
+def test_band_masks_pigeonhole():
+    """(d+1)**2 two-level masks while that is at most 64, else the d+1
+    bands; and for any set of at most d differing bit positions some mask
+    is disjoint from it, so a true pair always shares a key."""
+    from exactextractr_spark.operators.dedup import _band_masks
+
+    rng = np.random.default_rng(12)
+    for d in range(13):
+        masks = _band_masks(d)
+        n = d + 1
+        assert len(masks) == (n * n if n * n <= 64 else n), d
+        assert all(0 < m < 1 << 64 for m in masks), d
+        for _ in range(2000):
+            flipped = rng.choice(64, size=rng.integers(0, d + 1), replace=False)
+            diff = sum(1 << int(p) for p in flipped)
+            assert any(m & diff == 0 for m in masks), (d, sorted(flipped))
 
 
 def test_with_cos_null_zero_norm_semantics(spark):
