@@ -312,8 +312,19 @@ def cell_lengths(
     bottom/right edge belongs to the neighboring grid — EXCEPT when that
     edge is the raster's outer edge (``closed_bottom``/``closed_right``,
     the default for a standalone grid), where it clamps inward. Tiled
-    callers pass the flags so a boundary line is counted exactly once."""
+    callers pass the flags so a boundary line is counted exactly once.
+
+    A polygonal or point geometry raises (the mirror of
+    ``coverage_fraction``'s refusal of lines): it has no traversal length,
+    and reporting none would read as a line that misses the raster."""
     reject_mixed_collection(geom)
+    if not geom.linestrings() and (
+        geom.polygons() or geom.kind in ("Point", "MultiPoint")
+    ):
+        raise ValueError(
+            f"geometry of kind {geom.kind!r} is not linear; line stats "
+            "need linestrings — use exact_extract for polygons"
+        )
     nrows, ncols = grid.nrows, grid.ncols
     out = np.zeros((nrows, ncols), dtype=np.float64)
     for line in geom.linestrings():

@@ -1,10 +1,17 @@
-"""``coverage_fraction`` operator — the coverage raster itself as a table.
+"""``coverage_fraction`` operator — the coverage raster itself as a table —
+and the LineString operators.
 
 Reference: ``R/coverage_fraction.R:17-79`` + ``src/coverage_fraction.cpp:
-27-89``. Output is the sparse long form (feature_id, cell, row, col, x, y,
-cov) — the fact table every stat aggregates over; ``crop=True`` restricts to
-feature-bbox tiles, ``crop=False`` semantics (0-filled full extent) are
-recovered by densifying against the full cell universe downstream.
+27-89``. ``coverage_fraction_df`` is the sparse long form (feature_id, cell,
+cov[, x, y]) — the fact table every stat aggregates over;
+``coverage_fraction_raster`` the dense per-(feature, tile) blocks, with
+``crop=False`` emitting the 0-filled full extent.
+
+The LineString operators (``line_cell_lengths_df``, ``exact_extract_lines``)
+are the reference CLI's linear coverage (raster_cell_intersection.cpp:
+250-259): the traversal length per cell takes the place of the covered
+fraction. They and ``coverage_fraction_df`` run the one tile kernel,
+``zonal.coverage_facts``; only the dense form has a kernel of its own.
 """
 
 from __future__ import annotations
@@ -12,8 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tiles import Raster, tile_pixels
-from .zonal import build_candidates, coverage_facts
+from ..plans.stats import StatsPlan
+from ..sources.tiles import Raster
+from .zonal import _kernel_stats, build_candidates, coverage_facts
 
 
 def coverage_fraction_df(
@@ -47,91 +55,15 @@ def line_cell_lengths_df(
     linear analog of coverage (raster_cell_intersection.cpp:250-259; the
     CLI accepts lines, the R API does not). Output: one row per
     (feature, traversed cell) with the cell's value and the length of the
-    line inside that cell; stats over lines weight by length the way areal
-    stats weight by coverage fraction."""
-    return _line_cell_lengths(values, features, broadcast_features)[0]
-
-
-def _line_cell_lengths(values: Raster, features: DataFrame, broadcast_features: bool):
-    """``line_cell_lengths_df`` and the feature broadcast it ran with (None
-    on the cover-join strategy)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..core.coverage import cell_lengths
-    from ..core.grid import Grid
-
-    from .zonal import TileFeatures
-
+    line inside that cell, from the coverage kernel's line cover stage
+    (``coverage_facts(linear=True)``). Nodata cells stay, with v = NaN;
+    stats over lines skip them and weight by length the way areal stats
+    weight by coverage fraction."""
     cand, feats_bc = build_candidates(values, features, broadcast_features)
-
-    schema = T.StructType(
-        [
-            T.StructField("feature_id", T.LongType(), False),
-            T.StructField("v", T.DoubleType(), True),
-            T.StructField("length", T.DoubleType(), False),
-            T.StructField("cell", T.LongType(), False),
-        ]
+    facts = coverage_facts(
+        cand, feats_bc=feats_bc, values_meta=values.meta, include_cell=True, linear=True,
     )
-    raster_xmin = values.meta.xmin
-    raster_ymax = values.meta.ymax
-    raster_width = values.meta.width
-    raster_ymin = values.meta.ymax - values.meta.height * values.meta.dy
-    raster_xmax = values.meta.xmin + values.meta.width * values.meta.dx
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # candidate tests must be INCLUSIVE for lines: a horizontal/vertical
-        # line has a degenerate bbox that can lie exactly on a tile edge; the
-        # kernel's closed/open edge ownership then ensures each boundary
-        # segment is counted exactly once
-        features = TileFeatures(feats_bc, inclusive=True)
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                # nodata -> NaN, same contract as the zonal kernel: a line
-                # traversing a nodata cell reports v=NaN, not the sentinel
-                px = tile_pixels(row)
-                tg = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
-                for fid, geom, *_ in features(row):
-                    # half-cell tolerance: the tile edge is computed JVM-side
-                    # from caption JSON ((ymax - r0*dy) - h*dy) and the raster
-                    # edge driver-side (ymax - height*dy); a 1-ULP divergence
-                    # must not flip the raster's outer edge to "open" and drop
-                    # a boundary-line segment
-                    lens = cell_lengths(
-                        tg,
-                        geom,
-                        closed_bottom=row.ymin <= raster_ymin + 0.5 * row.dy,
-                        closed_right=row.xmax >= raster_xmax - 0.5 * row.dx,
-                    )
-                    rr, cc = np.nonzero(lens > 0)
-                    if len(rr) == 0:
-                        continue
-                    grow = int(round((raster_ymax - tg.ymax) / tg.dy)) + rr
-                    gcol = int(round((tg.xmin - raster_xmin) / tg.dx)) + cc
-                    outs.append(
-                        (
-                            np.full(len(rr), fid, dtype=np.int64),
-                            px[rr, cc],
-                            lens[rr, cc],
-                            (grow * raster_width + gcol + 1).astype(np.int64),
-                        )
-                    )
-            if outs:
-                cols = list(zip(*outs))
-                yield pd.DataFrame(
-                    {
-                        "feature_id": np.concatenate(cols[0]),
-                        "v": np.concatenate(cols[1]),
-                        "length": np.concatenate(cols[2]),
-                        "cell": np.concatenate(cols[3]),
-                    }
-                )
-
-    return cand.mapInPandas(_kernel, schema), feats_bc
+    return facts.select("feature_id", "v", F.col("cov").alias("length"), "cell")
 
 
 def exact_extract_lines(
@@ -150,10 +82,11 @@ def exact_extract_lines(
 
     All non-weighted named stats are supported (mean = Σ v·len / Σ len,
     count = Σ len, mode = argmax of summed length per value, median/
-    quantile = length-weighted interpolation…). Raster-weighted stats are
-    refused — the reference has no weighted linear path either."""
-    from ..plans.stats import StatsPlan, with_all_features
-
+    quantile = length-weighted interpolation…), through ``exact_extract``'s
+    kernel and finish with the line cover stage; nodata cells contribute
+    nothing. Raster-weighted stats are refused — the reference has no
+    weighted linear path either — and so are polygons (use
+    ``exact_extract``)."""
     if isinstance(stats, str):
         stats = [stats]
     plan = StatsPlan(stats, quantiles or [])
@@ -162,17 +95,9 @@ def exact_extract_lines(
             f"stats {sorted(set(stats))} are weighted; linear features "
             "have no weighted path (length IS the weight)"
         )
-    facts, feats_bc = _line_cell_lengths(values, features, broadcast_features)
-    # NA-skip contract: nodata cells traversed by the line contribute
-    # nothing (same as areal stats ignoring NaN values)
-    facts = facts.filter(F.col("v").isNotNull() & ~F.isnan("v"))
-    freq = plan.merge_freq(facts.withColumnRenamed("length", "sum_c"))
-    if plan.freq:
-        # localCheckpoint, not persist: blocks released on GC, no cache
-        # leak across repeated calls in a long-lived session
-        freq = freq.localCheckpoint(eager=True)
-    result = with_all_features(plan.from_freq(freq), features, feats_bc)
-    return result.orderBy("feature_id") if sort else result
+    cand, feats_bc = build_candidates(values, features, broadcast_features)
+    return _kernel_stats(plan, cand, features, feats_bc, sort=sort,
+                         values_meta=values.meta, linear=True)
 
 
 def coverage_fraction_raster(

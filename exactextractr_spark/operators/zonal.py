@@ -21,14 +21,17 @@ tile-key equi-join Catalyst can broadcast or shuffle-hash):
      kernel's partials by feature (moments, or groupBy(fid, v) for
      frequency stats), finalize, back-fill the features with no facts
 
-The coverage kernel (``coverage_facts``) is a chain of stages, each a
-module-level helper that the line kernel (``coverage_op``) and the resample
-kernel share where they need it:
+The coverage kernel (``coverage_facts``) is the one tile kernel for
+polygons and lines: a chain of stages, each a module-level helper that the
+resample kernel shares where it needs it:
 
 - decode: ``sources.tiles.tile_pixels`` — a tile's pixels, nodata as NaN;
 - features: ``TileFeatures`` — a tile's candidate features, from the
-  feature broadcast or the row's cover-join list;
-- cover: ``cover_cells`` — exact coverage fractions as ``Cells``;
+  feature broadcast or the row's cover-join list, through the one bbox
+  predicate ``bbox_overlaps``;
+- cover: ``cover_cells`` (polygons: exact coverage fractions) or
+  ``cover_lines`` (LineStrings: the traversal length per cell), both as
+  ``Cells``;
 - values and weights: ``Cells.take_values``, ``cell_areas``,
   ``sample_weights``;
 - reduce: one ``Reducer`` per emit mode — ``MomentsReducer`` (one row of
@@ -51,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import geom as G
-from ..core.coverage import coverage_fraction
+from ..core.coverage import cell_lengths, coverage_fraction
 from ..core.grid import Box, Grid
 from ..plans.stats import StatsPlan, with_all_features
 from ..sources.tiles import Raster, tile_pixels
@@ -155,12 +158,10 @@ def feature_tile_cover(values: Raster, feats: DataFrame) -> DataFrame:
     sequence arithmetic — the 'H3 cover' of the north rule at tile
     granularity). Returns (tile_row, tile_col, feature_id, geom, f-bbox)."""
     m = values.meta
-    f = feats.filter(
-        (F.col("fxmin") <= F.lit(m.xmax))
-        & (F.col("fxmax") >= F.lit(m.xmin))
-        & (F.col("fymin") <= F.lit(m.ymax))
-        & (F.col("fymax") >= F.lit(m.ymin))
-    )
+    f = feats.filter(bbox_overlaps(
+        F.col("fxmin"), F.col("fymin"), F.col("fxmax"), F.col("fymax"),
+        F.lit(m.xmin), F.lit(m.ymin), F.lit(m.xmax), F.lit(m.ymax), inclusive=True,
+    ))
     tr0, tr1, tc0, tc1 = tile_span(
         m, F.col("fxmin"), F.col("fymin"), F.col("fxmax"), F.col("fymax")
     )
@@ -204,6 +205,19 @@ def tile_feature_lists(values: Raster, feats: DataFrame, salt_buckets: int = 1) 
     return per_tile
 
 
+def bbox_overlaps(fxmin, fymin, fxmax, fymax, xmin, ymin, xmax, ymax,
+                  inclusive: bool = False):
+    """Whether a feature bbox overlaps a box: open intervals by default (a
+    bbox that only touches a tile edge covers none of its area); closed
+    with ``inclusive``, for LINEAR features, whose degenerate bboxes can lie
+    exactly on a tile edge (the line cover stage's edge ownership counts a
+    boundary segment once). Elementwise over numpy arrays or Spark Columns,
+    plain over scalars."""
+    if inclusive:
+        return (fxmin <= xmax) & (fxmax >= xmin) & (fymin <= ymax) & (fymax >= ymin)
+    return (fxmin < xmax) & (fxmax > xmin) & (fymin < ymax) & (fymax > ymin)
+
+
 class FeatureBroadcast:
     """Driver-collected feature set for the feature-sequential strategy
     (ref feature_sequential_processor.cpp:24-91): when the polygon table is
@@ -232,25 +246,11 @@ class FeatureBroadcast:
         self.fymax = np.array(table.column("fymax"), dtype=np.float64)
         self.wkbs = table.column("geom").to_pylist()
 
-    def overlapping(self, xmin, ymin, xmax, ymax) -> np.ndarray:
-        """Indices of features whose bbox intersects the given tile box."""
-        return np.nonzero(
-            (self.fxmin < xmax)
-            & (self.fxmax > xmin)
-            & (self.fymin < ymax)
-            & (self.fymax > ymin)
-        )[0]
-
-    def overlapping_inclusive(self, xmin, ymin, xmax, ymax) -> np.ndarray:
-        """Closed-interval variant for LINEAR features, whose degenerate
-        bboxes can lie exactly on a tile edge (the line kernel's edge
-        ownership de-duplicates boundary segments)."""
-        return np.nonzero(
-            (self.fxmin <= xmax)
-            & (self.fxmax >= xmin)
-            & (self.fymin <= ymax)
-            & (self.fymax >= ymin)
-        )[0]
+    def overlapping(self, xmin, ymin, xmax, ymax, inclusive: bool = False) -> np.ndarray:
+        """Indices of features whose bbox meets the given tile box
+        (``bbox_overlaps``)."""
+        return np.nonzero(bbox_overlaps(self.fxmin, self.fymin, self.fxmax, self.fymax,
+                                        xmin, ymin, xmax, ymax, inclusive))[0]
 
     def geom(self, i: int):
         """Parsed geometry, cached per worker (the broadcast value is
@@ -423,12 +423,10 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
     tile_ymax = F.lit(m.ymax) - F.col("tile_row") * F.lit(m.dy * m.tile_h)
     tile_xmax = F.least(F.lit(m.xmax), tile_xmin + F.lit(m.dx * m.tile_w))
     tile_ymin = F.greatest(F.lit(m.ymin), tile_ymax - F.lit(m.dy * m.tile_h))
-    return cover.filter(
-        (F.col("fxmin") < tile_xmax)
-        & (F.col("fxmax") > tile_xmin)
-        & (F.col("fymin") < tile_ymax)
-        & (F.col("fymax") > tile_ymin)
-    )
+    return cover.filter(bbox_overlaps(
+        F.col("fxmin"), F.col("fymin"), F.col("fxmax"), F.col("fymax"),
+        tile_xmin, tile_ymin, tile_xmax, tile_ymax,
+    ))
 
 
 # Broadcast the weight tile table only while its full pixel payload is
@@ -579,19 +577,13 @@ class TileFeatures:
     def __call__(self, row):
         fb = self.fb
         if fb is not None:
-            test = fb.overlapping_inclusive if self.inclusive else fb.overlapping
-            for j in test(row.xmin, row.ymin, row.xmax, row.ymax):
+            for j in fb.overlapping(row.xmin, row.ymin, row.xmax, row.ymax, self.inclusive):
                 yield (int(fb.ids[j]), fb.geom(j),
                        fb.fxmin[j], fb.fymin[j], fb.fxmax[j], fb.fymax[j])
             return
         for ft in row.feats:
-            if self.inclusive:
-                outside = (ft["fxmin"] > row.xmax or ft["fxmax"] < row.xmin
-                           or ft["fymin"] > row.ymax or ft["fymax"] < row.ymin)
-            else:
-                outside = (ft["fxmin"] >= row.xmax or ft["fxmax"] <= row.xmin
-                           or ft["fymin"] >= row.ymax or ft["fymax"] <= row.ymin)
-            if not outside:
+            if bbox_overlaps(ft["fxmin"], ft["fymin"], ft["fxmax"], ft["fymax"],
+                             row.xmin, row.ymin, row.xmax, row.ymax, self.inclusive):
                 yield (ft["feature_id"], self.geom(bytes(ft["geom"])),
                        ft["fxmin"], ft["fymin"], ft["fxmax"], ft["fymax"])
 
@@ -600,7 +592,8 @@ class Cells:
     """One (feature, tile) pair's covered cells, as the cover stage finds
     them and the value and weight stages fill them in: ``rr``/``cc`` index
     the sampling grid ``samp`` (finer than the tile when disaggregating),
-    ``tr``/``tc`` the tile; ``w`` is None when no weight applies."""
+    ``tr``/``tc`` the tile; ``cov`` is the covered fraction, or for lines
+    the traversal length; ``w`` is None when no weight applies."""
 
     __slots__ = ("feature_id", "tile", "samp", "rr", "cc", "tr", "tc",
                  "cov", "v", "w", "area", "_xy")
@@ -615,9 +608,11 @@ class Cells:
     def __len__(self) -> int:
         return len(self.rr)
 
-    def take_values(self, px: "np.ndarray | None", default_value) -> bool:
+    def take_values(self, px: "np.ndarray | None", default_value,
+                    keep_nan: bool = False) -> bool:
         """Sample the tile's values (0 without a pixel block); NaN cells
-        (after ``default_value``) drop out. False when no cell is left."""
+        (after ``default_value``) drop out unless ``keep_nan``. False when
+        no cell is left."""
         if px is None:
             self.v = np.zeros(len(self.rr))
             return True
@@ -625,7 +620,7 @@ class Cells:
         if default_value is not None:
             v = np.where(np.isnan(v), default_value, v)
         ok = ~np.isnan(v)
-        if not ok.all():
+        if not keep_nan and not ok.all():
             self.rr, self.cc, self.tr, self.tc = (
                 self.rr[ok], self.cc[ok], self.tr[ok], self.tc[ok]
             )
@@ -663,6 +658,26 @@ def cover_cells(tile: Grid, feature_id, geom, bbox: Box, disagg) -> "Cells | Non
     r_off, c_off = tile.row_col_offset(sub)
     return Cells(feature_id, tile, samp, rr, cc, rr // fy + r_off, cc // fx + c_off,
                  cov[rr, cc])
+
+
+def cover_lines(tile: Grid, feature_id, geom, values_meta) -> "Cells | None":
+    """Cover stage for LineStrings: the traversal length of ``geom`` in
+    each cell of the whole ``tile`` (as ``cov``; the sampling grid is the
+    tile). The tile's bottom/right edge is closed when it is the raster's
+    outer edge, so a boundary line is counted once across tiles. The test
+    allows half a cell: the tile edge comes from the tile table and the
+    raster edge from ``values_meta``, and a 1-ULP divergence must not open
+    the raster's outer edge and drop a boundary segment."""
+    lens = cell_lengths(
+        tile,
+        geom,
+        closed_bottom=tile.ymin <= values_meta.ymin + 0.5 * tile.dy,
+        closed_right=tile.xmax >= values_meta.xmax - 0.5 * tile.dx,
+    )
+    rr, cc = np.nonzero(lens > 0)
+    if len(rr) == 0:
+        return None
+    return Cells(feature_id, tile, tile, rr, cc, rr, cc, lens[rr, cc])
 
 
 def sample_weights(wtiles, cells: Cells, default_weight) -> np.ndarray:
@@ -826,6 +841,7 @@ def coverage_facts(
     disagg: "tuple[int, int]" = (1, 1),
     by_layer: bool = False,
     coverage_only: bool = False,
+    linear: bool = False,
 ) -> DataFrame:
     """Run the exact coverage kernel over tile rows, as one ``mapInPandas``.
 
@@ -839,11 +855,15 @@ def coverage_facts(
        candidates come from a vectorized bbox test; otherwise ``cand``
        carries each tile's cover-join ``feats`` list;
     3. cover — ``cover_cells``: exact coverage fractions on the tile grid,
-       refined by ``disagg`` for a finer weight grid;
+       refined by ``disagg`` for a finer weight grid; with ``linear``,
+       ``cover_lines``: the traversal length per cell of LineString
+       features, as ``cov`` (the reference's linear coverage,
+       raster_cell_intersection.cpp:250-259);
     4. values, areas and weights — ``Cells.take_values`` (NaN cells drop
-       out), ``cell_areas`` (``coverage_area``, ``area_weights``,
-       ``include_area``), ``sample_weights`` (a ``wtiles`` column); with
-       neither weights nor ``area_weights`` the weighted sums are NaN;
+       out, except from the ``linear`` pixels emit), ``cell_areas``
+       (``coverage_area``, ``area_weights``, ``include_area``),
+       ``sample_weights`` (a ``wtiles`` column); with neither weights nor
+       ``area_weights`` the weighted sums are NaN;
     5. reduce — the ``Reducer`` of ``emit`` (the reference's per-chunk
        StatsRegistry accumulation, stats_registry.h:25-84, done before the
        shuffle instead of after it):
@@ -872,13 +892,21 @@ def coverage_facts(
             include_cell=include_cell, include_xy=include_xy,
         )
     need_area = include_area or coverage_area or area_weights or spherical
+    if linear:
+        def cover(tile, fid, geom, bbox):
+            return cover_lines(tile, fid, geom, values_meta)
+    else:
+        cover = partial(cover_cells, disagg=disagg)
+    # the line pixel table lists every traversed cell, nodata ones with
+    # v = NaN (a line's path is data in itself); the stat emits drop them
+    keep_nan = linear and emit == "pixels"
     if coverage_only:
         # mapInPandas ships every input column (Catalyst cannot prune
         # through it): drop the unread payload before the Arrow boundary
         cand = cand.drop("bytes", "px")
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        features = TileFeatures(feats_bc)
+        features = TileFeatures(feats_bc, inclusive=linear)
         reducer = new_reducer()
         for pdf in batches:
             has_w = "wtiles" in pdf.columns
@@ -887,11 +915,10 @@ def coverage_facts(
                 tile = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
                 layer = row.layer if by_layer else None
                 for fid, geom, fxmin, fymin, fxmax, fymax in features(row):
-                    c = cover_cells(tile, fid, geom, Box(fxmin, fymin, fxmax, fymax),
-                                    disagg)
+                    c = cover(tile, fid, geom, Box(fxmin, fymin, fxmax, fymax))
                     if c is None:
                         continue
-                    if not c.take_values(px, default_value):
+                    if not c.take_values(px, default_value, keep_nan):
                         continue
                     if need_area:
                         c.area = cell_areas(c.samp, c.rr, spherical)
@@ -979,8 +1006,8 @@ def exact_extract(
     if wraster is not None:
         cand = _attach_weights(cand, values, wraster)
 
-    kernel_kwargs = dict(
-        feats_bc=feats_bc,
+    return _kernel_stats(
+        plan, cand, features, feats_bc, append_cols=append_cols, sort=sort,
         disagg=disagg,
         values_meta=values.meta,
         area_weights=area_weights,
@@ -990,6 +1017,13 @@ def exact_extract(
         default_weight=default_weight,
     )
 
+
+def _kernel_stats(plan: StatsPlan, cand: DataFrame, features: DataFrame, feats_bc, *,
+                  append_cols: "DataFrame | None" = None, sort: bool = True,
+                  **kernel_kwargs) -> DataFrame:
+    """The named stats of ``plan`` from one coverage-kernel pass over
+    ``cand`` (``coverage_facts`` with ``kernel_kwargs``), one row per
+    feature — the path of ``exact_extract`` and ``exact_extract_lines``."""
     if plan.freq:
         # one kernel pass; everything (algebraic included) derives exactly
         # from the merged value-frequency table. The freq table is consumed
@@ -998,12 +1032,13 @@ def exact_extract(
         # distinct values) and saves a full kernel re-scan per piece.
         # localCheckpoint: blocks are released when the result is GC'd, no
         # CacheManager entry leaked across repeated calls.
-        partials = coverage_facts(cand, emit="freq", **kernel_kwargs)
+        partials = coverage_facts(cand, emit="freq", feats_bc=feats_bc, **kernel_kwargs)
         result = plan.from_freq(plan.merge_freq(partials).localCheckpoint(eager=True))
     else:
         # moments path: kernel emits ONE row per (feature, tile); the final
         # shuffle is independent of cell count (StatsRegistry merge)
-        result = plan.from_moments(coverage_facts(cand, emit="moments", **kernel_kwargs))
+        result = plan.from_moments(
+            coverage_facts(cand, emit="moments", feats_bc=feats_bc, **kernel_kwargs))
     result = with_all_features(result, features, feats_bc)
     if append_cols is not None:
         result = result.join(append_cols, on="feature_id", how="left")

@@ -21,8 +21,10 @@ lines, streaming, checkpoint) or by ``(dst_row, dst_col)`` (resample):
 
 NULL and NaN:
 
-- NA values never reach a stat: the kernel drops NaN cells (facts are sparse
-  over defined, covered cells).
+- NA values never reach a stat: every stat path, areal and linear, drops
+  NaN cells in the kernel (facts are sparse over defined, covered cells).
+  Only the line pixel table (``line_cell_lengths_df``) keeps nodata cells,
+  with v = NaN, so that it lists a line's whole path.
 - NA weights poison the weighted stats (raster_stats.h:104-107). The
   kernel's weighted sums are NaN then, but NaN crosses the Arrow boundary
   of ``mapInPandas`` as NULL and ``F.sum`` skips NULL, so when the plan

@@ -191,3 +191,7 @@ def test_linestring_lengths():
     np.testing.assert_allclose(got, want, atol=1e-14)
     got = cell_lengths(g, from_wkt("LINESTRING (0 0, 3 3)"))
     assert got.sum() == pytest.approx(np.hypot(3, 3), rel=1e-12)
+    # polygons and points have no traversal length: refused, not zero
+    for wkt in ("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", "POINT (1 1)"):
+        with pytest.raises(ValueError, match="not linear"):
+            cell_lengths(g, from_wkt(wkt))

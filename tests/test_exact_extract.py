@@ -552,11 +552,14 @@ def test_kernel_emit_paths_and_strategies_agree(spark):
     kernel agree with each other under both candidate strategies
     (broadcast and cover join); the coverage-only facts (coverage_fraction
     and the rasterize target) list the same cells, nodata cells included;
-    and the line kernel is strategy-independent."""
+    the line cover stage is strategy-independent, and the line stats of
+    both strategies are the NaN-skipped aggregates of the line pixel
+    table, which keeps the nodata cells."""
     import pandas as pd
 
     from exactextractr_spark.operators.coverage_op import (
         coverage_fraction_df,
+        exact_extract_lines,
         line_cell_lengths_df,
     )
     from exactextractr_spark.operators.rasterize import blank_raster
@@ -662,7 +665,7 @@ def test_kernel_emit_paths_and_strategies_agree(spark):
         assert got[["feature_id", "cell"]].equals(want[["feature_id", "cell"]])
         np.testing.assert_allclose(got["cov"], want["cov"], rtol=1e-12)
 
-    # line kernel: broadcast and cover join give the same (cell, v, length)
+    # line cover stage: broadcast and cover join give the same (cell, v, length)
     lines = features_from_wkt(
         spark, ["LINESTRING (0.5 7, 11.5 7)", "LINESTRING (0.3 0.2, 11.7 11.1)",
                 "LINESTRING (5 0.5, 5 11.5)"]
@@ -678,6 +681,28 @@ def test_kernel_emit_paths_and_strategies_agree(spark):
                                got_l[1][["v", "length"]].to_numpy(),
                                rtol=1e-12, equal_nan=True)
     assert got_l[0]["v"].isna().any()
+
+    # line stats: the pixel table's defined cells, aggregated by length
+    lstats = ["count", "sum", "mean", "min", "max", "variety", "mode"]
+    per_strategy = []
+    for bc, px in zip((True, False), got_l):
+        p = px.dropna(subset=["v"]).assign(vl=lambda d: d["v"] * d["length"])
+        g = p.groupby("feature_id")
+        by_v = p.groupby(["feature_id", "v"], as_index=False)["length"].sum()
+        # the most length, ties to the larger value
+        mode = by_v.sort_values(["feature_id", "length", "v"]).groupby(
+            "feature_id")["v"].last()
+        want = pd.DataFrame({
+            "count": g["length"].sum(), "sum": g["vl"].sum(),
+            "mean": g["vl"].sum() / g["length"].sum(), "min": g["v"].min(),
+            "max": g["v"].max(), "variety": g["v"].nunique(), "mode": mode,
+        }).reindex(fids)[lstats].to_numpy()
+        got = table(exact_extract_lines(rv, lines, lstats, broadcast_features=bc),
+                    lstats)
+        np.testing.assert_allclose(got, want, rtol=1e-12, equal_nan=True)
+        per_strategy.append(got)
+    np.testing.assert_allclose(per_strategy[0], per_strategy[1], rtol=1e-12,
+                               equal_nan=True)
 
 
 def test_nan_weights_poison_weighted_stats(spark, r19, sq, tmp_path):

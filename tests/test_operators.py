@@ -361,6 +361,20 @@ def test_exact_extract_lines_stats(spark):
         exact_extract_lines(r, feats, ["weighted_mean"])
 
 
+def test_exact_extract_lines_refuses_polygons(spark):
+    """A polygon on the line path fails loudly instead of reading as a line
+    that misses the raster (count 0, NULL mean); the message points at
+    ``exact_extract``."""
+    from exactextractr_spark.operators.coverage_op import exact_extract_lines
+
+    r = Raster.from_array(spark, np.arange(9, dtype=np.float64).reshape(3, 3), meta33())
+    feats = features_from_wkt(spark, [SQ_WKT])
+    for bc in (True, False):
+        with pytest.raises(Exception, match="use exact_extract for polygons"):
+            exact_extract_lines(r, feats, ["count", "mean"],
+                                broadcast_features=bc).collect()
+
+
 def test_exact_extract_lines_hints_broadcast_only_with_feature_broadcast(
     spark, monkeypatch
 ):
