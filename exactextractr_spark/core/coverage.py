@@ -37,12 +37,11 @@ from __future__ import annotations
 import numpy as np
 
 from .geom import Geometry, signed_area
-from .grid import Box, Grid
+from .grid import Grid
 
 __all__ = [
     "coverage_fraction",
     "coverage_fraction_ring",
-    "rect_coverage",
     "cell_lengths",
 ]
 
@@ -274,26 +273,6 @@ def coverage_fraction(grid: Grid, geom: Geometry) -> np.ndarray:
     # tiny negative fuzz from float cancellation
     np.maximum(out, 0.0, out=out)
     return out
-
-
-def rect_coverage(grid: Grid, box: Box) -> np.ndarray:
-    """Closed-form coverage for an axis-aligned rectangle — the reference's
-    rectangle fast path (raster_cell_intersection.cpp:161-248) and the whole
-    of exact_resample (resample.cpp:104-106). Fully vectorized."""
-    nrows, ncols = grid.nrows, grid.ncols
-    cols_x0 = grid.xmin + np.arange(ncols) * grid.dx
-    rows_y1 = grid.ymax - np.arange(nrows) * grid.dy  # top edge per row
-    ox = np.clip(
-        np.minimum(box.xmax, cols_x0 + grid.dx) - np.maximum(box.xmin, cols_x0),
-        0.0,
-        grid.dx,
-    )
-    oy = np.clip(
-        np.minimum(box.ymax, rows_y1) - np.maximum(box.ymin, rows_y1 - grid.dy),
-        0.0,
-        grid.dy,
-    )
-    return np.outer(oy, ox) / (grid.dx * grid.dy)
 
 
 def cell_lengths(

@@ -33,7 +33,8 @@ resample kernel shares where it needs it:
   ``cover_lines`` (LineStrings: the traversal length per cell), both as
   ``Cells``;
 - values and weights: ``Cells.take_values``, ``cell_areas``,
-  ``sample_weights``;
+  ``sample_weights`` (over the ``wtiles`` lists that ``attach_weights``,
+  the one weight path of every entry point, joins onto the tiles);
 - reduce: one ``Reducer`` per emit mode — ``MomentsReducer`` (one row of
   algebraic moments per feature and tile, the reference's RasterStats
   accumulator), ``FreqReducer`` (per-value partial sums) and
@@ -429,9 +430,9 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
     ))
 
 
-# Broadcast the weight tile table only while its full pixel payload is
-# plausibly executor-memory safe. Above this the hint is dropped and the
-# slim-key equi-join on (w_tr, w_tc) shuffles instead (AQE picks the
+# Broadcast the weight lists only while the weight raster's full pixel
+# payload is plausibly executor-memory safe. Above this the hint is dropped
+# and the tile-key join of the lists shuffles instead (AQE picks the
 # strategy) — an unconditional broadcast of a 100-TB-scale weight raster's
 # payloads is a driver/executor OOM, not a slowdown.
 WEIGHT_BROADCAST_MAX_BYTES = 64 << 20
@@ -472,74 +473,71 @@ def _weight_tile() -> Column:
     ])
 
 
-def _attach_weights(cand: DataFrame, values: Raster, weights: Raster) -> DataFrame:
-    """Join the weight tiles overlapping each candidate value tile
-    (collect_list of structs; exactly 1 element when schemes align).
-    Grouping happens on a slim key projection so the heavy tile payload
-    never enters the shuffle; the weight side is broadcast only below a
-    size gate (see WEIGHT_BROADCAST_MAX_BYTES).
+def weight_lists(values_meta, weights: Raster) -> DataFrame:
+    """(tile_row, tile_col, wtiles) keyed by VALUE-raster tile index: the
+    weight tiles each value tile samples its weights from. Built from the
+    weight raster alone, so batch and streaming attach it the same way (a
+    stream-static equi-join runs no grouping on the streaming side), and
+    hinted for broadcast under the size gate (``_weight_side``).
 
-    Aligned fast path: when the weight raster shares the value raster's
-    grid (``RasterMeta.same_grid``) AND tiling, value tile (r, c) overlaps
-    weight tile (r, c) and nothing else — one equi-join on the tile index,
-    no explode/collect_list shuffle at all (the common case: weights
-    produced alongside values on one grid)."""
-    wm = weights.meta
-    vm = values.meta
+    Aligned weights (``same_grid`` and the same tiling): value tile (r, c)
+    overlaps weight tile (r, c) and nothing else, so each list is that one
+    tile under its own key — no explode, no regroup. Otherwise each weight
+    tile that meets the value raster enumerates the value tiles it overlaps
+    (``tile_span`` on the value grid) and one groupBy collects the lists.
+    ``sample_weights`` reads each cell from the listed tile that contains
+    its centre, and weight tiles are disjoint, so neither list order nor a
+    member that only touches the value tile changes a weight."""
+    wm, vm = weights.meta, values_meta
     if vm.same_grid(wm) and (wm.tile_w, wm.tile_h) == (vm.tile_w, vm.tile_h):
-        w1 = weights.tiles.select(
-            "tile_row", "tile_col",
-            F.array(_weight_tile()).alias("wtiles"),
+        return _weight_side(
+            weights.tiles.select(
+                "tile_row", "tile_col", F.array(_weight_tile()).alias("wtiles")
+            ),
+            wm,
         )
-        return cand.join(_weight_side(w1, wm), on=["tile_row", "tile_col"], how="left")
-    w = weights.tiles.select(
-        F.col("tile_row").alias("w_tr"),
-        F.col("tile_col").alias("w_tc"),
-        _weight_tile().alias("wtile"),
+    # weight tiles off the value raster would be clamped onto its edge tiles
+    wt = weights.tiles.filter(bbox_overlaps(
+        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
+        F.lit(vm.xmin), F.lit(vm.ymin), F.lit(vm.xmax), F.lit(vm.ymax),
+    )).select("xmin", "ymin", "xmax", "ymax", _weight_tile().alias("wtile"))
+    r0, r1, c0, c1 = tile_span(
+        vm, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), tol=1e-9
     )
-    wr0, wr1, wc0, wc1 = tile_span(
-        wm, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), tol=1e-9
-    )
-    slim = cand.select("tile_row", "tile_col", "xmin", "ymin", "xmax", "ymax").dropDuplicates(
-        ["tile_row", "tile_col"]
-    )
-    expanded = slim.withColumn("w_tr", F.explode(F.sequence(wr0, wr1))).withColumn(
-        "w_tc", F.explode(F.sequence(wc0, wc1))
-    )
-    joined = expanded.join(_weight_side(w, wm), on=["w_tr", "w_tc"], how="left")
-    wlists = joined.groupBy("tile_row", "tile_col").agg(
-        F.collect_list("wtile").alias("wtiles")
-    )
-    return cand.join(wlists, on=["tile_row", "tile_col"], how="left")
-
-
-def static_weight_lists(values_meta, weights: Raster) -> DataFrame:
-    """(tile_row, tile_col, wtiles) keyed by VALUE-raster tile index, built
-    entirely from the static weight raster — for stream-static joins where
-    the value tiles arrive as a stream and no stateful grouping may run on
-    the streaming side (``_attach_weights`` groups on the candidate side,
-    which Structured Streaming forbids before the final aggregate). Each
-    weight tile enumerates the value tiles it overlaps (pure arithmetic on
-    the value grid), then one STATIC groupBy collects the per-value-tile
-    weight lists, hinted for broadcast under ``_attach_weights``' size
-    gate; the streaming join is a stateless equi-join."""
-    wt = weights.tiles.select(
-        "xmin", "ymin", "xmax", "ymax",
-        _weight_tile().alias("wtile"),
-    )
-    vr0, vr1, vc0, vc1 = tile_span(
-        values_meta, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        tol=1e-9,
-    )
-    expanded = wt.withColumn("tile_row", F.explode(F.sequence(vr0, vr1))).withColumn(
-        "tile_col", F.explode(F.sequence(vc0, vc1))
+    expanded = wt.withColumn("tile_row", F.explode(F.sequence(r0, r1))).withColumn(
+        "tile_col", F.explode(F.sequence(c0, c1))
     )
     return _weight_side(
         expanded.groupBy("tile_row", "tile_col").agg(
             F.collect_list("wtile").alias("wtiles")
         ),
-        weights.meta,
+        wm,
     )
+
+
+def attach_weights(
+    cand: DataFrame, values_meta, weights: "Raster | None", stats=()
+) -> "tuple[DataFrame, tuple[int, int]]":
+    """The weight decision of every zonal entry point (ref
+    exact_extract.cpp:316-332): check the weight grid against the value
+    grid and pick the disaggregation factor (``weight_disagg``), refuse
+    ``count``/``sum`` among ``stats`` when the values are disaggregated,
+    then left-join the ``weight_lists`` onto the candidate tiles as
+    ``wtiles``. Returns the candidates and the factor for
+    ``coverage_facts(disagg=)``; ``(cand, (1, 1))`` without weights."""
+    if weights is None:
+        return cand, (1, 1)
+    disagg = weight_disagg(values_meta, weights.meta)
+    banned = {"count", "sum"} & set(stats)
+    if disagg != (1, 1) and banned:
+        # count/sum are meaningless on disaggregated values
+        # (exact_extract.cpp:329-332)
+        raise ValueError(
+            f"stats {sorted(banned)} cannot be computed when the "
+            "value raster is disaggregated to a finer weight grid"
+        )
+    wlists = weight_lists(values_meta, weights)
+    return cand.join(wlists, on=["tile_row", "tile_col"], how="left"), disagg
 
 
 # ---------------------------------------------------------------------------
@@ -988,24 +986,10 @@ def exact_extract(
             "weights provided but no requested stat uses them "
             "(ref test_exact_extract_errors.R:28-36)"
         )
-    disagg = (1, 1)
-    if wraster is not None:
-        disagg = weight_disagg(values.meta, wraster.meta)
-        banned = {"count", "sum"} & set(stats)
-        if disagg != (1, 1) and banned:
-            # count/sum are meaningless on disaggregated values
-            # (exact_extract.cpp:329-332)
-            raise ValueError(
-                f"stats {sorted(banned)} cannot be computed when the "
-                "value raster is disaggregated to a finer weight grid"
-            )
-
     cand, feats_bc = build_candidates(
         values, features, broadcast_features, salt_buckets=salt_buckets
     )
-    if wraster is not None:
-        cand = _attach_weights(cand, values, wraster)
-
+    cand, disagg = attach_weights(cand, values.meta, wraster, stats)
     return _kernel_stats(
         plan, cand, features, feats_bc, append_cols=append_cols, sort=sort,
         disagg=disagg,
@@ -1069,10 +1053,7 @@ def exact_extract_pixels(
     pixel row of that feature (broadcast left join — attribute tables are
     small next to pixel tables)."""
     cand, feats_bc = build_candidates(values, features, broadcast_features)
-    disagg = (1, 1)
-    if weights is not None:
-        disagg = weight_disagg(values.meta, weights.meta)
-        cand = _attach_weights(cand, values, weights)
+    cand, disagg = attach_weights(cand, values.meta, weights)
     facts = coverage_facts(
         cand,
         feats_bc=feats_bc,

@@ -26,19 +26,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..core.geom import Geometry, from_wkb, signed_area, to_wkb
 from .features import prepare_features
 
 _SHAPE_POINT = {1, 11, 21}
 _SHAPE_POLYLINE = {3, 13, 23}
 _SHAPE_POLYGON = {5, 15, 25}
 _SHAPE_MULTIPOINT = {8, 18, 28}
-
-
-def _ring_signed_area(pts: np.ndarray) -> float:
-    x, y = pts[:, 0], pts[:, 1]
-    return 0.5 * float(
-        np.sum(x[:-1] * y[1:] - x[1:] * y[:-1])
-    )
 
 
 def _point_in_ring(pt: np.ndarray, ring: np.ndarray) -> bool:
@@ -52,28 +46,11 @@ def _point_in_ring(pt: np.ndarray, ring: np.ndarray) -> bool:
     return bool(np.sum(cond & (x < xint)) % 2)
 
 
-def _wkb_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, 1, x, y)
+def _point(x: float, y: float) -> Geometry:
+    return Geometry("Point", coords=np.array([x, y]))
 
 
-def _wkb_linestring(pts: np.ndarray) -> bytes:
-    out = struct.pack("<BII", 1, 2, len(pts))
-    return out + np.ascontiguousarray(pts, dtype="<f8").tobytes()
-
-
-def _wkb_polygon(rings: "list[np.ndarray]") -> bytes:
-    out = struct.pack("<BII", 1, 3, len(rings))
-    for r in rings:
-        out += struct.pack("<I", len(r))
-        out += np.ascontiguousarray(r, dtype="<f8").tobytes()
-    return out
-
-
-def _wkb_multi(kind: int, parts: "list[bytes]") -> bytes:
-    return struct.pack("<BII", 1, kind, len(parts)) + b"".join(parts)
-
-
-def _polygon_record_to_wkb(rings: "list[np.ndarray]") -> bytes:
+def _polygon_record(rings: "list[np.ndarray]") -> Geometry:
     """Group shapefile rings into polygons: CW => outer, CCW => hole
     (spec convention; signed area < 0 means clockwise in the usual
     mathematical orientation). Degenerate zero-area rings are treated as
@@ -81,7 +58,7 @@ def _polygon_record_to_wkb(rings: "list[np.ndarray]") -> bytes:
     outers: list[list[np.ndarray]] = []
     holes: list[np.ndarray] = []
     for r in rings:
-        if _ring_signed_area(r) <= 0.0:  # CW (or degenerate) -> outer
+        if signed_area(r) <= 0.0:  # CW (or degenerate) -> outer
             outers.append([r])
         else:
             holes.append(r)
@@ -100,9 +77,8 @@ def _polygon_record_to_wkb(rings: "list[np.ndarray]") -> bytes:
             if target is None:
                 target = outers[0]
         target.append(h)
-    if len(outers) == 1:
-        return _wkb_polygon(outers[0])
-    return _wkb_multi(6, [_wkb_polygon(o) for o in outers])
+    polys = [Geometry("Polygon", rings=o) for o in outers]
+    return polys[0] if len(polys) == 1 else Geometry("MultiPolygon", parts=polys)
 
 
 def _parse_shp(path: str) -> "list[tuple[int, bytes | None]]":
@@ -125,15 +101,14 @@ def _parse_shp(path: str) -> "list[tuple[int, bytes | None]]":
             continue
         if stype in _SHAPE_POINT:
             x, y = struct.unpack("<dd", body[4:20])
-            out.append((recno, _wkb_point(x, y)))
+            out.append((recno, to_wkb(_point(x, y))))
         elif stype in _SHAPE_MULTIPOINT:
             (npts,) = struct.unpack("<i", body[36:40])
             pts = np.frombuffer(
                 body[40 : 40 + 16 * npts], dtype="<f8"
             ).reshape(npts, 2)
-            out.append(
-                (recno, _wkb_multi(4, [_wkb_point(x, y) for x, y in pts]))
-            )
+            multi = Geometry("MultiPoint", parts=[_point(x, y) for x, y in pts])
+            out.append((recno, to_wkb(multi)))
         elif stype in _SHAPE_POLYLINE or stype in _SHAPE_POLYGON:
             nparts, npts = struct.unpack("<ii", body[36:44])
             parts = struct.unpack("<" + "i" * nparts, body[44 : 44 + 4 * nparts])
@@ -147,14 +122,12 @@ def _parse_shp(path: str) -> "list[tuple[int, bytes | None]]":
             ]
             rings = [r for r in rings if len(r) >= 2]
             if stype in _SHAPE_POLYLINE:
-                wkb = (
-                    _wkb_linestring(rings[0])
-                    if len(rings) == 1
-                    else _wkb_multi(5, [_wkb_linestring(r) for r in rings])
-                )
+                lines = [Geometry("LineString", coords=r) for r in rings]
+                g = (lines[0] if len(lines) == 1
+                     else Geometry("MultiLineString", parts=lines))
             else:
-                wkb = _polygon_record_to_wkb(rings)
-            out.append((recno, wkb))
+                g = _polygon_record(rings)
+            out.append((recno, to_wkb(g)))
         else:
             raise ValueError(
                 f"{path}: shape type {stype} not supported "
@@ -310,8 +283,6 @@ def read_shapefile(
 def _wkb_to_shp_rings(wkb: bytes) -> "tuple[int, list[np.ndarray]]":
     """WKB -> (shape_type, parts) in shapefile conventions: polygons as
     rings wound CW for outers / CCW for holes, polylines as-is."""
-    from ..core.geom import from_wkb
-
     g = from_wkb(wkb)
     polys = g.polygons()
     if polys:
@@ -321,7 +292,7 @@ def _wkb_to_shp_rings(wkb: bytes) -> "tuple[int, list[np.ndarray]]":
                 a = np.asarray(r, dtype="<f8")
                 if not np.array_equal(a[0], a[-1]):
                     a = np.vstack([a, a[:1]])
-                area = _ring_signed_area(a)
+                area = signed_area(a)
                 # outer (j==0) must be CW (area<=0), holes CCW (area>0)
                 if (j == 0 and area > 0) or (j > 0 and area < 0):
                     a = a[::-1]

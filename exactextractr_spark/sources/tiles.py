@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass, replace
-from types import SimpleNamespace
 from typing import Iterator
 
 import numpy as np
@@ -244,46 +243,21 @@ def tile_pixels(row) -> np.ndarray:
 
 
 def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
-    """Image table -> decoded tile blocks (Arrow-batched ``mapInPandas``).
-
-    Verifies the decode invariant per tile: caption metadata consistent with
-    (w, h) and bit-exact pixel roundtrip (the reference reads blocks via
-    ``getValuesBlock``, s4_raster_source.h:64-83).
-    """
+    """Image table -> decoded tile blocks (``DECODED_SCHEMA``): the caption
+    is parsed in the JVM by ``raw_tiles_with_meta`` (grid columns, layer
+    filter, nodata), and one Arrow-batched ``mapInPandas`` adds the pixels
+    (``px``, row-major, nodata as NaN) through ``tile_pixels``. Nothing is
+    verified here; ``roundtrip_report`` checks the pixel roundtrip."""
+    cols = [f.name for f in DECODED_SCHEMA.fields if f.name != "px"]
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0:  # empty object columns break Arrow
                 continue
-            out = {k: [] for k in (
-                "layer", "tile_row", "tile_col", "xmin", "ymin", "xmax", "ymax",
-                "dx", "dy", "nrows", "ncols", "px")}
-            for data, w, h, cap in zip(
-                pdf["bytes"], pdf["w"], pdf["h"], pdf["caption"]
-            ):
-                meta = json.loads(cap)
-                if layer is not None and meta["layer"] != layer:
-                    continue
-                px = tile_pixels(SimpleNamespace(
-                    bytes=data, nrows=h, ncols=w, nodata=meta.get("nodata")
-                ))
-                out["layer"].append(meta["layer"])
-                out["tile_row"].append(meta["tile_row"])
-                out["tile_col"].append(meta["tile_col"])
-                out["xmin"].append(meta["xmin"])
-                out["ymax"].append(meta["ymax"])
-                out["xmax"].append(meta["xmin"] + int(w) * meta["dx"])
-                out["ymin"].append(meta["ymax"] - int(h) * meta["dy"])
-                out["dx"].append(meta["dx"])
-                out["dy"].append(meta["dy"])
-                out["nrows"].append(int(h))
-                out["ncols"].append(int(w))
-                out["px"].append(px.ravel())
-            if out["px"]:  # all-filtered batch: empty object cols break Arrow
-                yield pd.DataFrame(out)
+            px = [tile_pixels(row).ravel() for row in pdf.itertuples(index=False)]
+            yield pdf[cols].assign(px=px)
 
-    cols = ["bytes", "w", "h", "caption"]
-    return tiles.select(*cols).mapInPandas(_decode, DECODED_SCHEMA)
+    return raw_tiles_with_meta(tiles, layer).mapInPandas(_decode, DECODED_SCHEMA)
 
 
 def roundtrip_report(tiles: DataFrame) -> DataFrame:

@@ -31,12 +31,14 @@ limit, the cover join. Both are stateless stream-static joins of the
 arriving tiles with static feature-side frames, so the stateful aggregate
 does not change with the strategy.
 
-Weighted stats stream too: the weight raster is STATIC, so its tiles are
-pre-grouped per value-tile key on the batch side
-(``zonal.static_weight_lists``, size-gated for broadcast) and attached to
-the streaming tiles with a stateless stream-static join — the moments
-schema already carries the weighted sums, so the stateful aggregate is
-unchanged.
+Weighted stats stream through the batch weight attach,
+``zonal.attach_weights``: the weight raster is STATIC, and its per-value-tile
+weight lists (``zonal.weight_lists``, size-gated for broadcast) are built
+from the weight side alone, so they join the streaming tiles as a stateless
+stream-static join — the moments schema already carries the weighted sums,
+so the stateful aggregate is unchanged. Coarser, aligned and finer weight
+grids all stream; a finer grid disaggregates the values as in batch and
+refuses ``count``/``sum`` the same way.
 """
 
 from __future__ import annotations
@@ -73,23 +75,13 @@ def stream_zonal_stats(
     there, which is the resumable-pipeline shape: the newest snapshot is
     always a consistent answer over every tile ingested so far.
     """
-    from ..operators.zonal import (
-        build_candidates,
-        coverage_facts,
-        static_weight_lists,
-        weight_disagg,
-    )
+    from ..operators.zonal import attach_weights, build_candidates, coverage_facts
 
     if isinstance(stats, str):
         stats = [stats]
     plan = StatsPlan(stats, quantiles or [])
     if plan.needs_weights and weights is None:
         raise ValueError(f"stats {sorted(set(stats))} require weights")
-    if weights is not None and weight_disagg(meta, weights.meta) != (1, 1):
-        raise ValueError(
-            "finer-than-value weight grids disaggregate the value "
-            "raster — batch-only; resample the weights first"
-        )
 
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
@@ -100,17 +92,15 @@ def stream_zonal_stats(
     # by a stream-static join) or the cover join (a stream-static join
     # with the static per-tile feature lists)
     cand, feats_bc = build_candidates(Raster.from_tiles(raw, meta), features)
-    if weights is not None:
-        # size-gated broadcast like the batch path: a large weight raster's
-        # pre-grouped lists join as a plain stream-static equi-join (still
-        # stateless) instead of an OOM-prone broadcast
-        wlists = static_weight_lists(meta, weights)
-        cand = cand.join(wlists, on=["tile_row", "tile_col"], how="left")
+    # the batch weight attach: static per-value-tile weight lists joined
+    # stream-static (stateless; broadcast only under the size gate)
+    cand, disagg = attach_weights(cand, meta, weights, stats)
     # the stateful aggregate merges the kernel's partials (complete mode);
     # freq state is bounded by |features| x |distinct values| (categorical
     # rasters; max_state_rows guards the continuous case loudly)
     emit = "freq" if plan.freq else "moments"
-    partials = coverage_facts(cand, emit=emit, feats_bc=feats_bc, values_meta=meta)
+    partials = coverage_facts(cand, emit=emit, feats_bc=feats_bc, values_meta=meta,
+                              disagg=disagg)
     merged = plan.merge_freq(partials) if plan.freq else plan.merge_moments(partials)
 
     def _snapshot(batch_df: DataFrame, batch_id: int) -> None:

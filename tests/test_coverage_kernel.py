@@ -11,10 +11,9 @@ import pytest
 from exactextractr_spark.core.coverage import (
     cell_lengths,
     coverage_fraction,
-    rect_coverage,
 )
 from exactextractr_spark.core.geom import from_wkt
-from exactextractr_spark.core.grid import Box, Grid
+from exactextractr_spark.core.grid import Grid
 
 G33 = Grid(0, 0, 3, 3, 1, 1)  # the canonical 3x3 unit grid
 
@@ -164,14 +163,6 @@ def test_partial_overlap_with_grid_edge():
     want = np.zeros((2, 2))
     want[0, 1] = 0.25
     np.testing.assert_allclose(got, want, atol=1e-14)
-
-
-def test_rect_coverage_matches_kernel():
-    g = Grid(0, 0, 3, 3, 1, 1)
-    box = Box(0.5, 0.5, 2.5, 2.5)
-    got = rect_coverage(g, box)
-    want = np.array([[0.25, 0.5, 0.25], [0.5, 1.0, 0.5], [0.25, 0.5, 0.25]])
-    np.testing.assert_allclose(got, want, atol=1e-15)
 
 
 def test_overlapping_multipolygon_exceeds_one():

@@ -204,9 +204,36 @@ def test_multires_weights(spark):
     assert got["mean"] == pytest.approx(want_m, rel=1e-12)
 
 
+def _plan_nodes(df):
+    """(node name, output column names) of every node of ``df``'s physical
+    plan, AQE wrappers unwrapped."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        attrs = node.output()
+        nodes.append((node.nodeName(),
+                      {attrs.apply(i).name() for i in range(attrs.size())}))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def _weight_joins(df):
+    """The joins of ``df``'s plan that carry the weight lists, and the
+    broadcast exchanges that carry a weight tile payload."""
+    nodes = _plan_nodes(df)
+    joins = [n for n, cols in nodes if n.endswith("Join") and "wtiles" in cols]
+    bcasts = [n for n, cols in nodes
+              if n == "BroadcastExchange" and cols & {"wtile", "wtiles"}]
+    return joins, bcasts
+
+
 def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
     """Above the size gate the weight tile payload must NOT be broadcast —
-    the slim-key equi-join shuffles instead, and results stay bit-exact.
+    the weight-list join shuffles instead, and results stay bit-exact.
     Forces the gate with a zeroed threshold on a multi-tile weight grid."""
     import exactextractr_spark.operators.zonal as zmod
 
@@ -215,7 +242,7 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
     vmeta = RasterMeta("v", xmin=0, ymax=8, dx=1, dy=1, width=8, height=8,
                        tile_w=4, tile_h=4)
     # DIFFERENT tiling (one 8x8 weight tile vs 4x4 value tiles) so the
-    # general cover-join path runs — the aligned fast path is asserted
+    # grouped weight lists are built — the aligned lists are asserted
     # separately below
     wmeta = RasterMeta("w", xmin=0, ymax=8, dx=1, dy=1, width=8, height=8,
                        tile_w=8, tile_h=8)
@@ -229,11 +256,10 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
         ],
     )
     stats = ["weighted_mean", "weighted_sum", "weighted_stdev"]
-    want = [
-        r.asDict()
-        for r in exact_extract(rv, feats, stats, weights=rw)
-        .orderBy("feature_id").collect()
-    ]
+    want_df = exact_extract(rv, feats, stats, weights=rw)
+    # below the gate the lists are broadcast: the plan check sees them
+    assert _weight_joins(want_df) == (["BroadcastHashJoin"], ["BroadcastExchange"])
+    want = [r.asDict() for r in want_df.orderBy("feature_id").collect()]
     # force the over-threshold path; disable AQE auto-broadcast so that any
     # BroadcastExchange left in the plan could only come from a hint
     monkeypatch.setattr(zmod, "WEIGHT_BROADCAST_MAX_BYTES", 0)
@@ -241,14 +267,12 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         got_df = exact_extract(rv, feats, stats, weights=rw)
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        # the weight-tile equi-join (keys w_tr/w_tc) must be a shuffle
-        # join, never a broadcast-hash join of the payload side; other
-        # broadcasts (per-feature aggregate result) are fine
-        import re
-
-        assert not re.search(r"BroadcastHashJoin \[w_tr", plan)
-        assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[w_tr", plan)
+        # the weight-list join is a shuffle join and no broadcast exchange
+        # carries a weight tile; other broadcasts (the per-feature result)
+        # are fine
+        joins, bcasts = _weight_joins(got_df)
+        assert len(joins) == 1 and joins[0] in ("SortMergeJoin", "ShuffledHashJoin")
+        assert bcasts == []
         got = [r.asDict() for r in got_df.orderBy("feature_id").collect()]
         # ALIGNED weights (same grid + tiling): the fast path joins on the
         # tile index with no explode/collect_list, still without a
@@ -262,11 +286,10 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
             .orderBy("feature_id").collect()
         ]
         got2_df = exact_extract(rv, feats, stats, weights=rw2)
+        joins2, bcasts2 = _weight_joins(got2_df)
+        assert len(joins2) == 1 and joins2[0] in ("SortMergeJoin", "ShuffledHashJoin")
+        assert bcasts2 == []
         plan2 = got2_df._jdf.queryExecution().executedPlan().toString()
-        # the weight attach is the tile-index join: above the gate it must
-        # shuffle, not broadcast (the feature_id result broadcast is fine)
-        assert not re.search(r"BroadcastHashJoin \[tile_row", plan2)
-        assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[tile_row", plan2)
         assert "collect_list" not in plan2  # no regroup on the fast path
         got2 = [r.asDict() for r in got2_df.orderBy("feature_id").collect()]
         assert got2 == want2 == want

@@ -728,6 +728,32 @@ def test_streaming_zonal_matches_batch(spark, tmp_path):
     for fid in want_w:
         for s in wstats:
             assert got_w[fid][s] == pytest.approx(want_w[fid][s], rel=1e-12), (fid, s)
+    # a finer (half-cell) weight grid, on its own tiling, streams too: the
+    # values disaggregate as in batch, and count/sum refuse as in batch
+    farr = ((np.arange(576).reshape(24, 24) % 5) + 1).astype(np.float64)
+    fmeta = RasterMeta("w", xmin=0, ymax=12, dx=0.5, dy=0.5, width=24,
+                       height=24, tile_w=5, tile_h=5)
+    fraster = Raster.from_array(spark, farr, fmeta)
+    qfw = stream_zonal_stats(
+        spark, src, feats, wstats, meta=meta, weights=fraster,
+        checkpoint_dir=str(tmp_path / "ckfw"), query_name="zs_test_fw",
+        max_files_per_trigger=1,
+    )
+    qfw.awaitTermination(180)
+    got_fw = {r["feature_id"]: r.asDict()
+              for r in spark.table("zs_test_fw").collect()}
+    want_fw = {r["feature_id"]: r.asDict()
+               for r in exact_extract(Raster.from_tiles(tiles, meta), feats,
+                                      wstats, weights=fraster).collect()}
+    assert set(got_fw) == set(want_fw)
+    assert want_fw != want_w  # the finer grid is really sampled
+    for fid in want_fw:
+        for s in wstats:
+            assert got_fw[fid][s] == pytest.approx(want_fw[fid][s], rel=1e-12), (fid, s)
+    with pytest.raises(ValueError, match="disaggregated"):
+        stream_zonal_stats(spark, src, feats, ["count", "weighted_mean"],
+                           meta=meta, weights=fraster,
+                           checkpoint_dir=str(tmp_path / "ck4"))
     # weighted stats without a weight raster still refuse
     with pytest.raises(ValueError, match="require weights"):
         stream_zonal_stats(spark, src, feats, ["weighted_mean"], meta=meta,

@@ -177,9 +177,9 @@ def main():
         sections.append(f"## {title} (`{name}`)\n\n{commentary}\n\n```\n{plan_of(df)}```\n")
 
     # zonal_weighted both sides of the weight-broadcast size gate: below it
-    # the slim-key weight join is hinted broadcast; above it the hint is
-    # DROPPED and the join shuffles (no BroadcastExchange of wtile payloads
-    # — the round-3 scale-killer).
+    # the weight-list join is hinted broadcast; above it the hint is
+    # DROPPED and the join shuffles (no BroadcastExchange of weight tile
+    # payloads — the round-3 scale-killer).
     import exactextractr_spark.operators.zonal as zmod
 
     df = qs["zonal_weighted"](spark, SF_DIR)
@@ -189,8 +189,10 @@ def main():
         "The sf0.1 weight raster shares the value grid AND tiling, so "
         "the ALIGNED fast path runs: weight tile (r, c) equi-joins value "
         "tile (r, c) directly (no explode, no collect_list regroup), "
-        "broadcast-hinted below the size gate. Misaligned weights take "
-        "the cover join + slim-key regroup instead.\n\n"
+        "broadcast-hinted below the size gate. Other weight grids build "
+        "the same per-value-tile lists from the weight side: each weight "
+        "tile explodes over the value tiles it overlaps and one groupBy "
+        "collects them, then the lists join on (tile_row, tile_col).\n\n"
         f"```\n{plan_of(df)}```\n"
     )
     old_gate = zmod.WEIGHT_BROADCAST_MAX_BYTES
@@ -203,9 +205,10 @@ def main():
             "## Weighted zonal, weight raster ABOVE the broadcast gate\n\n"
             "Same query with WEIGHT_BROADCAST_MAX_BYTES forced to 0 (and "
             "AQE auto-broadcast off so the strategy choice is visible): "
-            "the weight attachment becomes a SortMergeJoin on the tile "
-            "index (aligned fast path; (w_tr, w_tc) on the misaligned "
-            "cover join) — a 100x-larger weight raster shuffles instead "
+            "the weight-list join becomes a SortMergeJoin on the value "
+            "tile index (for every weight grid: the aligned lists and the "
+            "grouped ones share that key) — a 100x-larger weight raster "
+            "shuffles instead "
             "of OOM-ing the executors with a payload broadcast.\n\n"
             f"```\n{plan_of(df)}```\n"
         )
