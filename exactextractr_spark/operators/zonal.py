@@ -438,31 +438,44 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
 WEIGHT_BROADCAST_MAX_BYTES = 64 << 20
 
 
-def _weight_side(w: DataFrame, wm) -> DataFrame:
-    """``w``, hinted for broadcast while the weight raster's in-memory
-    pixel payload (8 bytes/cell float64, an upper bound from metadata
-    alone — no job) is at most WEIGHT_BROADCAST_MAX_BYTES."""
-    if int(wm.width) * int(wm.height) * 8 <= WEIGHT_BROADCAST_MAX_BYTES:
+def _weight_side(w: DataFrame, wm, fanout: int = 1) -> DataFrame:
+    """``w``, hinted for broadcast while the weight lists' in-memory pixel
+    payload is at most WEIGHT_BROADCAST_MAX_BYTES: 8 bytes per weight cell
+    (float64) times ``fanout``, the most lists one weight tile can land in —
+    an upper bound from metadata alone, no job."""
+    if int(wm.width) * int(wm.height) * 8 * fanout <= WEIGHT_BROADCAST_MAX_BYTES:
         return F.broadcast(w)
     return w
 
 
-def weight_disagg(values_meta, weights_meta) -> "tuple[int, int]":
-    """The factor (fx, fy) by which a weight grid finer than the value grid
+def weight_disagg(values_meta, weights: "Raster | None", stats=()) -> "tuple[int, int]":
+    """The weight decision of every zonal entry point (ref
+    exact_extract.cpp:316-332), made from metadata before any job: the
+    factor (fx, fy) by which a weight grid finer than the value grid
     disaggregates the value raster onto the finest common grid (ref
-    RasterView, raster.h:248-312); (1, 1) when the weights are not finer.
-    Raises when resolutions are not integer multiples or origins do not
-    align (ref grid.h:219-282, checked at exact_extract.cpp:316-317): a
-    misaligned weight grid must not silently sample the wrong cells."""
-    vg, wg = values_meta.grid, weights_meta.grid
+    RasterView, raster.h:248-312); (1, 1) when the weights are not finer,
+    or absent. Raises when resolutions are not integer multiples or origins
+    do not align (ref grid.h:219-282): a misaligned weight grid must not
+    silently sample the wrong cells. Refuses ``count``/``sum`` among
+    ``stats`` when the values are disaggregated: they are meaningless on
+    disaggregated values (exact_extract.cpp:329-332)."""
+    if weights is None:
+        return (1, 1)
+    vg, wg = values_meta.grid, weights.meta.grid
     if not vg.compatible_with(wg):
         raise ValueError(
             "weights grid is not compatible with the value grid "
             "(resolutions must be integer multiples, origins aligned)"
         )
-    if wg.dx < vg.dx or wg.dy < vg.dy:
-        return (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
-    return (1, 1)
+    if not (wg.dx < vg.dx or wg.dy < vg.dy):
+        return (1, 1)
+    banned = {"count", "sum"} & set(stats)
+    if banned:
+        raise ValueError(
+            f"stats {sorted(banned)} cannot be computed when the "
+            "value raster is disaggregated to a finer weight grid"
+        )
+    return (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
 
 
 def _weight_tile() -> Column:
@@ -484,10 +497,11 @@ def weight_lists(values_meta, weights: Raster) -> DataFrame:
     overlaps weight tile (r, c) and nothing else, so each list is that one
     tile under its own key — no explode, no regroup. Otherwise each weight
     tile that meets the value raster enumerates the value tiles it overlaps
-    (``tile_span`` on the value grid) and one groupBy collects the lists.
-    ``sample_weights`` reads each cell from the listed tile that contains
-    its centre, and weight tiles are disjoint, so neither list order nor a
-    member that only touches the value tile changes a weight."""
+    (``tile_span`` on the value grid) and one groupBy collects the lists;
+    a weight tile then sits in up to ``fanout`` lists, which the size gate
+    counts. ``sample_weights`` reads each cell from the listed tile that
+    contains its centre, and weight tiles are disjoint, so neither list
+    order nor a member that only touches the value tile changes a weight."""
     wm, vm = weights.meta, values_meta
     if vm.same_grid(wm) and (wm.tile_w, wm.tile_h) == (vm.tile_w, vm.tile_h):
         return _weight_side(
@@ -507,37 +521,30 @@ def weight_lists(values_meta, weights: Raster) -> DataFrame:
     expanded = wt.withColumn("tile_row", F.explode(F.sequence(r0, r1))).withColumn(
         "tile_col", F.explode(F.sequence(c0, c1))
     )
+    # a span of s value tiles (s not whole) meets at most ceil(s) + 1 of them
+    fanout = (
+        (math.ceil(wm.tile_w * wm.dx / (vm.tile_w * vm.dx)) + 1)
+        * (math.ceil(wm.tile_h * wm.dy / (vm.tile_h * vm.dy)) + 1)
+    )
     return _weight_side(
         expanded.groupBy("tile_row", "tile_col").agg(
             F.collect_list("wtile").alias("wtiles")
         ),
         wm,
+        fanout,
     )
 
 
-def attach_weights(
-    cand: DataFrame, values_meta, weights: "Raster | None", stats=()
-) -> "tuple[DataFrame, tuple[int, int]]":
-    """The weight decision of every zonal entry point (ref
-    exact_extract.cpp:316-332): check the weight grid against the value
-    grid and pick the disaggregation factor (``weight_disagg``), refuse
-    ``count``/``sum`` among ``stats`` when the values are disaggregated,
-    then left-join the ``weight_lists`` onto the candidate tiles as
-    ``wtiles``. Returns the candidates and the factor for
-    ``coverage_facts(disagg=)``; ``(cand, (1, 1))`` without weights."""
+def attach_weights(cand: DataFrame, values_meta, weights: "Raster | None") -> DataFrame:
+    """``cand`` with the ``weight_lists`` left-joined on the tile key as
+    ``wtiles`` — the one weight attach of every entry point, which first
+    takes its ``coverage_facts(disagg=)`` factor, and its refusals, from
+    ``weight_disagg``; ``cand`` unchanged without weights."""
     if weights is None:
-        return cand, (1, 1)
-    disagg = weight_disagg(values_meta, weights.meta)
-    banned = {"count", "sum"} & set(stats)
-    if disagg != (1, 1) and banned:
-        # count/sum are meaningless on disaggregated values
-        # (exact_extract.cpp:329-332)
-        raise ValueError(
-            f"stats {sorted(banned)} cannot be computed when the "
-            "value raster is disaggregated to a finer weight grid"
-        )
-    wlists = weight_lists(values_meta, weights)
-    return cand.join(wlists, on=["tile_row", "tile_col"], how="left"), disagg
+        return cand
+    return cand.join(
+        weight_lists(values_meta, weights), on=["tile_row", "tile_col"], how="left"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -986,10 +993,11 @@ def exact_extract(
             "weights provided but no requested stat uses them "
             "(ref test_exact_extract_errors.R:28-36)"
         )
+    disagg = weight_disagg(values.meta, wraster, stats)
     cand, feats_bc = build_candidates(
         values, features, broadcast_features, salt_buckets=salt_buckets
     )
-    cand, disagg = attach_weights(cand, values.meta, wraster, stats)
+    cand = attach_weights(cand, values.meta, wraster)
     return _kernel_stats(
         plan, cand, features, feats_bc, append_cols=append_cols, sort=sort,
         disagg=disagg,
@@ -1052,8 +1060,9 @@ def exact_extract_pixels(
     a ``feature_id`` column whose remaining columns are copied onto every
     pixel row of that feature (broadcast left join — attribute tables are
     small next to pixel tables)."""
+    disagg = weight_disagg(values.meta, weights)
     cand, feats_bc = build_candidates(values, features, broadcast_features)
-    cand, disagg = attach_weights(cand, values.meta, weights)
+    cand = attach_weights(cand, values.meta, weights)
     facts = coverage_facts(
         cand,
         feats_bc=feats_bc,

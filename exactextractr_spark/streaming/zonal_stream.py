@@ -75,13 +75,16 @@ def stream_zonal_stats(
     there, which is the resumable-pipeline shape: the newest snapshot is
     always a consistent answer over every tile ingested so far.
     """
-    from ..operators.zonal import attach_weights, build_candidates, coverage_facts
+    from ..operators.zonal import (
+        attach_weights, build_candidates, coverage_facts, weight_disagg,
+    )
 
     if isinstance(stats, str):
         stats = [stats]
     plan = StatsPlan(stats, quantiles or [])
     if plan.needs_weights and weights is None:
         raise ValueError(f"stats {sorted(set(stats))} require weights")
+    disagg = weight_disagg(meta, weights, stats)
 
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
@@ -94,7 +97,7 @@ def stream_zonal_stats(
     cand, feats_bc = build_candidates(Raster.from_tiles(raw, meta), features)
     # the batch weight attach: static per-value-tile weight lists joined
     # stream-static (stateless; broadcast only under the size gate)
-    cand, disagg = attach_weights(cand, meta, weights, stats)
+    cand = attach_weights(cand, meta, weights)
     # the stateful aggregate merges the kernel's partials (complete mode);
     # freq state is bounded by |features| x |distinct values| (categorical
     # rasters; max_state_rows guards the continuous case loudly)

@@ -274,6 +274,16 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
         assert len(joins) == 1 and joins[0] in ("SortMergeJoin", "ShuffledHashJoin")
         assert bcasts == []
         got = [r.asDict() for r in got_df.orderBy("feature_id").collect()]
+        # the raw weight raster (8*8 cells * 8 bytes) fits the gate but its
+        # lists do not: the one 8x8 weight tile lands in every 4x4 value
+        # tile's list, and the gate counts each copy
+        monkeypatch.setattr(zmod, "WEIGHT_BROADCAST_MAX_BYTES", 8 * 8 * 8)
+        fan_df = exact_extract(rv, feats, stats, weights=rw)
+        joins, bcasts = _weight_joins(fan_df)
+        assert len(joins) == 1 and joins[0] in ("SortMergeJoin", "ShuffledHashJoin")
+        assert bcasts == []
+        assert [r.asDict() for r in fan_df.orderBy("feature_id").collect()] == want
+        monkeypatch.setattr(zmod, "WEIGHT_BROADCAST_MAX_BYTES", 0)
         # ALIGNED weights (same grid + tiling): the fast path joins on the
         # tile index with no explode/collect_list, still without a
         # payload broadcast above the gate, and stays bit-exact
@@ -293,6 +303,12 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
         assert "collect_list" not in plan2  # no regroup on the fast path
         got2 = [r.asDict() for r in got2_df.orderBy("feature_id").collect()]
         assert got2 == want2 == want
+        # aligned lists hold each weight tile once: the same raw size that
+        # shuffles the grouped lists above is broadcast here
+        monkeypatch.setattr(zmod, "WEIGHT_BROADCAST_MAX_BYTES", 8 * 8 * 8)
+        al_df = exact_extract(rv, feats, stats, weights=rw2)
+        assert _weight_joins(al_df) == (["BroadcastHashJoin"], ["BroadcastExchange"])
+        assert [r.asDict() for r in al_df.orderBy("feature_id").collect()] == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
     assert got == want

@@ -192,7 +192,9 @@ def main():
         "broadcast-hinted below the size gate. Other weight grids build "
         "the same per-value-tile lists from the weight side: each weight "
         "tile explodes over the value tiles it overlaps and one groupBy "
-        "collects them, then the lists join on (tile_row, tile_col).\n\n"
+        "collects them, then the lists join on (tile_row, tile_col); "
+        "there the gate counts a weight tile once per list it can land "
+        "in.\n\n"
         f"```\n{plan_of(df)}```\n"
     )
     old_gate = zmod.WEIGHT_BROADCAST_MAX_BYTES
