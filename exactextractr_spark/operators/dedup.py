@@ -410,9 +410,9 @@ def ngram_jaccard_pairs(
     probability ~1e-7 — the same accepted trade as the banded MinHash
     bucket hash)."""
     # the tokenize + gram-build + explode map phase must not inherit a
-    # single-file scan's 1-partition layout (a 30 MB corpus file is one
-    # split at the session's 32 MB maxPartitionBytes): one cheap shuffle of
-    # the slim (id, text) projection buys full-core gram building
+    # single-file scan's layout (a corpus file is read by one task per
+    # row group, often just one): one cheap shuffle of the slim (id, text)
+    # projection buys full-core gram building
     docs = spread(docs.select(id_col, text_col))
     toks = F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")), r"\s+")
     gram_strs = F.expr(

@@ -25,12 +25,17 @@ The coverage kernel (``coverage_facts``) is the one tile kernel for
 polygons and lines: a chain of stages, each a module-level helper that the
 resample kernel shares where it needs it:
 
-- decode: ``sources.tiles.tile_pixels`` — a tile's pixels, nodata as NaN;
 - features: ``TileFeatures`` — a tile's candidate features, from the
   feature broadcast or the row's cover-join list, through the one bbox
   predicate ``bbox_overlaps``;
-- cover: ``cover_cells`` (polygons: exact coverage fractions) or
-  ``cover_lines`` (LineStrings: the traversal length per cell), both as
+- classify: ``classify_pair`` — each polygon pair is exterior (dropped),
+  interior or boundary (``core.coverage.tile_class``), before anything is
+  decoded;
+- decode: ``sources.tiles.tile_pixels`` — a tile's pixels, nodata as NaN,
+  only for a tile with a pair left;
+- cover: ``cover_cells`` (polygons: exact coverage fractions),
+  ``interior_cells`` (interior pairs: every cell at 1.0, no integral) or
+  ``cover_lines`` (LineStrings: the traversal length per cell), all as
   ``Cells``;
 - values and weights: ``Cells.take_values``, ``cell_areas``,
   ``sample_weights`` (over the ``wtiles`` lists that ``attach_weights``,
@@ -55,7 +60,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import geom as G
-from ..core.coverage import cell_lengths, coverage_fraction
+from ..core.coverage import (
+    BOUNDARY,
+    EXTERIOR,
+    INTERIOR,
+    cell_lengths,
+    coverage_fraction,
+    tile_class,
+)
 from ..core.grid import Box, Grid
 from ..plans.stats import StatsPlan, with_all_features
 from ..sources.tiles import Raster, tile_pixels
@@ -135,6 +147,15 @@ def _tile_index(offset: Column, step: float, n: int, nudge: float = 0.0) -> Colu
     elif nudge < 0:
         q = q - F.lit(-nudge)
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(q))).cast("int")
+
+
+def _tiles_spanned(near: float, far: float, step: float, n: int, tol: float) -> int:
+    """How many tiles one axis of ``tile_span`` gives for the offsets
+    ``near`` and ``far``, on the driver with the same float operations:
+    ``F.sequence`` of the first and last index, which counts down too."""
+    first = max(0, min(n - 1, math.floor(near / step + tol)))
+    last = max(0, min(n - 1, math.floor(far / step - tol)))
+    return abs(last - first) + 1
 
 
 def tile_span(m, xmin: Column, ymin: Column, xmax: Column, ymax: Column,
@@ -430,20 +451,47 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
     ))
 
 
-# Broadcast the weight lists only while the weight raster's full pixel
-# payload is plausibly executor-memory safe. Above this the hint is dropped
-# and the tile-key join of the lists shuffles instead (AQE picks the
-# strategy) — an unconditional broadcast of a 100-TB-scale weight raster's
-# payloads is a driver/executor OOM, not a slowdown.
+# Broadcast the weight lists only while their full pixel payload, every
+# copy of a weight tile counted, is plausibly executor-memory safe. Above
+# this the hint is dropped and the tile-key join of the lists shuffles
+# instead (AQE picks the strategy) — an unconditional broadcast of a
+# 100-TB-scale weight raster's payloads is a driver/executor OOM, not a
+# slowdown.
 WEIGHT_BROADCAST_MAX_BYTES = 64 << 20
 
 
-def _weight_side(w: DataFrame, wm, fanout: int = 1) -> DataFrame:
+def _weight_list_bytes(values_meta, wm, tol: float = 1e-9) -> int:
+    """The pixel payload, in float64 bytes, of the lists ``weight_lists``
+    builds, from metadata alone: each weight tile that meets the value
+    raster is copied into the list of every value tile it spans. Overlap
+    and span separate by axis, so the payload is the sum over weight-tile
+    columns of (width x value tiles spanned), times the same sum over
+    rows, times 8. The tile edges repeat the float arithmetic of
+    ``RasterMeta.tile_grid`` and ``raw_tiles_with_meta``, the spans that
+    of ``tile_span(tol=tol)``."""
+    vm = values_meta
+    cols = rows = 0
+    for c0 in range(0, wm.width, wm.tile_w):
+        n = min(wm.tile_w, wm.width - c0)
+        x0 = wm.xmin + c0 * wm.dx
+        x1 = x0 + n * wm.dx
+        if x0 < vm.xmax and x1 > vm.xmin:
+            cols += n * _tiles_spanned(x0 - vm.xmin, x1 - vm.xmin, vm.dx * vm.tile_w,
+                                       vm.n_tile_cols, tol)
+    for r0 in range(0, wm.height, wm.tile_h):
+        n = min(wm.tile_h, wm.height - r0)
+        y1 = wm.ymax - r0 * wm.dy
+        y0 = y1 - n * wm.dy
+        if y0 < vm.ymax and y1 > vm.ymin:
+            rows += n * _tiles_spanned(vm.ymax - y1, vm.ymax - y0, vm.dy * vm.tile_h,
+                                       vm.n_tile_rows, tol)
+    return 8 * cols * rows
+
+
+def _weight_side(w: DataFrame, nbytes: int) -> DataFrame:
     """``w``, hinted for broadcast while the weight lists' in-memory pixel
-    payload is at most WEIGHT_BROADCAST_MAX_BYTES: 8 bytes per weight cell
-    (float64) times ``fanout``, the most lists one weight tile can land in —
-    an upper bound from metadata alone, no job."""
-    if int(wm.width) * int(wm.height) * 8 * fanout <= WEIGHT_BROADCAST_MAX_BYTES:
+    payload ``nbytes`` is at most WEIGHT_BROADCAST_MAX_BYTES."""
+    if nbytes <= WEIGHT_BROADCAST_MAX_BYTES:
         return F.broadcast(w)
     return w
 
@@ -498,17 +546,19 @@ def weight_lists(values_meta, weights: Raster) -> DataFrame:
     tile under its own key — no explode, no regroup. Otherwise each weight
     tile that meets the value raster enumerates the value tiles it overlaps
     (``tile_span`` on the value grid) and one groupBy collects the lists;
-    a weight tile then sits in up to ``fanout`` lists, which the size gate
-    counts. ``sample_weights`` reads each cell from the listed tile that
-    contains its centre, and weight tiles are disjoint, so neither list
-    order nor a member that only touches the value tile changes a weight."""
+    a weight tile then sits in several lists, and the size gate counts
+    each copy (``_weight_list_bytes``). ``sample_weights`` reads each cell
+    from the listed tile that contains its centre, and weight tiles are
+    disjoint, so neither list order nor a member that only touches the
+    value tile changes a weight."""
     wm, vm = weights.meta, values_meta
+    nbytes = _weight_list_bytes(vm, wm)
     if vm.same_grid(wm) and (wm.tile_w, wm.tile_h) == (vm.tile_w, vm.tile_h):
         return _weight_side(
             weights.tiles.select(
                 "tile_row", "tile_col", F.array(_weight_tile()).alias("wtiles")
             ),
-            wm,
+            nbytes,
         )
     # weight tiles off the value raster would be clamped onto its edge tiles
     wt = weights.tiles.filter(bbox_overlaps(
@@ -521,17 +571,11 @@ def weight_lists(values_meta, weights: Raster) -> DataFrame:
     expanded = wt.withColumn("tile_row", F.explode(F.sequence(r0, r1))).withColumn(
         "tile_col", F.explode(F.sequence(c0, c1))
     )
-    # a span of s value tiles (s not whole) meets at most ceil(s) + 1 of them
-    fanout = (
-        (math.ceil(wm.tile_w * wm.dx / (vm.tile_w * vm.dx)) + 1)
-        * (math.ceil(wm.tile_h * wm.dy / (vm.tile_h * vm.dy)) + 1)
-    )
     return _weight_side(
         expanded.groupBy("tile_row", "tile_col").agg(
             F.collect_list("wtile").alias("wtiles")
         ),
-        wm,
-        fanout,
+        nbytes,
     )
 
 
@@ -548,7 +592,7 @@ def attach_weights(cand: DataFrame, values_meta, weights: "Raster | None") -> Da
 
 
 # ---------------------------------------------------------------------------
-# the coverage kernel: decode -> features -> cover -> reduce
+# the coverage kernel: features -> classify -> decode -> cover -> reduce
 # ---------------------------------------------------------------------------
 
 class TileFeatures:
@@ -598,7 +642,10 @@ class Cells:
     them and the value and weight stages fill them in: ``rr``/``cc`` index
     the sampling grid ``samp`` (finer than the tile when disaggregating),
     ``tr``/``tc`` the tile; ``cov`` is the covered fraction, or for lines
-    the traversal length; ``w`` is None when no weight applies."""
+    the traversal length; ``w`` is None when no weight applies.
+
+    The dense form (``interior_cells`` without an index) has no
+    ``rr``/``cc``/``tr``/``tc``: it is every cell of the tile, row-major."""
 
     __slots__ = ("feature_id", "tile", "samp", "rr", "cc", "tr", "tc",
                  "cov", "v", "w", "area", "_xy")
@@ -611,7 +658,7 @@ class Cells:
         self.v = self.w = self.area = self._xy = None
 
     def __len__(self) -> int:
-        return len(self.rr)
+        return len(self.cov)
 
     def take_values(self, px: "np.ndarray | None", default_value,
                     keep_nan: bool = False) -> bool:
@@ -619,16 +666,17 @@ class Cells:
         (after ``default_value``) drop out unless ``keep_nan``. False when
         no cell is left."""
         if px is None:
-            self.v = np.zeros(len(self.rr))
+            self.v = np.zeros(len(self))
             return True
-        v = px[self.tr, self.tc]
+        v = px.ravel() if self.tr is None else px[self.tr, self.tc]
         if default_value is not None:
             v = np.where(np.isnan(v), default_value, v)
         ok = ~np.isnan(v)
         if not keep_nan and not ok.all():
-            self.rr, self.cc, self.tr, self.tc = (
-                self.rr[ok], self.cc[ok], self.tr[ok], self.tc[ok]
-            )
+            if self.tr is not None:
+                self.rr, self.cc, self.tr, self.tc = (
+                    self.rr[ok], self.cc[ok], self.tr[ok], self.tc[ok]
+                )
             self.cov, v = self.cov[ok], v[ok]
         self.v = v
         return len(v) > 0
@@ -642,27 +690,61 @@ class Cells:
         return self._xy
 
 
+def classify_pair(tile: Grid, geom, bbox: Box) -> str:
+    """Classify stage: ``coverage.tile_class`` of a (tile, feature) pair.
+    An interior answer also needs the feature bbox to contain the tile box,
+    because the cover stage crops the tile to the bbox; a pair that fails
+    that (it cannot, for a bbox that bounds the geometry) stays boundary."""
+    kind = tile_class(tile, geom)
+    if kind == INTERIOR and not (bbox.xmin <= tile.xmin and bbox.ymin <= tile.ymin
+                                 and bbox.xmax >= tile.xmax and bbox.ymax >= tile.ymax):
+        return BOUNDARY
+    return kind
+
+
+def _refined(grid: Grid, disagg) -> Grid:
+    """``grid`` with its cells split ``disagg`` = (fx, fy) ways: the grid
+    coverage is computed on when a finer weight grid disaggregates the
+    values. The value raster is then sampled by integer division — the
+    reference's lazy RasterView (raster.h:248-312) without materializing
+    the upsampled block."""
+    fx, fy = disagg
+    if fx > 1 or fy > 1:
+        return Grid(grid.xmin, grid.ymin, grid.xmax, grid.ymax, grid.dx / fx, grid.dy / fy)
+    return grid
+
+
 def cover_cells(tile: Grid, feature_id, geom, bbox: Box, disagg) -> "Cells | None":
     """Cover stage: the exact coverage fractions of ``geom`` over the part
     of ``tile`` inside its bbox, on the grid refined by ``disagg``."""
     sub = tile.crop(bbox)
     if sub.size == 0:
         return None
-    fx, fy = disagg
-    if fx > 1 or fy > 1:
-        # disaggregate: coverage on the finer common grid; the value raster
-        # is sampled by integer division — the reference's lazy RasterView
-        # (raster.h:248-312) without materializing the upsampled block
-        samp = Grid(sub.xmin, sub.ymin, sub.xmax, sub.ymax, sub.dx / fx, sub.dy / fy)
-    else:
-        samp = sub
+    samp = _refined(sub, disagg)
     cov = coverage_fraction(samp, geom)
     rr, cc = np.nonzero(cov > 0)
     if len(rr) == 0:
         return None
+    fx, fy = disagg
     r_off, c_off = tile.row_col_offset(sub)
     return Cells(feature_id, tile, samp, rr, cc, rr // fy + r_off, cc // fx + c_off,
                  cov[rr, cc])
+
+
+def interior_cells(tile: Grid, feature_id, disagg, index: bool) -> Cells:
+    """Cover stage of an ``INTERIOR`` pair (whose feature bbox contains the
+    tile, so ``cover_cells`` would cover all of it): every cell of the
+    sampling grid at coverage 1.0, in the row-major order ``cover_cells``
+    lists them, with no integral and no gather. Without ``index`` (no
+    weights, areas, disaggregation or per-cell output) it is the dense
+    form."""
+    samp = _refined(tile, disagg)
+    cov = np.ones(samp.size)
+    if not index:
+        return Cells(feature_id, tile, samp, None, None, None, None, cov)
+    fx, fy = disagg
+    rr, cc = np.divmod(np.arange(samp.size), samp.ncols)
+    return Cells(feature_id, tile, samp, rr, cc, rr // fy, cc // fx, cov)
 
 
 def cover_lines(tile: Grid, feature_id, geom, values_meta) -> "Cells | None":
@@ -852,24 +934,36 @@ def coverage_facts(
 
     Per tile row the kernel runs its stages in order:
 
-    1. decode — ``tiles.tile_pixels``: the tile's pixel block, once for all
-       its features (skipped under ``coverage_only``);
-    2. features — ``TileFeatures``: the tile's candidate features. With
+    1. features — ``TileFeatures``: the tile's candidate features. With
        ``feats_bc`` (a ``sc.broadcast(FeatureBroadcast)``, the
        feature-sequential strategy) ``cand`` is the bare tile DataFrame and
        candidates come from a vectorized bbox test; otherwise ``cand``
        carries each tile's cover-join ``feats`` list;
-    3. cover — ``cover_cells``: exact coverage fractions on the tile grid,
-       refined by ``disagg`` for a finer weight grid; with ``linear``,
-       ``cover_lines``: the traversal length per cell of LineString
-       features, as ``cov`` (the reference's linear coverage,
-       raster_cell_intersection.cpp:250-259);
-    4. values, areas and weights — ``Cells.take_values`` (NaN cells drop
+    2. classify — ``classify_pair``: a polygon pair is ``EXTERIOR`` (no
+       ring edge meets the closed tile box and the box lies outside the
+       polygon, or in a hole: dropped), ``INTERIOR`` (no edge meets the
+       box, exactly one part holds it, outside its holes, and the feature
+       bbox contains it) or ``BOUNDARY`` (everything else, overlapping
+       parts and non-polygonal features included); ``linear`` pairs are
+       all boundary;
+    3. decode — ``tiles.tile_pixels``: the tile's pixel block, once for all
+       its pairs, and only when a pair is left (skipped under
+       ``coverage_only``);
+    4. cover — boundary pairs: ``cover_cells``, exact coverage fractions on
+       the tile grid, refined by ``disagg`` for a finer weight grid; with
+       ``linear``, ``cover_lines``: the traversal length per cell of
+       LineString features, as ``cov`` (the reference's linear coverage,
+       raster_cell_intersection.cpp:250-259). Interior pairs:
+       ``interior_cells``, every cell at coverage 1.0 in the same
+       row-major order, with no integral; with no weights, areas,
+       disaggregation or per-cell output they are dense (values are the
+       tile block's ravel, no cell index is built);
+    5. values, areas and weights — ``Cells.take_values`` (NaN cells drop
        out, except from the ``linear`` pixels emit), ``cell_areas``
        (``coverage_area``, ``area_weights``, ``include_area``),
        ``sample_weights`` (a ``wtiles`` column); with neither weights nor
        ``area_weights`` the weighted sums are NaN;
-    5. reduce — the ``Reducer`` of ``emit`` (the reference's per-chunk
+    6. reduce — the ``Reducer`` of ``emit`` (the reference's per-chunk
        StatsRegistry accumulation, stats_registry.h:25-84, done before the
        shuffle instead of after it):
 
@@ -886,6 +980,14 @@ def coverage_facts(
     ``coverage_only`` is for geometry-only queries (coverage fractions,
     rasterize): the pixel payload columns are dropped before the Python
     stage, every covered cell is kept and values read 0.
+
+    Interior and exterior pairs get the reference's exact 1.0 and 0
+    (floodfill.cpp:22-39). On a grid whose coordinates, steps and vertices
+    are exact in binary at the raster's scale (unit cells, power-of-two
+    steps) the integral gives the same, so every emit is bitwise that of
+    the integral alone. On other grids the integral gives interior cells
+    1 ± ~1e-14 and exterior cells up to ~1e-14, so sums move by about
+    that relative amount.
     """
     if emit == "moments":
         new_reducer = partial(MomentsReducer, by_layer)
@@ -900,8 +1002,13 @@ def coverage_facts(
     if linear:
         def cover(tile, fid, geom, bbox):
             return cover_lines(tile, fid, geom, values_meta)
+        classify = None
     else:
         cover = partial(cover_cells, disagg=disagg)
+        # bound here, not looked up in the worker, so a test can patch it
+        classify = classify_pair
+    # interior cells need their indexes for anything but the values
+    index = emit == "pixels" or coverage_only or need_area or disagg != (1, 1)
     # the line pixel table lists every traversed cell, nodata ones with
     # v = NaN (a line's path is data in itself); the stat emits drop them
     keep_nan = linear and emit == "pixels"
@@ -916,11 +1023,22 @@ def coverage_facts(
         for pdf in batches:
             has_w = "wtiles" in pdf.columns
             for row in pdf.itertuples(index=False):
-                px = None if coverage_only else tile_pixels(row)
                 tile = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
-                layer = row.layer if by_layer else None
+                pairs = []
                 for fid, geom, fxmin, fymin, fxmax, fymax in features(row):
-                    c = cover(tile, fid, geom, Box(fxmin, fymin, fxmax, fymax))
+                    bbox = Box(fxmin, fymin, fxmax, fymax)
+                    kind = BOUNDARY if classify is None else classify(tile, geom, bbox)
+                    if kind != EXTERIOR:
+                        pairs.append((fid, geom, bbox, kind))
+                if not pairs:
+                    continue
+                px = None if coverage_only else tile_pixels(row)
+                layer = row.layer if by_layer else None
+                for fid, geom, bbox, kind in pairs:
+                    if kind == INTERIOR:
+                        c = interior_cells(tile, fid, disagg, index or has_w)
+                    else:
+                        c = cover(tile, fid, geom, bbox)
                     if c is None:
                         continue
                     if not c.take_values(px, default_value, keep_nan):

@@ -31,9 +31,14 @@ def get_spark(
         # with ~0.5 MB binary tile payloads that would be ~2 GB per batch
         .config("spark.sql.parquet.columnarReaderBatchSize", "16")
         .config("spark.sql.orc.columnarReaderBatchSize", "16")
-        # tile files are dense binary; 32 MB splits give every parallelism
-        # level several task waves (smooth balance, short straggler tail)
-        .config("spark.sql.files.maxPartitionBytes", "33554432")
+        # spark.sql.files.maxPartitionBytes stays at Spark's default: a
+        # Python task costs about 0.15-0.2 core-s of runner overhead (a
+        # trivial mapInPandas over 16 one-row partitions, warm, takes
+        # 2.4-2.8 s at local[1] and 1.0-1.4 s at local[4] on a 4-core
+        # host), and a split holding no parquet row-group midpoint still
+        # starts one. Tile files are written as one row group each, so
+        # smaller splits only add empty tasks (a 32 MiB split gave 16
+        # tasks over 8 such 61 MB files, 8 of them empty)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

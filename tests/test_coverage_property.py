@@ -10,7 +10,9 @@ area-conservation checks in test_coverage_fraction.R:107-121, generalized):
 3. additivity: splitting the polygon with a vertical chord and summing the
    two coverage matrices reproduces the original (up to fp);
 4. grid-translation equivariance: shifting polygon and grid together leaves
-   the matrix unchanged.
+   the matrix unchanged;
+5. the tile classifier agrees with the integral: an interior tile has
+   coverage 1 and an exterior tile coverage 0 in every cell.
 """
 
 import numpy as np
@@ -112,6 +114,103 @@ def test_grid_translation_equivariance(angles_r, ox, oy):
     assert np.allclose(
         coverage_fraction(shifted_grid, shifted_poly), base, rtol=1e-9, atol=1e-12
     )
+
+
+def _random_ring(rng, cx, cy, radius, n, quantum, clockwise):
+    """Closed star-shaped ring of ``n`` vertices around (cx, cy), vertices
+    rounded to multiples of 1/``quantum`` when given."""
+    th = np.sort(rng.uniform(0, 2 * np.pi, n))
+    r = radius * rng.uniform(0.7, 1.0, n)
+    pts = np.column_stack([cx + r * np.cos(th), cy + r * np.sin(th)])
+    if quantum:
+        pts = np.round(pts * quantum) / quantum
+    if clockwise:
+        pts = pts[::-1]
+    return np.vstack([pts, pts[:1]])
+
+
+def _random_polygon(rng, quantum):
+    """A star polygon of either orientation with 0-2 holes of either
+    orientation near its centre (kept inside: radius < 0.3 of the ring's
+    smallest radius away from a centre moved by < 0.3 of it)."""
+    cx, cy = rng.uniform(20, 44, 2)
+    big = rng.uniform(6, 20)
+    rings = [_random_ring(rng, cx, cy, big, rng.integers(5, 40), quantum,
+                          rng.random() < 0.5)]
+    for _ in range(rng.integers(0, 3)):
+        hx, hy = np.array([cx, cy]) + rng.uniform(-0.3, 0.3, 2) * big
+        rings.append(_random_ring(rng, hx, hy, rng.uniform(0.5, 0.3 * big),
+                                  rng.integers(4, 12), quantum, rng.random() < 0.5))
+    return Geometry(kind="Polygon", rings=rings)
+
+
+@pytest.mark.parametrize("dyadic", [True, False])
+def test_tile_class_implies_coverage(dyadic):
+    """``tile_class`` never contradicts the integral: INTERIOR means
+    coverage 1 in every cell, EXTERIOR 0 in every cell — exactly on a
+    dyadic grid with dyadic vertices, within 1e-12 on a non-dyadic one
+    (the integral's own float noise there). Random rings with holes, and
+    two-part MultiPolygons that may overlap (coverage 2 is BOUNDARY)."""
+    from exactextractr_spark.core.coverage import EXTERIOR, INTERIOR, tile_class
+
+    rng = np.random.default_rng(11 if dyadic else 12)
+    tol = 0.0 if dyadic else 1e-12
+    seen = {EXTERIOR: 0, INTERIOR: 0}
+    for _ in range(300):
+        parts = [_random_polygon(rng, 1024 if dyadic else None)
+                 for _ in range(rng.integers(1, 3))]
+        geom = parts[0] if len(parts) == 1 else Geometry(kind="MultiPolygon", parts=parts)
+        x0b, y0b, x1b, y1b = geom.bounds()
+        for _ in range(8):
+            if dyadic:
+                d = 2.0 ** int(rng.integers(-2, 1))
+                x0 = float(np.floor(rng.uniform(x0b - 4, x1b) * 4) / 4)
+                y0 = float(np.floor(rng.uniform(y0b - 4, y1b) * 4) / 4)
+            else:
+                d = float(rng.choice([0.1, 0.3, 0.7]))
+                x0, y0 = rng.uniform(x0b - 4, x1b), rng.uniform(y0b - 4, y1b)
+            n = int(rng.integers(2, 12))
+            grid = Grid(x0, y0, x0 + n * d, y0 + n * d, d, d)
+            kind = tile_class(grid, geom)
+            if kind in seen:
+                seen[kind] += 1
+                cov = coverage_fraction(grid, geom)
+                want = 1.0 if kind == INTERIOR else 0.0
+                assert np.abs(cov - want).max() <= tol, (kind, grid)
+    assert min(seen.values()) >= 50, seen
+
+
+def test_tile_class_edge_cases():
+    """A ring vertex on the box edge, a hole holding the whole box, a hole
+    inside the box, overlapping parts and non-polygonal geometries."""
+    from exactextractr_spark.core.coverage import (
+        BOUNDARY, EXTERIOR, INTERIOR, tile_class,
+    )
+
+    grid = Grid(4, 4, 8, 8, 1, 1)
+    cases = {
+        "POLYGON ((0 0, 12 0, 12 12, 0 12, 0 0))": INTERIOR,
+        "POLYGON ((0 0, 0 12, 12 12, 12 0, 0 0))": INTERIOR,  # clockwise
+        "POLYGON ((0 0, 12 0, 12 12, 8 6, 0 12, 0 0))": BOUNDARY,  # vertex on edge
+        "POLYGON ((8 0, 12 0, 12 12, 8 12, 8 0))": BOUNDARY,  # edge along box edge
+        "POLYGON ((8.5 0, 12 0, 12 12, 8.5 12, 8.5 0))": EXTERIOR,
+        "POLYGON ((0 0, 12 0, 12 12, 0 12, 0 0), (3 3, 9 3, 9 9, 3 9, 3 3))": EXTERIOR,
+        "POLYGON ((0 0, 12 0, 12 12, 0 12, 0 0), (5 5, 6 5, 6 6, 5 6, 5 5))": BOUNDARY,
+        "MULTIPOLYGON (((0 0, 12 0, 12 12, 0 12, 0 0)), ((2 2, 10 2, 10 10, 2 10, 2 2)))":
+            BOUNDARY,  # coverage 2
+        "MULTIPOLYGON (((0 0, 12 0, 12 12, 0 12, 0 0), (3 3, 9 3, 9 9, 3 9, 3 3)), "
+        "((4 4, 8 4, 8 8, 4 8, 4 4)))": BOUNDARY,  # a part's ring on the box
+        "MULTIPOLYGON (((0 0, 12 0, 12 12, 0 12, 0 0), (3 3, 9 3, 9 9, 3 9, 3 3)), "
+        "((2 2, 10 2, 10 10, 2 10, 2 2)))": INTERIOR,  # in one part's hole, in the other
+        "LINESTRING (0 0, 12 12)": BOUNDARY,
+        "MULTIPOINT ((0 0), (12 12))": BOUNDARY,
+    }
+    for wkt, want in cases.items():
+        geom = from_wkt(wkt)
+        assert tile_class(grid, geom) == want, wkt
+        if want != BOUNDARY:
+            cov = coverage_fraction(grid, geom)
+            assert (cov == (1.0 if want == INTERIOR else 0.0)).all(), wkt
 
 
 def test_wkt_roundtrip_consistency():

@@ -314,6 +314,50 @@ def test_large_weight_raster_shuffles_not_broadcasts(spark, monkeypatch):
     assert got == want
 
 
+def test_weight_list_gate_counts_the_real_payload(spark, monkeypatch):
+    """80x120 weight tiles over the 100x100 value tiles of one 1200² grid:
+    a weight tile sits in the list of every value tile it spans, 3.2 on
+    average, so the lists hold 36.9 MB. The gate counts exactly that, from
+    metadata, and broadcasts them under its 64 MB (a bound of 2 x 3 copies
+    per tile read 69 MB and shuffled them). Checked against an integer
+    count of the spans; no job runs."""
+    from dataclasses import replace
+
+    from exactextractr_spark.operators import zonal
+    from exactextractr_spark.sources.tiles import TILE_SCHEMA
+
+    vm = RasterMeta("v", xmin=0, ymax=1200, dx=1, dy=1, width=1200, height=1200,
+                    tile_w=100, tile_h=100)
+    wm = replace(vm, layer="w", tile_w=80, tile_h=120)
+
+    def spans(n, step, vstep, v0=0, vn=1200):
+        """Sum over the tiles [a, a + step) of an n-cell axis that meet
+        [v0, v0 + vn) of (cells x value tiles of vstep met with area)."""
+        total = 0
+        for a in range(0, n, step):
+            lo, hi = max(a, v0) - v0, min(a + step, n, v0 + vn) - v0
+            if hi > lo:
+                total += min(step, n - a) * (-(-hi // vstep) - lo // vstep)
+        return total
+
+    want = 8 * spans(1200, 80, 100) * spans(1200, 120, 100)
+    assert want == 36_864_000  # 3.2 copies of 1200² float64 cells
+    assert zonal._weight_list_bytes(vm, wm) == want
+    # weight tiles that miss the value raster are not listed
+    right = replace(vm, xmin=600, width=600)
+    assert zonal._weight_list_bytes(right, wm) == 8 * spans(
+        1200, 80, 100, 600, 600) * spans(1200, 120, 100) < want
+
+    def hinted(limit):
+        monkeypatch.setattr(zonal, "WEIGHT_BROADCAST_MAX_BYTES", limit)
+        w = Raster.from_tiles(spark.createDataFrame([], TILE_SCHEMA), wm)
+        plan = zonal.weight_lists(vm, w)._jdf.queryExecution().analyzed().toString()
+        return "strategy=broadcast" in plan
+
+    assert hinted(64 << 20)
+    assert not hinted(want - 1)
+
+
 def test_weighted_variance(spark, r19, sq):
     # weighted variance/stdev: population variance with weight c_i*w_i
     # (ref raster_stats.h:320-341, second WestVariance fed ciwi)
@@ -742,6 +786,149 @@ def test_kernel_emit_paths_and_strategies_agree(spark):
         per_strategy.append(got)
     np.testing.assert_allclose(per_strategy[0], per_strategy[1], rtol=1e-12,
                                equal_nan=True)
+
+
+def test_classified_pairs_match_the_integral(spark, monkeypatch):
+    """The classify stage (exterior pairs dropped, interior pairs at
+    coverage 1.0 without the integral) changes no kernel output: on a
+    dyadic grid every emit is bitwise that of a run whose classifier sends
+    every pair to the integral. Covers a hole inside a tile and one
+    holding a whole tile, overlapping MultiPolygon parts over a tile
+    (coverage 2), ring vertices and edges on tile edges, NaN and sentinel
+    cells inside an interior tile (one of them all NaN) with and without
+    ``default_value``, aligned and finer weights, cell areas, the pixels
+    emit with cells and centres, and the coverage-only facts, with moments
+    and freq also under the cover join. On a non-dyadic grid the named
+    stats agree to rel 1e-12 and interior cells read exactly 1.0. A
+    non-polygonal feature still raises."""
+    import re
+
+    from exactextractr_spark.core import geom as G
+    from exactextractr_spark.core.coverage import BOUNDARY, EXTERIOR, INTERIOR
+    from exactextractr_spark.core.grid import Box
+    from exactextractr_spark.operators import zonal
+    from exactextractr_spark.operators.coverage_op import coverage_fraction_df
+
+    # values and weights not exact in binary: sums depend on cell order
+    rng = np.random.default_rng(3)
+    vals = rng.uniform(1, 7, (24, 24))
+    vals[16:18, 12:14] = np.nan  # inside interior tile (4, 3)
+    vals[18, 15] = vals[19, 12] = -9999.0  # sentinels, same tile
+    vals[16:20, 16:20] = np.nan  # interior tile (4, 4): all nodata
+    w_al = rng.uniform(0.5, 3.0, (24, 24))
+    w_fine = rng.uniform(0.5, 3.0, (48, 48))
+    wkts = [
+        # holes: one holding tile (4, 1) whole, one inside tile (3, 3)
+        "POLYGON ((0.5 0.5, 23.5 0.5, 23.5 15.5, 0.5 15.5, 0.5 0.5), "
+        "(3.5 3.5, 8.5 3.5, 8.5 8.5, 3.5 8.5, 3.5 3.5), "
+        "(13.25 9.25, 14.5 9.25, 14.5 10.5, 13.25 10.5, 13.25 9.25))",
+        # parts overlapping over tile (1, 4), and a clockwise third part
+        "MULTIPOLYGON (((15.5 15.5, 23.5 15.5, 23.5 23.5, 15.5 23.5, 15.5 15.5)), "
+        "((15.75 15.75, 23.25 15.75, 23.25 23.25, 15.75 23.25, 15.75 15.75)), "
+        "((0.5 16.5, 0.5 23.5, 3.5 23.5, 3.5 16.5, 0.5 16.5)))",
+        # vertices on tile edges and corners
+        "POLYGON ((8 16, 12 17, 13 22.5, 9.5 23, 8 16))",
+        # a ring along tile edges
+        "POLYGON ((4 0, 12 0, 12 4, 4 4, 4 0))",
+    ]
+
+    def setup(scale):
+        """Raster, weights and features on the grid x' = x0 + s x."""
+        x0, s_ = scale
+
+        def move(wkt):
+            return re.sub(r"(\d+(?:\.\d+)?) (\d+(?:\.\d+)?)",
+                          lambda m: f"{x0 + s_ * float(m[1])!r} {x0 + s_ * float(m[2])!r}",
+                          wkt)
+
+        def meta(layer, n, d, tile, nodata=None):
+            return RasterMeta(layer, xmin=x0, ymax=x0 + 24 * s_, dx=d, dy=d, width=n,
+                              height=n, tile_w=tile, tile_h=tile, nodata=nodata)
+
+        vmeta = meta("v", 24, s_, 4, nodata=-9999.0)
+        rv = Raster.from_array(spark, vals, vmeta)
+        ws = {"aligned": Raster.from_array(spark, w_al, meta("w", 24, s_, 4)),
+              "finer": Raster.from_array(spark, w_fine, meta("w", 48, s_ / 2, 10))}
+        return vmeta, rv, ws, [move(w) for w in wkts]
+
+    def kernel_rows(vmeta, rv, feats, emit, weights=None, bc=True, **kw):
+        cand, fbc = zonal.build_candidates(rv, feats, bc)
+        cand = zonal.attach_weights(cand, vmeta, weights)
+        df = zonal.coverage_facts(cand, emit=emit, feats_bc=fbc, values_meta=vmeta,
+                                  disagg=zonal.weight_disagg(vmeta, weights), **kw)
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns), ignore_index=True)
+
+    def runs(scale):
+        vmeta, rv, ws, fw = setup(scale)
+        feats = features_from_wkt(spark, fw)
+        return [
+            kernel_rows(vmeta, rv, feats, "moments"),
+            kernel_rows(vmeta, rv, feats, "moments", bc=False),
+            kernel_rows(vmeta, rv, feats, "moments", ws["aligned"], default_value=2.5),
+            kernel_rows(vmeta, rv, feats, "freq", ws["finer"], bc=False),
+            kernel_rows(vmeta, rv, feats, "freq", default_value=2.5),
+            kernel_rows(vmeta, rv, feats, "moments", area_weights=True, coverage_area=True),
+            kernel_rows(vmeta, rv, feats, "pixels", ws["aligned"], include_cell=True,
+                        include_xy=True, include_area=True, coverage_area=True),
+            kernel_rows(vmeta, rv, feats, "pixels", ws["finer"], include_cell=True,
+                        include_xy=True),
+            coverage_fraction_df(rv, feats).toPandas()
+            .sort_values(["feature_id", "cell"], ignore_index=True),
+        ]
+
+    # every class occurs, where the raster puts the cases
+    vmeta, _, _, fw = setup((0.0, 1.0))
+    kinds = {}
+    for i, wkt in enumerate(fw):
+        g = G.from_wkt(wkt)
+        for tr in range(6):
+            for tc in range(6):
+                t = vmeta.tile_grid(tr, tc)
+                kinds[i, tr, tc] = zonal.classify_pair(t, g, Box(*g.bounds()))
+    assert kinds[0, 4, 1] == EXTERIOR and kinds[0, 3, 3] == BOUNDARY
+    assert kinds[0, 4, 3] == kinds[0, 4, 4] == INTERIOR
+    assert kinds[1, 1, 4] == BOUNDARY and kinds[1, 1, 1] == EXTERIOR
+    assert kinds[3, 5, 1] == kinds[3, 5, 2] == BOUNDARY
+    assert sum(k == INTERIOR for k in kinds.values()) >= 3
+
+    def interior_cov(cov):
+        """Coverage of the first feature's cells in interior tile (4, 3)."""
+        cells = {r * 24 + c + 1 for r in range(16, 20) for c in range(12, 16)}
+        return cov[(cov["feature_id"] == 1) & cov["cell"].isin(cells)]["cov"]
+
+    got = runs((0.0, 1.0))
+    with monkeypatch.context() as mp:
+        mp.setattr(zonal, "classify_pair", lambda tile, geom, bbox: BOUNDARY)
+        want = runs((0.0, 1.0))
+    for a, b in zip(got, want):
+        assert list(a.columns) == list(b.columns)
+        assert np.array_equal(a.to_numpy(dtype=np.float64), b.to_numpy(dtype=np.float64),
+                              equal_nan=True)
+    assert (interior_cov(got[-1]) == 1.0).sum() == 16
+
+    # non-dyadic grid: the integral's interior cells read 1 +- ~1e-14
+    vmeta, rv, ws, fw = setup((0.1, 0.3))
+    feats = features_from_wkt(spark, fw)
+    stats = ["count", "sum", "mean", "min", "max", "weighted_sum", "weighted_mean"]
+
+    def nondyadic():
+        return [exact_extract(rv, feats, stats + extra, weights=ws["aligned"])
+                .toPandas()[stats + extra].to_numpy(dtype=np.float64)
+                for extra in ([], ["variety"])], coverage_fraction_df(rv, feats).toPandas()
+
+    got, cov = nondyadic()
+    with monkeypatch.context() as mp:
+        mp.setattr(zonal, "classify_pair", lambda tile, geom, bbox: BOUNDARY)
+        want, _ = nondyadic()
+    for a, b in zip(got, want):
+        np.testing.assert_allclose(a, b, rtol=1e-12, equal_nan=True)
+    assert (interior_cov(cov) == 1.0).sum() == 16
+
+    points = features_from_wkt(spark, ["MULTIPOINT ((1 1), (23 23))"])
+    _, rv, _, _ = setup((0.0, 1.0))
+    with pytest.raises(Exception, match="not polygonal"):
+        exact_extract(rv, points, ["mean"]).collect()
 
 
 def test_nan_weights_poison_weighted_stats(spark, r19, sq, tmp_path):

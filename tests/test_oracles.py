@@ -1,9 +1,8 @@
-"""Oracle gate for the leaves behind the zonal entry points and the
-hamming and cosine joins: the zonal, stack, line, resample, coverage,
-candidate, rasterize, pixel and UDF queries, the SimHash and pHash dedup
-queries and the brute-force, LSH and IVF cosine top-k queries of
-``__spark_entry__.queries()`` must match their DuckDB oracles
-(``oracle_sql()``) at sf0.01, as ``tools/check_oracles.py`` checks them.
+"""Oracle gate for all 41 leaves of ``__spark_entry__.queries()``: the
+zonal, stack, line, resample, coverage, candidate, rasterize, pixel and
+UDF queries, the dedup, similarity, text and image queries must match
+their DuckDB oracles (``oracle_sql()``) at sf0.01, as
+``tools/check_oracles.py`` checks them.
 
 The sf0.01 tables are read from ``$SPARK_GRAFT_ORACLE_SF_DIR`` when that is
 set, and the test fails if the directory is missing; otherwise from
@@ -46,6 +45,21 @@ LEAVES = [
     "lsh_cosine",
     "cosine_topk",
     "ivf_cosine",
+    "knn_ring",
+    "embedding_dedup",
+    "dedup_exact",
+    "text_quality",
+    "gopher_quality",
+    "doc_repetition",
+    "minhash_dedup",
+    "minhash_sigs",
+    "simhash",
+    "lang_id",
+    "ngram_jaccard",
+    "fingerprint64",
+    "image_resize_px",
+    "image_augment_px",
+    "image_features_png",
 ]
 
 
