@@ -140,7 +140,8 @@ def decode_tile(data: bytes, w: int, h: int) -> np.ndarray:
     raw = decode_gray(data)
     if raw.shape != (h, w * 8):
         raise ValueError(f"tile shape mismatch: png {raw.shape} vs meta {(h, w)}")
-    return np.ascontiguousarray(raw).view("<f8").reshape(h, w).astype(np.float64)
+    # decode_gray returns a fresh array: view it, do not copy it again
+    return np.ascontiguousarray(raw).view("<f8").reshape(h, w).astype(np.float64, copy=False)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

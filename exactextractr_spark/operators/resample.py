@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.stats import StatsPlan, quantile_name
-from ..sources.tiles import Raster, RasterMeta, tile_pixels
+from ..sources.tiles import Raster, RasterMeta, TilePayloads, in_payload_order, tile_pixels
 
 _FACTS = T.StructType(
     [
@@ -83,13 +83,15 @@ def resample_facts(
     dw, dh = dst_meta.width, dst_meta.height
 
     def _facts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        payloads = TilePayloads()
         for pdf in batches:
             outs = []
             for row in pdf.itertuples(index=False):
                 nr, nc = int(row.nrows), int(row.ncols)
-                # raw rows decode in-kernel: PNG bytes cross the Arrow
-                # boundary compressed, same contract as the zonal kernel
-                px = tile_pixels(row)
+                # raw rows decode in-kernel, same contract as the zonal
+                # kernel: the payload crosses the Arrow boundary
+                # compressed, or is read from the tile's row group
+                px = tile_pixels(row, payloads)
                 sdx, sdy = row.dx, row.dy
                 # source cell edges
                 xs0 = row.xmin + np.arange(nc) * sdx
@@ -164,7 +166,7 @@ def resample_facts(
                     }
                 )
 
-    return src.scan.mapInPandas(_facts, _FACTS)
+    return in_payload_order(src.scan).mapInPandas(_facts, _FACTS)
 
 
 def exact_resample(

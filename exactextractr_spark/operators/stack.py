@@ -175,7 +175,7 @@ def _stack_single_pass(
 
         tiles = reduce(
             DataFrame.unionByName,
-            [raw_tiles_with_meta(r._raw, layer=r.meta.layer) for r in values],
+            [r.raw_meta for r in values],
         )
     cand, feats_bc = build_candidates(v0, features, tiles=tiles)
     stat_of: dict[str, str] = {}  # final column name -> its stat

@@ -32,7 +32,9 @@ resample kernel shares where it needs it:
   interior or boundary (``core.coverage.tile_class``), before anything is
   decoded;
 - decode: ``sources.tiles.tile_pixels`` — a tile's pixels, nodata as NaN,
-  only for a tile with a pair left;
+  only for a tile with a pair left, from the payload its row carries or,
+  for a file-backed tile table, from the tile's parquet row group
+  (``sources.tiles.TilePayloads``);
 - cover: ``cover_cells`` (polygons: exact coverage fractions),
   ``interior_cells`` (interior pairs: every cell at 1.0, no integral) or
   ``cover_lines`` (LineStrings: the traversal length per cell), all as
@@ -70,7 +72,7 @@ from ..core.coverage import (
 )
 from ..core.grid import Box, Grid
 from ..plans.stats import StatsPlan, with_all_features
-from ..sources.tiles import Raster, tile_pixels
+from ..sources.tiles import Raster, TilePayloads, in_payload_order, tile_pixels
 from ._exec import bounded_collect
 
 EARTH_RADIUS = 6378137.0  # authalic, ref raster_area.h:63
@@ -948,7 +950,12 @@ def coverage_facts(
        all boundary;
     3. decode — ``tiles.tile_pixels``: the tile's pixel block, once for all
        its pairs, and only when a pair is left (skipped under
-       ``coverage_only``);
+       ``coverage_only``). A located row (a file-backed tile table, see
+       ``tiles.raw_tiles_with_meta``) has no ``bytes``: the task's
+       ``TilePayloads`` reads the payload from the tile's parquet row
+       group, holding one row group at a time, so the rows are sorted by
+       (file, row) within each partition first (``in_payload_order``) and
+       a tile whose pairs are all exterior is never read;
     4. cover — boundary pairs: ``cover_cells``, exact coverage fractions on
        the tile grid, refined by ``disagg`` for a finer weight grid; with
        ``linear``, ``cover_lines``: the traversal length per cell of
@@ -1015,11 +1022,14 @@ def coverage_facts(
     if coverage_only:
         # mapInPandas ships every input column (Catalyst cannot prune
         # through it): drop the unread payload before the Arrow boundary
-        cand = cand.drop("bytes", "px")
+        cand = cand.drop("bytes", "src_path", "src_row", "px")
+    else:
+        cand = in_payload_order(cand)
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         features = TileFeatures(feats_bc, inclusive=linear)
         reducer = new_reducer()
+        payloads = TilePayloads()
         for pdf in batches:
             has_w = "wtiles" in pdf.columns
             for row in pdf.itertuples(index=False):
@@ -1032,7 +1042,7 @@ def coverage_facts(
                         pairs.append((fid, geom, bbox, kind))
                 if not pairs:
                     continue
-                px = None if coverage_only else tile_pixels(row)
+                px = None if coverage_only else tile_pixels(row, payloads)
                 layer = row.layer if by_layer else None
                 for fid, geom, bbox, kind in pairs:
                     if kind == INTERIOR:

@@ -23,12 +23,17 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # tile rows carry ~0.5 MB pixel arrays; ~8 MB batches keep the
+        # rows of inline tile tables (in-memory, streaming, DSv2 or derived
+        # `bytes`; see sources.tiles.payload_located), of decoded tiles and
+        # of weight lists carry ~0.5 MB payloads; ~8 MB batches keep the
         # JVM-side buffer churn inside young-gen (measured: 14s -> 8-11s on
-        # the 1024-tile headline vs 64-row/32 MB batches)
+        # the 1024-tile headline vs 64-row/32 MB batches, when its payloads
+        # still crossed the JVM). A local parquet tile table ships only
+        # metadata and a (file, row) locator per tile
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
         # parquet vectorized reader defaults to 4096-row columnar batches —
         # with ~0.5 MB binary tile payloads that would be ~2 GB per batch
+        # (tile scans no longer read `bytes`, but other binary tables do)
         .config("spark.sql.parquet.columnarReaderBatchSize", "16")
         .config("spark.sql.orc.columnarReaderBatchSize", "16")
         # spark.sql.files.maxPartitionBytes stays at Spark's default: a
@@ -47,7 +52,7 @@ def get_spark(
             str(shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        # G1 treats the ~32 MB Arrow/columnar batches of tile bytes as
+        # G1 treats the ~32 MB Arrow/columnar batches of inline tile bytes as
         # humongous allocations and GC-storms when many tasks stream them
         # concurrently; the throughput collector handles the short-lived
         # big-buffer churn far better (measured: stage GC 162s -> <20s at

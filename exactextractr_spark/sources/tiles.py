@@ -6,21 +6,31 @@ caption:string, phash:int64)``. The caption JSON carries the grid
 semantics (extent, resolution, layer, nodata) — the Spark-side analog of
 the reference's raster metadata (``src/exactextract/src/grid.h:40-46``).
 
-Decode happens in ``mapInPandas`` (Arrow-batched, no per-row Python at the
-plan level); each decoded tile is a row-major float64 pixel block, matching
-the reference's ``NumericVectorRaster`` layout
-(``src/numeric_vector_raster.h:23-40``).
+The JVM parses the captions (``raw_tiles_with_meta``) and ships tile
+metadata to the Python tile kernels, which decode each tile they need
+(``tile_pixels``) into a row-major float64 pixel block, matching the
+reference's ``NumericVectorRaster`` layout
+(``src/numeric_vector_raster.h:23-40``). The PNG payload reaches a kernel
+one of two ways, chosen once per table by ``payload_located``: a local
+parquet file scan ships a (file, row) locator and the kernel reads the
+payload from the row's parquet row group itself (``TilePayloads``), so
+the JVM never scans, joins or copies the bytes of a tile; every other
+table ships the ``bytes`` inline through Arrow.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 from dataclasses import dataclass, replace
+from itertools import accumulate
 from typing import Iterator
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -223,41 +233,105 @@ def tile_table_from_array(
     return spark.createDataFrame(pdf, TILE_SCHEMA)
 
 
-def tile_pixels(row) -> np.ndarray:
+class TilePayloads:
+    """The payload read of the tile kernels: a tile row's PNG bytes.
+
+    An inline row carries them (``bytes``). A located row carries its
+    parquet file URI and row index (``src_path``, ``src_row``) instead,
+    and the bytes are read here: the file's footer maps the row index to
+    (row group, offset), a row group's payload column is read only when one
+    of its tiles is asked for, and only the last one read is held (one
+    footer, one column; no file stays open between reads). A kernel makes
+    one per task and sees its rows in (file, row) order
+    (``in_payload_order``), so each row group is read once per task."""
+
+    def __init__(self):
+        self._path = None  # the current file: its URI, local path, footer
+        self._local = None  # and row-group start rows
+        self._footer = None
+        self._starts = None
+        self._group = None  # the held row group and its payload column
+        self._col = None
+
+    def __call__(self, row) -> bytes:
+        data = row.bytes
+        if data is not None:
+            return bytes(data)
+        return self.read(row.src_path, int(row.src_row))
+
+    def read(self, uri: str, index: int) -> bytes:
+        """The payload of row ``index`` of the parquet file at ``uri``."""
+        if uri != self._path:
+            self._group = self._col = None
+            self._local = unquote(urlsplit(uri).path)
+            self._footer = pq.read_metadata(self._local)
+            self._starts = list(accumulate(
+                (self._footer.row_group(g).num_rows
+                 for g in range(self._footer.num_row_groups)),
+                initial=0,
+            ))
+            self._path = uri
+        g = bisect.bisect_right(self._starts, index) - 1
+        if g != self._group:
+            self._group = self._col = None  # drop the held column first
+            with pq.ParquetFile(self._local, metadata=self._footer) as f:
+                self._col = f.read_row_group(g, columns=["bytes"]).column(0)
+            self._group = g
+        return self._col[index - self._starts[g]].as_py()
+
+
+def tile_pixels(row, payloads: TilePayloads) -> np.ndarray:
     """The decode stage of every tile kernel: one tile row's pixels as a
     float64 ``(nrows, ncols)`` block with nodata cells as NaN.
 
     A decoded row (``px``, already NaN-mapped) is only reshaped. A raw row
-    (``bytes`` plus an optional ``nodata`` sentinel, as from
-    ``raw_tiles_with_meta``) decodes its PNG here, so the payload crosses
-    the Arrow boundary compressed."""
+    (as from ``raw_tiles_with_meta``, with an optional ``nodata``
+    sentinel) decodes its PNG here, from the bytes ``payloads`` gives."""
     nr, nc = int(row.nrows), int(row.ncols)
     px = getattr(row, "px", None)
     if px is not None:
         return np.asarray(px, dtype=np.float64).reshape(nr, nc)
-    px = decode_tile(bytes(row.bytes), nc, nr)
+    px = decode_tile(payloads(row), nc, nr)
     nodata = getattr(row, "nodata", None)
     if nodata is not None and not (isinstance(nodata, float) and math.isnan(nodata)):
         px = np.where(px == nodata, np.nan, px)
     return px
 
 
+def in_payload_order(df: DataFrame) -> DataFrame:
+    """``df`` as a decode stage should see it: rows that all carry a
+    payload locator (``src_path`` is not nullable only then) sorted by
+    (file, row) within each partition, so ``TilePayloads`` reads each row
+    group once per task, even after a shuffle. Other frames are returned
+    as they are: inline payloads need no order, and a sort would copy
+    them."""
+    if "src_path" in df.columns and not df.schema["src_path"].nullable:
+        return df.sortWithinPartitions("src_path", "src_row")
+    return df
+
+
 def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     """Image table -> decoded tile blocks (``DECODED_SCHEMA``): the caption
     is parsed in the JVM by ``raw_tiles_with_meta`` (grid columns, layer
-    filter, nodata), and one Arrow-batched ``mapInPandas`` adds the pixels
-    (``px``, row-major, nodata as NaN) through ``tile_pixels``. Nothing is
-    verified here; ``roundtrip_report`` checks the pixel roundtrip."""
+    filter, nodata, payload or locator), and one Arrow-batched
+    ``mapInPandas`` adds the pixels (``px``, row-major, nodata as NaN)
+    through ``tile_pixels``. Nothing is verified here;
+    ``roundtrip_report`` checks the pixel roundtrip."""
+    return _decode(raw_tiles_with_meta(tiles, layer))
+
+
+def _decode(raw: DataFrame) -> DataFrame:
     cols = [f.name for f in DECODED_SCHEMA.fields if f.name != "px"]
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        payloads = TilePayloads()
         for pdf in batches:
             if len(pdf) == 0:  # empty object columns break Arrow
                 continue
-            px = [tile_pixels(row).ravel() for row in pdf.itertuples(index=False)]
+            px = [tile_pixels(row, payloads).ravel() for row in pdf.itertuples(index=False)]
             yield pdf[cols].assign(px=px)
 
-    return raw_tiles_with_meta(tiles, layer).mapInPandas(_decode, DECODED_SCHEMA)
+    return in_payload_order(raw).mapInPandas(_kernel, DECODED_SCHEMA)
 
 
 def roundtrip_report(tiles: DataFrame) -> DataFrame:
@@ -296,16 +370,79 @@ def roundtrip_report(tiles: DataFrame) -> DataFrame:
     return tiles.mapInPandas(_verify, schema)
 
 
+_PARQUET_SCAN = (
+    "org.apache.spark.sql.execution.datasources.LogicalRelation",
+    "org.apache.spark.sql.execution.datasources.HadoopFsRelation",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat",
+)
+
+
+def payload_located(tiles: DataFrame) -> bool:
+    """The payload decision of a tile table: True when the tile kernels
+    can read each tile's ``bytes`` from its parquet row themselves, so the
+    JVM ships a (file, row) locator instead. That holds when the analyzed
+    plan's only leaf is a parquet ``HadoopFsRelation``, the frame's
+    ``bytes`` is that relation's attribute (no projection rewrote it),
+    every input file is a local ``file:`` URI the workers can open, and
+    the frame is not streaming. Anything else (in-memory, streaming or
+    DSv2 tables, unions, a derived ``bytes``) ships the bytes inline."""
+    jdf = getattr(tiles, "_jdf", None)
+    if jdf is None or tiles.isStreaming or "bytes" not in tiles.columns:
+        return False
+    plan = jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    if leaves.size() != 1:
+        return False
+    leaf = leaves.apply(0)
+    if leaf.getClass().getName() != _PARQUET_SCAN[0]:
+        return False
+    rel = leaf.relation()
+    if (rel.getClass().getName(), rel.fileFormat().getClass().getName()) != _PARQUET_SCAN[1:]:
+        return False
+
+    def _bytes_id(attrs):
+        ids = [attrs.apply(i).exprId().id() for i in range(attrs.size())
+               if attrs.apply(i).name() == "bytes"]
+        return ids[0] if len(ids) == 1 else None
+
+    ours = _bytes_id(plan.output())
+    if ours is None or ours != _bytes_id(leaf.output()):
+        return False
+    files = tiles.inputFiles()
+    return bool(files) and all(f.startswith("file:") for f in files)
+
+
 def raw_tiles_with_meta(tiles: DataFrame, layer: str | None = None) -> DataFrame:
-    """Attach grid metadata columns by parsing the caption JSON **in the
-    JVM** (from_json) — no Python stage. Pixel payload stays encoded
-    (``bytes``); the coverage kernel decodes lazily with a per-worker cache,
-    so a tile joined against many features is shipped compressed and decoded
-    at most once per worker."""
+    """The frame the tile kernels scan: grid metadata columns parsed from
+    the caption JSON **in the JVM** (from_json), plus the tile's payload
+    in one of two forms, with one schema for both (so located and inline
+    frames union by name):
+
+    - inline: ``bytes`` is the PNG, ``src_path``/``src_row`` are null;
+    - located (when ``payload_located``): ``bytes`` is null and ``src_path``/``src_row`` are the row's parquet file URI
+      and row index (``_metadata.file_path``/``row_index``); the JVM never
+      reads the payload.
+
+    Either way the kernel's ``tile_pixels`` decodes a tile only when it has
+    a pair left, from the bytes its ``TilePayloads`` gives."""
+    if payload_located(tiles):
+        payload = [
+            F.lit(None).cast(T.BinaryType()).alias("bytes"),
+            F.col("_metadata.file_path").alias("src_path"),
+            F.col("_metadata.row_index").alias("src_row"),
+        ]
+    else:
+        payload = [
+            F.col("bytes"),
+            F.lit(None).cast(T.StringType()).alias("src_path"),
+            F.lit(None).cast(T.LongType()).alias("src_row"),
+        ]
     m = F.from_json("caption", CAPTION_SCHEMA).alias("_m")
-    df = tiles.select("bytes", "w", "h", m)
+    df = tiles.select(*payload, "w", "h", m)
     df = df.select(
         "bytes",
+        "src_path",
+        "src_row",
         "w",
         "h",
         F.col("_m.layer").alias("layer"),
@@ -328,12 +465,14 @@ def raw_tiles_with_meta(tiles: DataFrame, layer: str | None = None) -> DataFrame
 
 class Raster:
     """A distributed raster: tile DataFrame (raw and/or decoded) +
-    driver-side meta. The zonal hot path uses the raw (encoded) form and
-    decodes inside the kernel; operators needing pixel columns use
-    ``.tiles`` (decoded via mapInPandas)."""
+    driver-side meta. The tile kernels scan the raw form (``scan``) and
+    decode inside the kernel; operators needing pixel columns use
+    ``.tiles`` (decoded via mapInPandas). The scan frame, and with it the
+    payload decision, is made once and kept."""
 
     def __init__(self, df: DataFrame, meta: RasterMeta, decoded: bool = False):
         self.meta = meta
+        self._raw_meta = None
         if decoded:
             self._raw = None
             self._decoded = df
@@ -355,16 +494,19 @@ class Raster:
     def tiles(self) -> DataFrame:
         """Decoded tile blocks (layer, tile key, grid, px)."""
         if self._decoded is None:
-            self._decoded = decode_tiles(self._raw, layer=self.meta.layer)
+            self._decoded = _decode(self.raw_meta)
         return self._decoded
 
     @property
     def raw_meta(self) -> DataFrame | None:
-        """Raw tiles with JVM-parsed grid metadata, or None if this raster
-        was constructed from already-decoded blocks."""
+        """Raw tiles with JVM-parsed grid metadata and the payload or its
+        locator (``raw_tiles_with_meta``), or None if this raster was
+        constructed from already-decoded blocks."""
         if self._raw is None:
             return None
-        return raw_tiles_with_meta(self._raw, layer=self.meta.layer)
+        if self._raw_meta is None:
+            self._raw_meta = raw_tiles_with_meta(self._raw, layer=self.meta.layer)
+        return self._raw_meta
 
     @property
     def scan(self) -> DataFrame:
