@@ -385,7 +385,8 @@ def payload_located(tiles: DataFrame) -> bool:
     ``bytes`` is that relation's attribute (no projection rewrote it),
     every input file is a local ``file:`` URI the workers can open, and
     the frame is not streaming. Anything else (in-memory, streaming or
-    DSv2 tables, unions, a derived ``bytes``) ships the bytes inline."""
+    DSv2 tables, unions, a derived ``bytes``, a cached table, whose
+    analyzed plan reads the cache) ships the bytes inline."""
     jdf = getattr(tiles, "_jdf", None)
     if jdf is None or tiles.isStreaming or "bytes" not in tiles.columns:
         return False
