@@ -114,10 +114,6 @@ def signed_area(ring: np.ndarray) -> float:
     return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
-def is_ccw(ring: np.ndarray) -> bool:
-    return signed_area(ring) > 0
-
-
 # ---------------------------------------------------------------------------
 # WKB
 # ---------------------------------------------------------------------------
@@ -341,10 +337,3 @@ def to_geojson(geom: Geometry) -> dict:
             "geometries": [to_geojson(p) for p in geom.parts],
         }
     raise ValueError(f"cannot serialize {k} to GeoJSON")
-
-
-def box_wkt(xmin: float, ymin: float, xmax: float, ymax: float) -> str:
-    return (
-        f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
-        f"{xmin} {ymax}, {xmin} {ymin}))"
-    )

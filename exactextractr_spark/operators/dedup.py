@@ -3,9 +3,12 @@
 Training-data-pipeline operators over the ``documents`` table. Exact dedup
 is a pure hash-groupBy (one shuffle, JVM-side). Near-dup pipelines follow
 the standard shingle → signature → band-bucket → bucket-join → verify shape,
-with deterministic hash families so runs are reproducible. The hamming
-join behind SimHash and pHash dedup buckets on ``hash & mask`` for the bit
-masks of ``_band_masks``, which make it pigeonhole-exact (recall 1.0).
+with deterministic hash families so runs are reproducible. ``_band_pairs``
+is the one banded self-join: the hamming, MinHash and embedding-LSH
+operators build only its keys, its carried column and their exact filter,
+and wide payloads rejoin after its pair dedup (``_with_payload``). The
+hamming keys are ``hash & mask`` for the bit masks of ``_band_masks``,
+which make that join pigeonhole-exact (recall 1.0).
 
 Kernel design (100-TB shape): all per-document work is vectorized numpy —
 token hashing is FNV-1a over the token bytes, folded column-wise across
@@ -252,6 +255,38 @@ def minhash_signatures(
     return spread(docs.select(id_col, text_col)).mapInPandas(_sig, schema)
 
 
+def _band_pairs(keyed: DataFrame, *, carry=(), prune=None) -> DataFrame:
+    """The one banded self-join behind every banding operator.
+
+    ``keyed`` holds ``(id, *carry, *keys)`` rows, one per band key of an
+    item; two items pair when they agree on every key column. Returns the
+    distinct ``(id_a, id_b)`` with ``id_a < id_b``, plus each carried
+    column ``c`` as ``c_a``/``c_b``. ``prune``, a Column over the carried
+    columns, runs in the join's own stage, before the pair dedup shuffle.
+    Wide payloads are not carried: :func:`_with_payload` re-attaches them
+    after the dedup."""
+    id_col, keys = keyed.columns[0], keyed.columns[1 + len(carry):]
+
+    def side(s: str) -> DataFrame:
+        carried = [F.col(c).alias(f"{c}_{s}") for c in carry]
+        return keyed.select(F.col(id_col).alias(f"id_{s}"), *carried, *keys)
+
+    cond = F.col("id_a") < F.col("id_b")
+    cond = cond if prune is None else cond & prune
+    pairs = side("a").join(side("b"), on=keys).filter(cond).dropDuplicates(["id_a", "id_b"])
+    return pairs.select("id_a", "id_b", *(f"{c}_{s}" for c in carry for s in "ab"))
+
+
+def _with_payload(pairs: DataFrame, payload: DataFrame, col: str) -> DataFrame:
+    """``pairs`` with ``payload``'s ``col`` (keyed by its first column)
+    attached to each side as ``col_a``/``col_b``."""
+    id_col = payload.columns[0]
+    for s in "ab":
+        side = payload.select(F.col(id_col).alias(f"id_{s}"), F.col(col).alias(f"{col}_{s}"))
+        pairs = pairs.join(side, f"id_{s}")
+    return pairs
+
+
 def minhash_lsh_pairs(
     sigs: DataFrame,
     *,
@@ -264,9 +299,10 @@ def minhash_lsh_pairs(
     candidate pairs; estimated Jaccard (signature agreement) filters.
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
 
-    The band-bucket self-join shuffles only (id, band, bucket) — signatures
-    are projected off both sides and re-attached after the candidate pairs
-    are deduplicated, so shuffle width is independent of num_hashes.
+    The candidates come from :func:`_band_pairs` over slim (id, band,
+    bucket) rows, joined on the two columns (band, bucket); the signatures
+    are re-attached by :func:`_with_payload` once per side after the pair
+    dedup, so the band join's shuffle width is independent of num_hashes.
     ``sigs`` is referenced three times (two band sides + re-attach); callers
     that compute signatures lazily should persist it first (``minhash_dedup``
     does).
@@ -283,34 +319,17 @@ def minhash_lsh_pairs(
             )
         ).alias("bb"),
     ).select(id_col, F.col("bb.band"), F.col("bb.bucket"))
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cand = (
-        left.join(right, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    pairs = (
-        cand.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with(
-                    "sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.lit(float(num_hashes)),
-        )
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    ) / F.lit(float(num_hashes))
+    return (
+        _with_payload(_band_pairs(banded), sigs.select(id_col, "sig"), "sig")
+        .withColumn("est_jaccard", agree)
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return pairs
 
 
 def minhash_dedup(
@@ -436,63 +455,54 @@ def ngram_jaccard_pairs(
             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .agg(F.count("*").alias("inter"))
         )
-        return (
-            inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-            .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-            .withColumn(
-                "jaccard",
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+    else:
+        # gram identity = identity of the token slice (tokens are \s+-split so
+        # they contain no spaces, making ' '-join injective): hash the slice
+        # array directly — no gram strings are ever built. The empty-gram
+        # filter mirrors length(concat_ws(' ', g)) > 0.
+        gram_arr = F.expr(
+            f"transform(filter(transform(sequence(0, greatest(size(_toks) - {n}, 0)), "
+            f"i -> slice(_toks, i+1, {n})), "
+            "g -> size(g) > 1 or g[0] <> ''), g -> xxhash64(g))"
+        )
+        grams = (
+            docs.withColumn("_toks", toks)
+            .select(
+                F.col(id_col).alias("id"),
+                F.explode(F.array_distinct(gram_arr)).alias("g"),
             )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
         )
-    # gram identity = identity of the token slice (tokens are \s+-split so
-    # they contain no spaces, making ' '-join injective): hash the slice
-    # array directly — no gram strings are ever built. The empty-gram
-    # filter mirrors length(concat_ws(' ', g)) > 0.
-    gram_arr = F.expr(
-        f"transform(filter(transform(sequence(0, greatest(size(_toks) - {n}, 0)), "
-        f"i -> slice(_toks, i+1, {n})), "
-        "g -> size(g) > 1 or g[0] <> ''), g -> xxhash64(g))"
-    )
-    grams = (
-        docs.withColumn("_toks", toks)
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(gram_arr)).alias("g"),
+        # built once, consumed by the df count and the rare-gram join; the
+        # checkpoint's blocks are released on GC (no CacheManager entry)
+        grams = grams.localCheckpoint(eager=True)
+        rare = (
+            grams.groupBy("g")
+            .agg(F.count("*").alias("_df"))
+            .filter(F.col("_df") <= max_df)
+            .select("g")
         )
-    )
-    # built once, consumed by the df count and the rare-gram join; the
-    # checkpoint's blocks are released on GC (no CacheManager entry)
-    grams = grams.localCheckpoint(eager=True)
-    rare = (
-        grams.groupBy("g")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("g")
-    )
-    kept = grams.join(rare, on="g", how="inner")
-    bygram = (
-        kept.groupBy("g")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .select("ids")
-    ).localCheckpoint(eager=True)
-    sizes = (
-        bygram.select(F.explode("ids").alias("id"))
-        .groupBy("id")
-        .agg(F.count("*").alias("sz"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "y -> struct(x as id_a, y as id_b))))"
-    )
-    inter = (
-        bygram.filter(F.size("ids") > 1)
-        .select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+        kept = grams.join(rare, on="g", how="inner")
+        bygram = (
+            kept.groupBy("g")
+            .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+            .select("ids")
+        ).localCheckpoint(eager=True)
+        sizes = (
+            bygram.select(F.explode("ids").alias("id"))
+            .groupBy("id")
+            .agg(F.count("*").alias("sz"))
+        )
+        pair_expr = F.expr(
+            "flatten(transform(ids, (x, i) -> "
+            "transform(slice(ids, i + 2, size(ids) - i - 1), "
+            "y -> struct(x as id_a, y as id_b))))"
+        )
+        inter = (
+            bygram.filter(F.size("ids") > 1)
+            .select(F.explode(pair_expr).alias("p"))
+            .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+            .agg(F.count("*").alias("inter"))
+        )
     return (
         inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
         .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
@@ -564,21 +574,15 @@ def hamming_pairs(
         )
         for i, m in enumerate(_band_masks(max_hamming))
     ]
-    ex = df.select(
-        F.col(id_col).alias("_id"), h.alias("_h"), F.explode(F.array(*keys)).alias("k")
+    keyed = df.select(
+        F.col(id_col).alias("id"), h.alias("h"), F.explode(F.array(*keys)).alias("k")
     )
-    a = ex.select(F.col("_id").alias("id_a"), F.col("_h").alias("_ha"), "k")
-    b2 = ex.select(F.col("_id").alias("id_b"), F.col("_h").alias("_hb"), "k")
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    # the exact hamming filter runs BEFORE dropDuplicates: it is a cheap
-    # codegen predicate in the join's own stage, so the hot-bucket candidate
-    # fan-out (measured 49M join rows -> 27k true pairs at sf1.0) dies in
-    # place instead of being shuffled into the distinct
-    return (
-        a.join(b2, on="k")
-        .filter((F.col("id_a") < F.col("id_b")) & (ham <= max_hamming))
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
+    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    # the exact hamming filter is the join's prune: a cheap codegen predicate
+    # in the join's own stage, so the hot-bucket candidate fan-out (measured
+    # 49M join rows -> 27k true pairs at sf1.0) dies before the dedup shuffle
+    return _band_pairs(keyed, carry=("h",), prune=ham <= max_hamming).select(
+        "id_a", "id_b", ham.cast("long").alias("hamming")
     )
 
 
@@ -687,10 +691,11 @@ def embedding_dedup(
     refuses above 200k vectors (all-pairs is the correctness baseline,
     not the scale path — a 2M-pair JVM fold costs ~60s where the matmul
     costs milliseconds). ``mode='lsh'`` is the 100-TB path: candidate
-    pairs come from the shared random-hyperplane band buckets
-    (``similarity.band_key_udf``), then the exact JVM cosine filter + keep
-    rule run on the candidates only — the join is an equi-join on the band
-    key, never all-pairs; recall < 1 by construction (raise ``bands``).
+    pairs come from :func:`_band_pairs` over slim (id, band key) rows of the
+    shared random-hyperplane buckets (``similarity.band_key_udf``), never
+    all-pairs; the vectors rejoin once per side after the pair dedup, then
+    the exact Arrow cosine filter and the keep rule run on the candidates
+    only. Recall < 1 by construction (raise ``bands``).
     """
     from .similarity import _vectors, _with_cos, band_key_udf
 
@@ -740,20 +745,11 @@ def embedding_dedup(
     elif mode == "lsh":
         if dim is None:
             raise ValueError("mode='lsh' requires dim=")
-        a = items.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-        b = items.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-        band_keys = band_key_udf(dim, bits, bands, seed)
-        ak = a.withColumn("bkey", F.explode(band_keys(F.col("_va"))))
-        bk = b.withColumn("bkey", F.explode(band_keys(F.col("_vb"))))
-        cand = (
-            ak.join(bk, on="bkey")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        pairs = _with_cos(
-            cand.select("id_a", "id_b", "_va", "_vb"), "_va", "_vb",
-            ["id_a", "id_b"],
-        ).filter(F.col("cos_sim") >= F.lit(threshold)).select("id_a", "id_b")
+        bkey = F.explode(band_key_udf(dim, bits, bands, seed)(F.col(vec_col)))
+        keyed = items.select(F.col(id_col).alias("id"), bkey.alias("bkey"))
+        cand = _with_payload(_band_pairs(keyed), items.select(id_col, vec_col), vec_col)
+        scored = _with_cos(cand, f"{vec_col}_a", f"{vec_col}_b", ["id_a", "id_b"])
+        pairs = scored.filter(F.col("cos_sim") >= F.lit(threshold)).select("id_a", "id_b")
     else:
         raise ValueError(f"unknown mode {mode!r}")
     return _greedy_keep(items, pairs, id_col)

@@ -1,15 +1,17 @@
 """Embedding similarity search: brute-force cosine top-k + LSH and IVF ANN.
 
 Training-data-pipeline operators over an ``array<float>`` embedding column.
-Brute force is the exactness baseline. Every path scores its pairs with one
-``mapInArrow`` kernel (``_with_cos``) that reads the flat Arrow list
-buffers and folds the dot product and norms in index order. The scale
-paths bound the join fan-out either by deterministic random-hyperplane
-sign buckets (LSH) or by a trained coarse quantizer (IVF: k-means
-centroids, items partitioned by nearest centroid, queries probe their
-``nprobe`` nearest lists). Band keys, IVF list assignment and centroid
-training read the flat Arrow buffers too (``_exec.flat_matrix``, in
-``arrow_udf`` kernels), and refuse null or ragged vectors.
+Brute force is the exactness baseline. ``score_against_queries`` is the one
+query probe (its keyed form is ``_scored_pairs``): brute force meets the
+broadcast query set, and the scale paths meet only the queries that share a
+key, either a deterministic random-hyperplane sign bucket (LSH) or an
+inverted list of a trained coarse quantizer (IVF: k-means centroids, items
+in their nearest centroid's list, queries probe their ``nprobe`` nearest
+lists). Every pair is scored by one ``mapInArrow`` kernel (``_with_cos``)
+that reads the flat Arrow list buffers and folds the dot product and norms
+in index order. Band keys, IVF list assignment and centroid training read
+the flat Arrow buffers too (``_exec.flat_matrix``, in ``arrow_udf``
+kernels), and refuse null or ragged vectors.
 """
 
 from __future__ import annotations
@@ -121,21 +123,34 @@ def score_against_queries(
     vec_col: str = "embedding",
     qid_col: str = "qid",
 ) -> DataFrame:
-    """(qid, item_id, cos_sim) for every item × query pair: broadcast the
-    (small) query set, score with the shared Arrow left-fold cosine
-    (bit-identical to the ``_dot``/``_norm`` JVM fold it replaces). ONE
-    definition shared by batch ``cosine_topk`` and
-    ``streaming.stream_cosine_topk`` so the two surfaces can never
+    """(qid, item_id, cos_sim) for every item × query pair: the query probe
+    of :func:`_scored_pairs` with no key, shared by batch ``cosine_topk``
+    and ``streaming.stream_cosine_topk`` so the two surfaces can never
     silently diverge."""
-    q = queries.select(
-        F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
-    )
+    return _scored_pairs(items, queries, id_col, vec_col, qid_col)
+
+
+def _scored_pairs(items, queries, id_col, vec_col, qid_col, key=None) -> DataFrame:
+    """The one query probe: (qid, item_id, cos_sim) scored with the shared
+    Arrow left-fold cosine (bit-identical to the ``_dot``/``_norm`` JVM
+    fold it replaces). With no ``key`` every item meets the broadcast
+    query set; with ``key = (item_key, query_key)``, two functions from a
+    vector Column to a key Column, only the item × query pairs that share
+    a key are scored. Item vectors stay on their rows (no slim join and
+    later re-attach): the query set is small, and the planner broadcasts
+    it whenever it can size it."""
+    q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec"))
     # the scoring stage must not inherit a single-file scan's 1-partition
     # layout (no-op on streams and on already-parallel inputs)
     items = spread(items)
-    joined = items.join(F.broadcast(q)).select(
-        "qid", F.col(id_col).alias("item_id"), vec_col, "_qvec"
-    )
+    if key is None:
+        joined = items.join(F.broadcast(q))
+    else:
+        item_key, query_key = key
+        joined = items.withColumn("_key", item_key(F.col(vec_col))).join(
+            q.withColumn("_key", query_key(F.col("_qvec"))), on="_key"
+        )
+    joined = joined.select("qid", F.col(id_col).alias("item_id"), vec_col, "_qvec")
     return _with_cos(joined, vec_col, "_qvec", ["qid", "item_id"])
 
 
@@ -239,23 +254,13 @@ def lsh_cosine_topk(
     family: str = "gaussian",
 ) -> DataFrame:
     """ANN variant: sign-bucket both sides on ``bands`` independent
-    hyperplane bands, equi-join on (band, bucket) — the 100-TB path where a
-    broadcast of queries or a full cross product is impossible — then exact
-    re-rank within candidates. Recall < 1 by construction; increase bands
-    for higher recall."""
+    hyperplane bands and probe on the band key — never a full cross
+    product — then re-rank each distinct (query, item) candidate exactly.
+    Recall < 1 by construction; increase bands for higher recall."""
     band_keys = band_key_udf(dim, bits, bands, seed, family=family)
-
-    it = spread(items).withColumn("bkey", F.explode(band_keys(F.col(vec_col))))
-    qq = queries.select(
-        F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
-    ).withColumn("bkey", F.explode(band_keys(F.col("_qvec"))))
-    cand = _with_cos(
-        it.join(qq, on="bkey").select(
-            "qid", F.col(id_col).alias("item_id"), vec_col, "_qvec"
-        ),
-        vec_col, "_qvec", ["qid", "item_id"],
-    ).dropDuplicates(["qid", "item_id"])
-    return _top_k(cand, k)
+    keys = lambda v: F.explode(band_keys(v))  # noqa: E731
+    cand = _scored_pairs(items, queries, id_col, vec_col, qid_col, (keys, keys))
+    return _top_k(cand.dropDuplicates(["qid", "item_id"]), k)
 
 
 def train_ivf_centroids(
@@ -355,14 +360,8 @@ def ivf_cosine_topk(
         top = order[:, :nprobe].astype(np.int32).ravel()
         return pa.FixedSizeListArray.from_arrays(top, nprobe)
 
-    it = spread(items).withColumn("_list", nearest_list(F.col(vec_col)))
-    qq = queries.select(
-        F.col(qid_col).alias("qid"), F.col(vec_col).alias("_qvec")
-    ).withColumn("_list", F.explode(probe_lists(F.col("_qvec"))))
-    cand = _with_cos(
-        it.join(qq, on="_list").select(
-            "qid", F.col(id_col).alias("item_id"), vec_col, "_qvec"
-        ),
-        vec_col, "_qvec", ["qid", "item_id"],
-    )
+    # no pair dedup: each item sits in one list and a query's probes are
+    # distinct lists, so every (query, item) pair meets at most once
+    probes = lambda v: F.explode(probe_lists(v))  # noqa: E731
+    cand = _scored_pairs(items, queries, id_col, vec_col, qid_col, (nearest_list, probes))
     return _top_k(cand, k)

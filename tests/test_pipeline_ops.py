@@ -1331,3 +1331,146 @@ def test_with_cos_null_zero_norm_semantics(spark):
     got2 = {r["id"]: r["cos_sim"]
             for r in _with_cos(df2, "a", "b", ["id"]).collect()}
     assert got2 == {1: 1.0, 2: None, 5: 24.0 / 25.0, 6: None}
+
+
+def _walk_plan(node):
+    """Every node of a physical plan under ``node`` (itself included),
+    AQE wrappers and query stages unwrapped."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n.nodeName() == "AdaptiveSparkPlan":
+            stack.append(n.executedPlan())
+            continue
+        if n.nodeName().endswith("QueryStage"):
+            stack.append(n.plan())
+            continue
+        yield n
+        kids = n.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _pair_dedups(df):
+    """The aggregates of ``df``'s plan that group by exactly (id_a, id_b)."""
+    def grouping(n):
+        g = n.groupingExpressions()
+        return {g.apply(i).name() for i in range(g.size())}
+    return [n for n in _walk_plan(df._jdf.queryExecution().executedPlan())
+            if n.nodeName().endswith("Aggregate") and grouping(n) == {"id_a", "id_b"}]
+
+
+def _hot_minhash_sigs(spark, n_docs=160, bands=8, rows=4, seed=21):
+    """Signatures built band by band from 4 templates: each band keeps its
+    template's values with probability 1/2, so every template band bucket
+    holds about n_docs/8 ids (hot) and est_jaccard spreads around 0.5."""
+    rng = np.random.default_rng(seed)
+    tmpl = rng.integers(-(2**63), 2**63, size=(4, bands * rows), dtype=np.int64)
+    sigs = []
+    for i in range(n_docs):
+        s = tmpl[i % 4].copy()
+        for b in np.nonzero(rng.random(bands) < 0.5)[0]:
+            s[b * rows:(b + 1) * rows] = rng.integers(-(2**63), 2**63, size=rows, dtype=np.int64)
+        sigs.append((i, [int(v) for v in s]))
+    return spark.createDataFrame(sigs, "doc_id long, sig array<long>")
+
+
+def test_minhash_lsh_pairs_match_crossjoin_rule(spark):
+    """minhash_lsh_pairs is exactly every pair with an equal band
+    ``hash(slice)`` in some band and ``est_jaccard >= t``, on hot buckets;
+    and its band join keys on the two columns (band, bucket)."""
+    from exactextractr_spark.operators.dedup import minhash_lsh_pairs
+
+    bands, rows, t = 8, 4, 0.5
+    sigs = _hot_minhash_sigs(spark, bands=bands, rows=rows)
+    out = minhash_lsh_pairs(sigs, bands=bands, threshold=t)
+    got = {(r["id_a"], r["id_b"], r["est_jaccard"]) for r in out.collect()}
+    same_band = F.expr(
+        f"exists(sequence(0, {bands - 1}), x -> hash(slice(sa, x*{rows}+1, {rows})) "
+        f"= hash(slice(sb, x*{rows}+1, {rows})))"
+    )
+    cand = (
+        sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sa"))
+        .crossJoin(sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sb")))
+        .filter((F.col("id_a") < F.col("id_b")) & same_band)
+        .collect()
+    )
+    want = set()
+    for r in cand:
+        est = sum(x == y for x, y in zip(r["sa"], r["sb"])) / float(bands * rows)
+        if est >= t:
+            want.add((r["id_a"], r["id_b"], est))
+    assert len(cand) > len(want) > 400  # hot buckets, and the filter bites
+    assert got == want
+    joins = [n for n in _walk_plan(out._jdf.queryExecution().executedPlan())
+             if n.nodeName() in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")]
+    assert sorted(n.leftKeys().size() for n in joins) == [1, 1, 2]  # 2 sig rejoins
+
+
+def test_embedding_lsh_dedup_matches_band_rule(spark):
+    """embedding_dedup(mode='lsh') is greedy-keep over exactly the pairs
+    whose band keys overlap and whose cosine is >= t, on clustered vectors
+    whose 4-bit bands make hot buckets."""
+    from exactextractr_spark.operators.dedup import embedding_dedup
+    from exactextractr_spark.operators.similarity import _scalar_cos_fold, band_key_udf
+
+    dim, bits, bands, t = 8, 16, 4, 0.9
+    rng = np.random.default_rng(5)
+    cent = rng.normal(size=(10, dim))
+    V = np.repeat(cent, 30, axis=0) + 0.35 * rng.normal(size=(300, dim))
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(V)], "vec_id long, embedding array<double>"
+    )
+    got = {r["vec_id"]: r["near_dups"]
+           for r in embedding_dedup(df, t, mode="lsh", dim=dim, bits=bits,
+                                    bands=bands).collect()}
+    keys = {r["vec_id"]: set(r["k"]) for r in df.select(
+        "vec_id", band_key_udf(dim, bits, bands)(F.col("embedding")).alias("k")).collect()}
+    pairs = [(i, j) for i in range(300) for j in range(i + 1, 300)
+             if keys[i] & keys[j] and _scalar_cos_fold(V[i], V[j]) >= t]
+    dropped = {b for _, b in pairs}
+    want = {i: sum(a == i for a, _ in pairs) for i in range(300) if i not in dropped}
+    assert max(np.unique([k for ks in keys.values() for k in ks],
+                         return_counts=True)[1]) >= 30  # hot buckets
+    assert 0 < len(dropped) < 290
+    assert got == want
+
+
+def test_embedding_lsh_ships_no_vector_below_pair_dedup(spark):
+    """Embedding LSH dedups its candidate pairs on slim (id, key) rows: no
+    exchange below the (id_a, id_b) aggregate carries an array column."""
+    from exactextractr_spark.operators.dedup import embedding_dedup
+
+    rng = np.random.default_rng(9)
+    df = spark.createDataFrame(
+        [(i, rng.normal(size=8).tolist()) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    out = embedding_dedup(df, 0.9, mode="lsh", dim=8, bits=16, bands=4)
+    exchanges = [n for agg in _pair_dedups(out) for n in _walk_plan(agg)
+                 if n.nodeName().endswith("Exchange")]
+    assert exchanges
+    for n in exchanges:
+        attrs = n.output()
+        arrays = [attrs.apply(i).name() for i in range(attrs.size())
+                  if attrs.apply(i).dataType().typeName() == "array"]
+        assert not arrays, (n.nodeName(), arrays)
+
+
+def test_hamming_prune_sits_below_pair_dedup(spark):
+    """hamming_pairs' exact bit_count filter runs in the join's stage (a
+    Filter or the join's own condition), below its (id_a, id_b) aggregate,
+    so hot-bucket candidates die before the dedup shuffle."""
+    from exactextractr_spark.operators.dedup import hamming_pairs
+
+    df = spark.createDataFrame([(i, i * 7919) for i in range(20)], "doc_id long, simhash long")
+    out = hamming_pairs(df, max_hamming=3)
+    plan = out._jdf.queryExecution().executedPlan()
+
+    def prunes(node):
+        return {n.id() for n in _walk_plan(node)
+                if (n.nodeName() == "Filter" or n.nodeName().endswith("Join"))
+                and "bit_count" in n.condition().toString()}
+
+    dedups = _pair_dedups(out)
+    assert dedups and prunes(plan)
+    assert prunes(plan) <= set().union(*(prunes(a) for a in dedups))
